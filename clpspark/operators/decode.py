@@ -13,9 +13,10 @@ clp/clp/FileDecompressor.hpp:29). Two Spark strategies:
     (Catalyst picks broadcast vs shuffle hash join by size), and reassembled
     in slot order. No driver collect, no memory bound — the 100 TB path.
 
-``mode="auto"`` picks by dictionary row count (a cheap count job against a
-small/materialized table). The logtype dictionary is always attached with a
-broadcast join: it is small by design (archives split before it grows).
+``mode="auto"`` picks by dictionary entry count and string bytes
+(``map_fits``), usually from the same bounded collect that builds the map.
+The logtype dictionary is always attached with a broadcast join: it is
+small by design (archives split before it grows).
 """
 
 from __future__ import annotations
@@ -69,32 +70,47 @@ def attach_logtype(df: DataFrame, logtype_dict: DataFrame) -> DataFrame:
 AUTO_MAP_FUSE_ENTRIES = 200_000
 
 
-def resolve_decode_and_map(var_dict: DataFrame, var_map_bc=None,
-                           value_col: str = "var_str"):
-    """(mode, var_map_bc) in ONE bounded collect for the common case: the
-    probe rows both decide the strategy and build the map-mode broadcast,
-    replacing the separate stats job + full collect (two driver jobs that
-    dominate cold single-archive queries)."""
-    spark = var_dict.sparkSession
+def map_fits(n_entries: int, n_bytes: int | None) -> bool:
+    """The map-vs-join gate: may a dictionary of ``n_entries`` strings
+    totalling ``n_bytes`` characters be collected to the driver? Shared by
+    every auto-mode resolver, whether the stats come from a Spark job or
+    from the pipeline's lineage log."""
+    return (n_entries <= AUTO_MAP_MAX_ENTRIES
+            and (n_bytes or 0) <= AUTO_MAP_MAX_BYTES)
+
+
+def resolve_mode_and_map(var_dict: DataFrame, key_col: str, value_col: str,
+                         str_col: str = "var_str"):
+    """(mode, {key: value} or None) in ONE bounded collect for the common
+    case: the probe rows both decide the strategy (``map_fits`` over the
+    ``str_col`` strings) and form the map-mode dictionary, replacing a
+    separate stats job + full collect. Decode keys the map by id, enrich by
+    string."""
     rows = (
-        var_dict.select("var_id", value_col)
+        var_dict.select(key_col, value_col)
         .limit(AUTO_MAP_FUSE_ENTRIES + 1)
         .collect()
     )
-    if len(rows) <= AUTO_MAP_FUSE_ENTRIES:
-        nbytes = sum(
-            len(r[value_col]) for r in rows if r[value_col] is not None
-        )
-        if nbytes <= AUTO_MAP_MAX_BYTES:
-            bc = var_map_bc or spark.sparkContext.broadcast(
-                {r["var_id"]: r[value_col] for r in rows}
-            )
-            return "map", bc
+    if len(rows) > AUTO_MAP_FUSE_ENTRIES:
+        if resolve_decode_mode(var_dict, "auto", str_col) == "join":
+            return "join", None
+        rows = var_dict.select(key_col, value_col).collect()
+    elif not map_fits(len(rows), sum(
+            len(r[str_col]) for r in rows if r[str_col] is not None)):
         return "join", None
-    mode = resolve_decode_mode(var_dict, "auto", value_col)
-    if mode == "map":
-        return "map", var_map_bc or build_var_map_broadcast(var_dict)
-    return "join", None
+    return "map", {r[key_col]: r[value_col] for r in rows}
+
+
+def resolve_decode_and_map(var_dict: DataFrame, var_map_bc=None,
+                           value_col: str = "var_str"):
+    """(mode, var_map_bc) for decode: ``resolve_mode_and_map`` keyed by
+    var_id, broadcast in map mode."""
+    mode, var_map = resolve_mode_and_map(var_dict, "var_id", value_col,
+                                         value_col)
+    if mode == "join":
+        return "join", None
+    return "map", (var_map_bc
+                   or var_dict.sparkSession.sparkContext.broadcast(var_map))
 
 
 def resolve_decode_mode(var_dict: DataFrame, mode: str = "auto",
@@ -104,9 +120,7 @@ def resolve_decode_mode(var_dict: DataFrame, mode: str = "auto",
             F.count("*").alias("n"),
             F.sum(F.length(value_col)).alias("b"),
         ).first()
-        small = (stats["n"] <= AUTO_MAP_MAX_ENTRIES
-                 and (stats["b"] or 0) <= AUTO_MAP_MAX_BYTES)
-        return "map" if small else "join"
+        return "map" if map_fits(stats["n"], stats["b"]) else "join"
     if mode not in ("map", "join"):
         raise ValueError(f"unknown decode mode: {mode}")
     return mode

@@ -26,6 +26,12 @@ from pyspark.sql import functions as F
 
 ENRICHED_EXTRA_COLS = ("logtype_id", "var_ids")
 
+# Column layout of build_logtype_dict / build_var_dict output. Readers of a
+# written dictionary pass it to ``spark.read.schema``: a plain
+# ``spark.read.parquet`` launches a schema-inference job per read.
+LOGTYPE_DICT_SCHEMA = "logtype string, logtype_id bigint, n_rows bigint"
+VAR_DICT_SCHEMA = "var_str string, var_id bigint, n_occurrences bigint"
+
 # Sentinel id for dict-var strings absent from the dictionary. Batch enrich
 # never produces it (the dict is built from the same data), but streaming
 # enriches future micro-batches against a fixed pre-built dictionary
@@ -44,6 +50,18 @@ def zip_with_index(df: DataFrame, value_col: str, id_col: str,
     only on the value set, not on parallelism. Extra columns of an
     ``already_distinct`` input (e.g. per-value counts) are carried through.
     """
+    return _zip_with_index(df, value_col, id_col, num_partitions,
+                           already_distinct)[0]
+
+
+def _zip_with_index(df: DataFrame, value_col: str, id_col: str,
+                    num_partitions: int | None = None,
+                    already_distinct: bool = False,
+                    count_col: str | None = None) -> tuple[DataFrame, dict]:
+    """``zip_with_index`` plus the dictionary's stats, from the SAME
+    per-partition collect that yields the id offsets: ``entries``,
+    ``value_bytes`` (summed ``length(value_col)``) and ``carried`` (summed
+    ``count_col``, 0 without one) — no separate count job over the result."""
     if num_partitions is None:
         num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 8)
     if not already_distinct:
@@ -55,9 +73,16 @@ def zip_with_index(df: DataFrame, value_col: str, id_col: str,
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in d.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
+    parts = d.groupBy("_pid").agg(
+        F.count("*").alias("cnt"),
+        F.sum(F.length(value_col)).alias("nbytes"),
+        F.sum(count_col if count_col else F.lit(0)).alias("carried"),
+    ).collect()
+    counts = {r["_pid"]: r["cnt"] for r in parts}
+    stats = {
+        "entries": sum(counts.values()),
+        "value_bytes": sum(r["nbytes"] or 0 for r in parts),
+        "carried": sum(r["carried"] or 0 for r in parts),
     }
     offsets: dict[int, int] = {}
     acc = 0
@@ -69,7 +94,7 @@ def zip_with_index(df: DataFrame, value_col: str, id_col: str,
             F.col(value_col), F.lit(None).cast("bigint").alias(id_col), *carry
         ).localCheckpoint(eager=True)
         d.unpersist()
-        return empty
+        return empty, stats
     off_expr = F.create_map(
         *[x for pid, off in offsets.items() for x in (F.lit(pid), F.lit(off))]
     )
@@ -85,7 +110,7 @@ def zip_with_index(df: DataFrame, value_col: str, id_col: str,
     # long-lived bench/scaling sessions.
     out = out.localCheckpoint(eager=True)
     d.unpersist()
-    return out
+    return out, stats
 
 
 def build_logtype_dict(parsed: DataFrame) -> DataFrame:
@@ -95,19 +120,28 @@ def build_logtype_dict(parsed: DataFrame) -> DataFrame:
     dictionary stats (SchemaTree m_count analog); counts also drive the
     route stage's frequency-aware salting.
     """
+    return _logtype_dict_and_stats(parsed)[0]
+
+
+def _logtype_dict_and_stats(parsed: DataFrame) -> tuple[DataFrame, dict]:
     counted = parsed.groupBy("logtype").agg(F.count("*").alias("n_rows"))
-    return zip_with_index(counted, "logtype", "logtype_id",
-                          already_distinct=True)
+    return _zip_with_index(counted, "logtype", "logtype_id",
+                           already_distinct=True, count_col="n_rows")
 
 
 def build_var_dict(parsed: DataFrame) -> DataFrame:
     """distinct dict-var strings -> dense var_id + occurrence count."""
+    return _var_dict_and_stats(parsed)[0]
+
+
+def _var_dict_and_stats(parsed: DataFrame) -> tuple[DataFrame, dict]:
     counted = (
         parsed.select(F.explode("dict_vars").alias("var_str"))
         .groupBy("var_str")
         .agg(F.count("*").alias("n_occurrences"))
     )
-    return zip_with_index(counted, "var_str", "var_id", already_distinct=True)
+    return _zip_with_index(counted, "var_str", "var_id",
+                           already_distinct=True, count_col="n_occurrences")
 
 
 # JVM-side fill of dict slots from var_ids by position (codegen-friendly,
@@ -149,17 +183,22 @@ def enrich(
 
     ``mode="auto"`` selects the strategy by dictionary size: the python-map
     broadcast while the dictionary is collectable, the shuffle join beyond —
-    a tens-of-GB var dictionary at 100 TB must never reach the driver.
+    a tens-of-GB var dictionary at 100 TB must never reach the driver. One
+    bounded collect both gates and builds the map (decode's
+    ``resolve_mode_and_map``, keyed by string); callers that already know
+    the dictionary's size resolve the gate with ``decode.map_fits`` and
+    pass ``"map"`` or ``"join"``.
     """
     spark = parsed.sparkSession
     if mode == "auto":
-        from clpspark.operators.decode import resolve_decode_mode
+        from clpspark.operators.decode import resolve_mode_and_map
 
         # entry-count AND byte-size gated (huge-string dicts must not be
         # collected to the driver even below the entry cap)
-        mode = resolve_decode_mode(var_dict)
-    if mode == "map":
+        mode, var_map = resolve_mode_and_map(var_dict, "var_str", "var_id")
+    elif mode == "map":
         var_map = {r["var_str"]: r["var_id"] for r in var_dict.collect()}
+    if mode == "map":
         var_map_bc = spark.sparkContext.broadcast(var_map)
         filled = _fill_var_ids_map(parsed, var_map_bc)
     elif mode == "join":

@@ -41,12 +41,15 @@ def route(
     sink_counts: DataFrame | None = None,
     rows_per_task: int | None = None,
     write_options: dict[str, str] | None = None,
+    total_rows: int | None = None,
 ) -> None:
     """Fan-out write. ``salt`` is the max salt; when ``sink_counts`` (a small
     (sink, n_rows) table, e.g. the logtype dictionary) is given, the salt is
     frequency-aware: salt_n(sink) = clamp(n_rows / rows_per_task, 1, salt),
     so only heavy-hitter sinks spread across tasks and rare sinks stay in one
-    output file each (no small-file explosion)."""
+    output file each (no small-file explosion). ``total_rows`` (the summed
+    ``n_rows`` of ``sink_counts``, when the caller already holds it) spares
+    the aggregation job that derives ``rows_per_task``."""
     spark = enriched.sparkSession
     # per-row salt source: a stable id column when present, else a
     # partition-local counter (only spreads rows — never affects content)
@@ -62,9 +65,10 @@ def route(
         salt = num_partitions
     if sink_counts is not None:
         if rows_per_task is None:
-            total = sink_counts.agg(F.sum("n_rows")).first()[0] or 0
+            if total_rows is None:
+                total_rows = sink_counts.agg(F.sum("n_rows")).first()[0] or 0
             # aim for ~2 shuffle tasks' worth per salt bucket
-            rows_per_task = max(total // (2 * num_partitions), 5_000)
+            rows_per_task = max(total_rows // (2 * num_partitions), 5_000)
         salts = sink_counts.select(
             F.col(sink_col),
             F.greatest(

@@ -1,21 +1,33 @@
 """End-to-end parse -> enrich -> route -> aggregate pipeline.
 
-Stage layout (each stage = one Spark job writing parquet, committed to the
-lineage log; resume skips committed stages):
+Stage layout (each stage writes parquet through a few Spark jobs and is
+committed to the lineage log; resume skips committed stages):
 
   1. parse      sequences -> parsed/            (1 full parse pass)
   2. dicts      parsed -> logtype_dict/, var_dict/   (column-pruned scans)
   3. route      parsed + dicts -> routed/ (partitionBy logtype_id, salted)
   4. aggregate  routed -> agg_sink_counts/, agg_source_stats/, agg_by_time/
+  5. snapshot   one manifest over every output table
 
 Scale notes: parse is the CPU-heavy pass and runs exactly once; dict build
-and route re-read the materialized parsed table with column pruning instead
-of re-parsing. At cluster scale the parsed table is the analog of CLP's IR —
-a one-time encoding that all downstream stages reuse.
+and route re-read the parsed table with column pruning instead of
+re-parsing. With ``materialize_parsed`` that table is the durable parsed/
+(the analog of CLP's IR — a one-time encoding all downstream stages
+reuse); in two-pass mode it is a transient snappy spill, _parsed_twopass/,
+deleted once the route stage has read it.
+
+Fixed per-run cost: a small batch's wall is mostly metadata jobs, so the
+stages reuse what the run already knows instead of asking Spark again —
+dictionary stats (entries, string bytes, row total) come from the
+dictionary build's own collect and are committed to lineage, where the
+enrich gate and route's salting read them; just-written tables are read
+back with a known schema (no inference job); routed/ is read once per run;
+the snapshot lists files on the driver.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import time
@@ -27,7 +39,16 @@ from pyspark.sql import functions as F
 from clpspark import corpus as corpus_mod
 from clpspark.lineage import LineageLog, fingerprint
 from clpspark.operators import aggregate as agg
-from clpspark.operators.enrich import build_logtype_dict, build_var_dict, enrich
+from clpspark.operators.decode import map_fits
+from clpspark.operators.enrich import (
+    LOGTYPE_DICT_SCHEMA,
+    VAR_DICT_SCHEMA,
+    _logtype_dict_and_stats,
+    _var_dict_and_stats,
+    build_logtype_dict,
+    build_var_dict,
+    enrich,
+)
 from clpspark.operators.parse import parse_sequences
 from clpspark.operators.route import route
 
@@ -47,8 +68,9 @@ class PipelineConfig:
     bucket_ms: int = 3_600_000  # 1h count-by-time buckets
     version: int = 1
     # True: materialize parsed/ as parquet (durable IR; dict + route stages
-    # re-read it). False: two-pass throughput mode — dict build and route
-    # each recompute the parse lazily, nothing intermediate is written.
+    # re-read it). False: two-pass throughput mode — no durable parsed
+    # table; the parse spills to a transient _parsed_twopass/ that the dict
+    # and route stages re-read, deleted after the route stage.
     materialize_parsed: bool = True
     # Optional archive catalog registration (tags + ts-range pruning DB)
     catalog_dir: str | None = None
@@ -143,6 +165,11 @@ def _read_stats_sidecar(config: "PipelineConfig",
     return d["stats"] if d.get("route_fp") == route_fp else None
 
 
+# dictionary stats the dicts stage commits and the route stage consumes; a
+# committed dicts entry without them (older work dir) is rebuilt
+_DICT_STATS = frozenset(("n_logtypes", "n_rows", "n_vars", "var_bytes"))
+
+
 def run_pipeline(
     spark: SparkSession,
     config: PipelineConfig,
@@ -186,6 +213,7 @@ def run_pipeline(
     need_dicts = not (
         resume and log.is_done("dicts", config.fp("dicts"))
         and os.path.exists(lt_path)
+        and _DICT_STATS <= log.metrics("dicts").keys()
     )
     need_route = not (
         resume and log.is_done("route", config.fp("route"))
@@ -233,7 +261,8 @@ def run_pipeline(
             parsed.write.option("compression", "snappy").mode(
                 "overwrite"
             ).parquet(tmp_parsed)
-            parsed = spark.read.parquet(tmp_parsed)
+            # the writer's schema: no inference job over the spill
+            parsed = spark.read.schema(parsed.schema).parquet(tmp_parsed)
             parsed_on_disk = True
 
     # -- stage 2: dictionaries ----------------------------------------------
@@ -242,6 +271,8 @@ def run_pipeline(
     if need_dicts:
         log.begin("dicts", fp)
         dirty = True
+        from concurrent.futures import ThreadPoolExecutor
+
         if parsed_on_disk:
             # parquet-backed parse: both dictionary builds scan their own
             # single pruned column — cheaper than materializing a shared
@@ -249,42 +280,60 @@ def run_pipeline(
             # for narrow fan-out reads), and the two builds are independent
             # jobs, so run them concurrently: the second back-fills the
             # straggler tail of the first (guide §2.6).
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _build_lt():
-                spark.sparkContext.setJobDescription("dicts: logtype_dict")
-                zw(build_logtype_dict(parsed)).mode("overwrite").parquet(lt_path)
-
-            def _build_var():
-                spark.sparkContext.setJobDescription("dicts: var_dict")
-                zw(build_var_dict(parsed)).mode("overwrite").parquet(var_path)
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                for f in [pool.submit(_build_lt), pool.submit(_build_var)]:
-                    f.result()
+            src, workers = parsed, 2
         else:
             # lazy (non-materialized) parse with only this stage running:
             # one narrow projection feeds BOTH dictionary builds so the
             # parse runs once, spilled DISK_ONLY (keeps the big
-            # executor-storage pool out of play in single-JVM local mode).
+            # executor-storage pool out of play in single-JVM local mode);
+            # one worker, so the second build reads what the first spilled.
             from pyspark.storagelevel import StorageLevel
 
-            proj = parsed.select("logtype", "dict_vars").persist(
+            src = parsed.select("logtype", "dict_vars").persist(
                 StorageLevel.DISK_ONLY
             )
-            zw(build_logtype_dict(proj)).mode("overwrite").parquet(lt_path)
-            zw(build_var_dict(proj)).mode("overwrite").parquet(var_path)
-            proj.unpersist()
+            workers = 1
+
+        def _build(name: str, build, path: str) -> dict:
+            spark.sparkContext.setJobDescription(f"dicts: {name}")
+            df, stats = build(src)
+            zw(df).mode("overwrite").parquet(path)
+            return stats
+
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            lt_stats, var_stats = [
+                f.result() for f in [
+                    pool.submit(_build, "logtype_dict",
+                                _logtype_dict_and_stats, lt_path),
+                    pool.submit(_build, "var_dict", _var_dict_and_stats,
+                                var_path),
+                ]
+            ]
+        if src is not parsed:
+            src.unpersist()
+        # the stats come from the builds' own id-offset collects: the
+        # route stage (this run or a resumed one) reads them from lineage
+        # instead of counting the dictionaries again
         log.commit(
             "dicts",
             fp,
             {
-                "n_logtypes": spark.read.parquet(lt_path).count(),
-                "n_vars": spark.read.parquet(var_path).count(),
+                "n_logtypes": lt_stats["entries"],
+                "n_rows": lt_stats["carried"],
+                "n_vars": var_stats["entries"],
+                "var_bytes": var_stats["value_bytes"],
                 "sec": time.time() - t1,
             },
         )
     metrics["dicts"] = log.metrics("dicts")
+
+    @functools.cache
+    def _routed() -> DataFrame:
+        # ONE read of the fan-out per run, after the route stage wrote it:
+        # partition discovery over more than 32 sink dirs is a distributed
+        # listing job. No forced schema here — the logtype_id partition
+        # column reads back as int, the written column is bigint.
+        return spark.read.parquet(routed_path)
 
     # -- stage 3: enrich + route ---------------------------------------------
     t2 = time.time()
@@ -292,17 +341,24 @@ def run_pipeline(
     if need_route:
         log.begin("route", fp)
         dirty = True
-        logtype_dict = spark.read.parquet(lt_path)
-        var_dict = spark.read.parquet(var_path)
-        enriched = enrich(parsed, logtype_dict, var_dict, mode=config.enrich_mode)
+        dict_stats = log.metrics("dicts")
+        enrich_mode = config.enrich_mode
+        if enrich_mode == "auto":
+            # decode's map-vs-join gate, fed from lineage: no stats job
+            enrich_mode = ("map" if map_fits(dict_stats["n_vars"],
+                                             dict_stats["var_bytes"])
+                           else "join")
+        logtype_dict = spark.read.schema(LOGTYPE_DICT_SCHEMA).parquet(lt_path)
+        var_dict = spark.read.schema(VAR_DICT_SCHEMA).parquet(var_path)
+        enriched = enrich(parsed, logtype_dict, var_dict, mode=enrich_mode)
         route(
             enriched,
             routed_path,
             salt=config.route_salt,
             sink_counts=logtype_dict.select("logtype_id", "n_rows"),
             write_options=zw.options,
+            total_rows=dict_stats["n_rows"],
         )
-        routed = spark.read.parquet(routed_path)
         # fused post-route metadata pass (2 narrow scans): per-file
         # skipping stats + the var-id -> sink inverted index
         # (Archive.cpp:487-526 analog). The stats serve three consumers —
@@ -315,7 +371,7 @@ def run_pipeline(
         )
 
         stats, var_index = collect_file_stats_and_var_index(
-            routed, config.work_dir
+            _routed(), config.work_dir
         )
         zw(var_index).mode("overwrite").parquet(config.path("var_index"))
         _write_stats_sidecar(config, fp, stats)
@@ -356,9 +412,7 @@ def run_pipeline(
                 extra["_archive_creator_id"] = config.archive_creator_id
             if config.input_format == "text":
                 # text ingest: doc_id = <file>#<idx>, contiguous per source
-                src = spark.read.parquet(routed_path).select(
-                    "doc_id", "source"
-                )
+                src = _routed().select("doc_id", "source")
                 group_col = "source"
             else:
                 # corpus parquet: doc_ids are contiguous per input part
@@ -421,7 +475,7 @@ def run_pipeline(
         # (guide §2.6).
         from concurrent.futures import ThreadPoolExecutor
 
-        routed = spark.read.parquet(routed_path)
+        routed = _routed()
 
         def _agg_job(name: str, df_fn):
             spark.sparkContext.setJobDescription(f"aggregate: {name}")
@@ -463,8 +517,7 @@ def run_pipeline(
     if config.catalog_dir:
         from clpspark.catalog import register_archive
 
-        routed = spark.read.parquet(routed_path)
-        rng = routed.agg(
+        rng = _routed().agg(
             F.min("ts").alias("b"), F.max("ts").alias("e"),
             F.count("*").alias("n"),
         ).first()
@@ -678,7 +731,7 @@ def run_split_pipeline(
         ("var_index", f"{dicts_dir}/var_index"),
     ):
         tables[name] = {
-            "files": store.table_files(spark.read.parquet(p)),
+            "files": store.table_files(p),
             "base": os.path.relpath(p, config.work_dir),
         }
     store.commit(tables)

@@ -28,6 +28,7 @@ tight, only on step 3.
 
 from __future__ import annotations
 
+import re
 import threading
 
 from pyspark.sql import DataFrame
@@ -40,6 +41,7 @@ from clpspark.ref.wildcard import (
 )
 
 _WILDCARDS = "*?"
+_ESCAPED = re.compile(r"\\(.)", re.DOTALL)
 
 # Logtype-dictionary driver-residency gate. CLP bounds dictionary growth by
 # splitting archives, and the reference scans its in-memory dictionary per
@@ -401,6 +403,9 @@ class GrepEngine:
         for tok, exact in _query_tokens(query):
             if not exact:
                 continue
+            # the query text keeps its escapes (``\\`` for a literal
+            # backslash); the dictionary holds the literal string
+            tok = _ESCAPED.sub(r"\1", tok)
             iv = E.encode_int(tok)
             if iv is not None:
                 ordered.append([iv])

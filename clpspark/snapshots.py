@@ -58,6 +58,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,9 +75,32 @@ _DICT_VAR_IDS = "transform(dict_slots, s -> encoded_vars[s])"
 
 
 def _rel(file_uri: str, root: str) -> str:
-    p = file_uri[7:] if file_uri.startswith("file://") else file_uri
+    # inputFiles() and input_file_name() return PERCENT-ENCODED URIs
+    p = unquote(urlparse(file_uri).path) if file_uri.startswith("file:") \
+        else file_uri
     root = os.path.abspath(root)
     return os.path.relpath(p, root)
+
+
+def _spark_hidden(name: str) -> bool:
+    """Spark's file-index filter (HadoopFSUtils.shouldFilterOutPathName):
+    ``_``/``.`` prefixes are hidden, except ``k=v`` partition dirs and the
+    parquet summary files; in-flight ``._COPYING_`` uploads are too."""
+    exclude = ((name.startswith("_") and "=" not in name)
+               or name.startswith(".") or name.endswith("._COPYING_"))
+    return exclude and not name.startswith(("_common_metadata", "_metadata"))
+
+
+def list_table_files(path: str) -> list[str]:
+    """The data files ``spark.read.parquet(path)`` would scan, listed on the
+    driver: the same set as its ``inputFiles()`` (URI-decoded) without the
+    schema-inference job — and without the distributed listing job Spark
+    launches past 32 partition dirs."""
+    out = []
+    for d, subdirs, files in os.walk(os.path.abspath(path)):
+        subdirs[:] = [x for x in subdirs if not _spark_hidden(x)]
+        out.extend(os.path.join(d, f) for f in files if not _spark_hidden(f))
+    return sorted(out)
 
 
 def collect_file_stats(
@@ -374,8 +398,10 @@ class SnapshotStore:
         ]
         return (max(vs) + 1) if vs else 1
 
-    def table_files(self, df: DataFrame) -> list[str]:
-        return sorted(_rel(f, self.root) for f in df.inputFiles())
+    def table_files(self, path: str) -> list[str]:
+        """Data files of the table at ``path``, relative to the store root,
+        listed without Spark."""
+        return sorted(_rel(f, self.root) for f in list_table_files(path))
 
     def commit(self, tables: dict[str, dict]) -> int:
         """Atomically publish a snapshot. ``tables`` maps table name ->
@@ -472,27 +498,19 @@ def snapshot_pipeline_tables(
         path = os.path.join(work_dir, name)
         if not os.path.exists(path):
             continue
+        stats = None
         if name == "routed":
             stats = routed_stats
             if stats is None and with_stats:
                 stats = collect_file_stats(
                     spark.read.parquet(path), work_dir
                 )
-            if stats is not None:
-                entry = {
-                    "files": sorted(s["file"] for s in stats),
-                    "base": name,
-                    "stats": stats,
-                }
-            else:
-                entry = {
-                    "files": store.table_files(spark.read.parquet(path)),
-                    "base": name,
-                }
-        else:
-            entry = {
-                "files": store.table_files(spark.read.parquet(path)),
+        if stats is not None:
+            tables[name] = {
+                "files": sorted(s["file"] for s in stats),
                 "base": name,
+                "stats": stats,
             }
-        tables[name] = entry
+        else:
+            tables[name] = {"files": store.table_files(path), "base": name}
     return store.commit(tables)

@@ -1,0 +1,206 @@
+"""Fixed per-run Spark work of run_pipeline: the job budget of a small
+batch, the driver-side table listing behind the snapshot commit, resume from
+committed dictionary stats, and work dirs whose paths need percent-encoding
+in Spark's file URIs."""
+
+from __future__ import annotations
+
+import json
+import os
+import shutil
+from urllib.parse import unquote, urlparse
+
+import pytest
+
+from clpspark.lineage import LineageLog
+from clpspark.pipeline import PipelineConfig, run_pipeline
+from clpspark.snapshots import list_table_files
+
+TABLES = ("routed", "logtype_dict", "var_dict", "var_index",
+          "agg_sink_counts", "agg_source_stats", "agg_by_time")
+
+
+def _marker_job_id(sc, group: str) -> int:
+    sc.setJobGroup(group, group)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setJobGroup("", "")
+    return max(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_small_two_pass_batch_job_budget(spark, small_corpus, tmp_path):
+    """A warm 20k-row two-pass batch launches at most 42 Spark jobs: no
+    schema inference over the spill or the dictionaries, no dictionary
+    counts, no enrich-gate or salting stats jobs, one read of routed/ and
+    no Spark reads behind the snapshot's file lists."""
+    from clpspark.corpus import write_corpus
+
+    src = str(tmp_path / "corpus")
+    write_corpus(spark, src, n_rows=20_000, seed=7, partitions=1)
+    run_pipeline(spark, PipelineConfig(
+        input_path=small_corpus, work_dir=str(tmp_path / "warm"),
+        materialize_parsed=False), resume=False)
+    sc = spark.sparkContext
+    before = _marker_job_id(sc, "fixed-jobs-before")
+    run_pipeline(spark, PipelineConfig(
+        input_path=src, work_dir=str(tmp_path / "w"), vocab_seed=7,
+        materialize_parsed=False), resume=False)
+    after = _marker_job_id(sc, "fixed-jobs-after")
+    assert after - before - 1 <= 42
+
+
+@pytest.fixture(scope="module")
+def spaced_work(spark, small_corpus, tmp_path_factory):
+    """Two-pass pipeline output in a work dir whose path holds a space."""
+    work = str(tmp_path_factory.mktemp("fixed") / "sp ace" / "work")
+    run_pipeline(spark, PipelineConfig(input_path=small_corpus,
+                                       work_dir=work,
+                                       materialize_parsed=False))
+    return work
+
+
+def test_listing_matches_spark_input_files(spark, spaced_work, tmp_path):
+    """list_table_files equals the URI-decoded inputFiles() of every
+    pipeline table, including routed/'s partition dirs, _SUCCESS and .crc
+    files, and the hidden/in-flight names Spark's file index skips."""
+    work = str(tmp_path / "copy")
+    shutil.copytree(spaced_work, work)
+    routed = os.path.join(work, "routed")
+    sink = next(d for d in sorted(os.listdir(routed)) if "=" in d)
+    part = next(f for f in os.listdir(os.path.join(routed, sink))
+                if f.endswith(".parquet"))
+    os.makedirs(os.path.join(routed, "_temporary", "0"))
+    shutil.copy(os.path.join(routed, sink, part),
+                os.path.join(routed, "_temporary", "0", part))
+    shutil.copy(os.path.join(routed, sink, part),
+                os.path.join(routed, sink, part + "._COPYING_"))
+    open(os.path.join(routed, sink, ".hidden.parquet"), "w").close()
+    names = {f for _r, _d, fs in os.walk(routed) for f in fs}
+    assert "_SUCCESS" in names and any(f.endswith(".crc") for f in names)
+
+    for t in TABLES:
+        path = os.path.join(work, t)
+        spark_files = sorted(unquote(urlparse(f).path)
+                             for f in spark.read.parquet(path).inputFiles())
+        assert list_table_files(path) == spark_files, t
+
+
+def test_spaced_work_dir_manifest_and_search(spark, spaced_work):
+    """The snapshot manifest stores real (decoded) relative paths, so the
+    snapshot-backed engine finds its files: pruned and unpruned counts of
+    the same queries agree."""
+    from clpspark.plans.grep import GrepEngine
+    from clpspark.snapshots import SnapshotStore
+
+    tables = SnapshotStore(spaced_work).manifest()["tables"]
+    for t in TABLES:
+        for f in tables[t]["files"]:
+            assert "%" not in f and not f.startswith("..")
+            assert os.path.isfile(os.path.join(spaced_work, f)), f
+    eng = GrepEngine.from_work_dir(spark, spaced_work)
+    vd = spark.read.parquet(os.path.join(spaced_work, "var_dict"))
+    var = next(r["var_str"] for r in vd.orderBy("var_id").collect()
+               if not any(c in r["var_str"] for c in "*?\\"))
+    for q in ("*", f"* {var} *", "* zzz_unknown_var *"):
+        assert (eng.search(q).count()
+                == eng.search(q, prefilter=False).count()), q
+    assert eng.search("*").count() == 1000
+
+
+def _outputs(spark, work: str) -> dict:
+    """Routed rows + per-sink file sizes, aggregate rows, route audit."""
+    out = {}
+    routed = spark.read.parquet(os.path.join(work, "routed"))
+    out["routed"] = sorted(
+        (r["doc_id"], r["logtype_id"], list(r["encoded_vars"]))
+        for r in routed.select("doc_id", "logtype_id", "encoded_vars")
+        .collect())
+    out["files"] = sorted(
+        (os.path.basename(d), os.path.getsize(os.path.join(d, f)))
+        for d, _s, fs in os.walk(os.path.join(work, "routed"))
+        for f in fs if f.endswith(".parquet"))
+    for t in ("agg_sink_counts", "agg_source_stats", "agg_by_time"):
+        out[t] = sorted(map(tuple, spark.read.parquet(
+            os.path.join(work, t)).collect()))
+    out["sinks"] = LineageLog(work).metrics("route")["sinks"]
+    return out
+
+
+@pytest.mark.parametrize("drop_dict_stats", [False, True])
+def test_resume_after_dicts_equals_fresh_run(spark, small_corpus, tmp_path,
+                                             drop_dict_stats):
+    """Crash after the dicts commit, before route: the resumed run reads
+    the dictionary stats from lineage and matches a fresh run. A dicts
+    entry without the stats (older work dir) is rebuilt, not trusted."""
+    def cfg(name):
+        return PipelineConfig(input_path=small_corpus,
+                              work_dir=str(tmp_path / name),
+                              materialize_parsed=False)
+
+    run_pipeline(spark, cfg("fresh"), resume=False)
+    c = cfg("resumed")
+    run_pipeline(spark, c, resume=False)
+    log = LineageLog(c.work_dir)
+    dicts_at = json.load(open(log.path))["stages"]["dicts"]["committed_at"]
+    for stage in ("route", "aggregate", "snapshot"):
+        log.invalidate(stage)
+    shutil.rmtree(c.path("routed"))
+    if drop_dict_stats:
+        data = json.load(open(log.path))
+        data["stages"]["dicts"]["metrics"] = {"n_logtypes": 1, "sec": 0.0}
+        with open(log.path, "w") as f:
+            json.dump(data, f)
+
+    run_pipeline(spark, c, resume=True)
+    entry = json.load(open(log.path))["stages"]["dicts"]
+    assert (entry["committed_at"] != dicts_at) == drop_dict_stats
+    assert {"n_logtypes", "n_rows", "n_vars", "var_bytes"} <= set(
+        entry["metrics"])
+    assert _outputs(spark, c.work_dir) == _outputs(
+        spark, str(tmp_path / "fresh"))
+
+
+def test_dict_stats_match_tables(spark, spaced_work):
+    """The committed dictionary stats equal the written tables, whose
+    schemas are the declared dictionary schemas."""
+    from pyspark.sql import functions as F
+
+    from clpspark.operators.enrich import LOGTYPE_DICT_SCHEMA, VAR_DICT_SCHEMA
+
+    m = LineageLog(spaced_work).metrics("dicts")
+    for t, ddl in (("logtype_dict", LOGTYPE_DICT_SCHEMA),
+                   ("var_dict", VAR_DICT_SCHEMA)):
+        path = os.path.join(spaced_work, t)
+        assert (spark.read.parquet(path).schema.simpleString()
+                == spark.read.schema(ddl).parquet(path).schema.simpleString())
+    lt = spark.read.parquet(os.path.join(spaced_work, "logtype_dict"))
+    got = lt.agg(F.count("*"), F.sum("n_rows")).first()
+    assert (m["n_logtypes"], m["n_rows"]) == (got[0], got[1]) == (got[0], 1000)
+    vd = spark.read.parquet(os.path.join(spaced_work, "var_dict"))
+    got = vd.agg(F.count("*"), F.sum(F.length("var_str"))).first()
+    assert (m["n_vars"], m["var_bytes"]) == (got[0], got[1])
+
+
+def test_enrich_auto_resolves_in_one_job(spark, small_corpus, vocab_meta):
+    """enrich(mode="auto") outside the pipeline gates and builds its
+    var-id map with one bounded collect, and matches forced map mode."""
+    from clpspark.operators.enrich import (
+        build_logtype_dict,
+        build_var_dict,
+        enrich,
+    )
+    from clpspark.operators.parse import parse_sequences
+
+    parsed = parse_sequences(spark.read.parquet(small_corpus),
+                             vocab_meta.vocab).localCheckpoint(eager=True)
+    lt, vd = build_logtype_dict(parsed), build_var_dict(parsed)
+    sc = spark.sparkContext
+    before = _marker_job_id(sc, "enrich-auto-before")
+    auto = enrich(parsed, lt, vd, mode="auto")
+    after = _marker_job_id(sc, "enrich-auto-after")
+    assert after - before - 1 == 1
+    forced = enrich(parsed, lt, vd, mode="map")
+    cols = ["doc_id", "logtype_id", "encoded_vars", "var_ids"]
+    assert sorted(map(tuple, auto.select(cols).collect())) == sorted(
+        map(tuple, forced.select(cols).collect()))

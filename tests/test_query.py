@@ -126,7 +126,10 @@ def test_kql_case_insensitive(search_df, query, expected):
 # ------------------------------------------------------------------ grep
 @pytest.fixture(scope="module")
 def grep_setup(spark, vocab_meta, small_corpus):
-    df = spark.read.parquet(small_corpus)
+    return _grep_engine(spark.read.parquet(small_corpus), vocab_meta)
+
+
+def _grep_engine(df, vocab_meta):
     parsed = parse_sequences(df, vocab_meta.vocab).persist()
     lt = build_logtype_dict(parsed)
     vd = build_var_dict(parsed)
@@ -180,6 +183,59 @@ def test_grep_matches_oracle(grep_setup, query, kw):
     got = {r["doc_id"] for r in engine.search(query, **kw).collect()}
     expected = _oracle_matches(msgs, query, **kw)
     assert got == expected, query
+
+
+def _fullmatch_regex(query: str):
+    """Independent wildcard translation: ``\\x`` is the literal x, ``*``
+    any run, ``?`` any one character."""
+    import re
+
+    out, i = [], 0
+    while i < len(query):
+        c = query[i]
+        if c == "\\" and i + 1 < len(query):
+            out.append(re.escape(query[i + 1]))
+            i += 2
+            continue
+        out.append({"*": ".*", "?": "."}.get(c, re.escape(c)))
+        i += 1
+    return re.compile("".join(out), re.DOTALL)
+
+
+@pytest.fixture(scope="module")
+def backslash_setup(spark, vocab_meta, small_corpus):
+    """The 1k corpus with every dictionary-variable token of about a fifth
+    of the rows replaced by the vocabulary's backslash-holding variable."""
+    from pyspark.sql import functions as F
+
+    m = vocab_meta
+    apet = m.vocab.index("APet4123\\test.txt")
+
+    def swap(t):
+        is_dict = (t >= m.off_dict) & (t < m.off_dict + m.n_dict)
+        return F.when(is_dict, F.lit(apet)).otherwise(t)
+
+    df = spark.read.parquet(small_corpus).withColumn(
+        "tokens",
+        F.when(F.pmod(F.xxhash64("doc_id"), F.lit(5)) == 0,
+               F.transform("tokens", swap))
+        .otherwise(F.col("tokens")),
+    ).localCheckpoint(eager=True)
+    return _grep_engine(df, vocab_meta)
+
+
+@pytest.mark.parametrize("query", [
+    # a dictionary variable holding a backslash, bounded by delimiters:
+    # the dictionary probe must see the unescaped token
+    r"* APet4123\\test.txt *",
+    r"*APet4123\\test.txt *",
+])
+def test_grep_escaped_backslash_dict_var(backslash_setup, query):
+    engine, msgs = backslash_setup
+    rx = _fullmatch_regex(query)
+    expected = sum(1 for _ts, rest in msgs.values() if rx.fullmatch(rest))
+    assert expected > 0
+    assert engine.search(query).count() == expected
 
 
 def test_grep_prefilter_equals_postfilter(grep_setup):

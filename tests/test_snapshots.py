@@ -51,9 +51,9 @@ def test_atomic_multi_table_commit(spark, tmp_path):
     b1.write.parquet(f"{root}/b")
     store = SnapshotStore(root)
     v1 = store.commit({
-        "a": {"files": store.table_files(spark.read.parquet(f"{root}/a")),
+        "a": {"files": store.table_files(f"{root}/a"),
               "base": "a"},
-        "b": {"files": store.table_files(spark.read.parquet(f"{root}/b")),
+        "b": {"files": store.table_files(f"{root}/b"),
               "base": "b"},
     })
     assert v1 == 1
@@ -69,9 +69,9 @@ def test_atomic_multi_table_commit(spark, tmp_path):
     assert store.read_table(spark, "b").count() == 20
     # now the commit lands: both tables advance in one pointer swap
     v2 = store.commit({
-        "a": {"files": store.table_files(spark.read.parquet(f"{root}/a")),
+        "a": {"files": store.table_files(f"{root}/a"),
               "base": "a"},
-        "b": {"files": store.table_files(spark.read.parquet(f"{root}/b")),
+        "b": {"files": store.table_files(f"{root}/b"),
               "base": "b"},
     })
     assert v2 == 2 and store.current_version() == 2
