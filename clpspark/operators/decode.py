@@ -1,28 +1,36 @@
-"""Message decode — enrich in reverse, without driver-side dictionary state.
+"""Message decode — enrich in reverse.
 
 CLP decodes a stored event by joining its dictionary ids back to the logtype
 and variable dictionaries (clp/EncodedVariableInterpreter.hpp:362-435,
 clp/clp/FileDecompressor.hpp:29). Two Spark strategies:
 
-  - ``map``: the var dictionary is collected once and broadcast as a Python
-    dict into a narrow Arrow-batched UDF. Lowest latency; valid only while
-    the dictionary fits in driver/executor memory (CLP bounds dictionary
-    size by splitting archives; batch pipelines at one-archive scope can
-    rely on it).
-  - ``join``: dict-var ids are exploded, joined against the dictionary
-    (Catalyst picks broadcast vs shuffle hash join by size), and reassembled
-    in slot order. No driver collect, no memory bound — the 100 TB path.
+  - ``map``: BOTH dictionaries are collected once and broadcast as Python
+    dicts ({var_id: var_str} and {logtype_id: logtype}) into one narrow
+    Arrow-batched UDF: no join and no broadcast-exchange job per query.
+    Valid only while both dictionaries fit ``map_fits`` (CLP bounds
+    dictionary size by splitting archives; batch pipelines at one-archive
+    scope can rely on it).
+  - ``join``: the logtype string is attached with a broadcast join, and
+    dict-var ids are exploded, joined against the dictionary (Catalyst
+    picks broadcast vs shuffle hash join by size) and reassembled in slot
+    order. No driver collect, no memory bound — the 100 TB path.
 
 ``mode="auto"`` picks by dictionary entry count and string bytes
-(``map_fits``), usually from the same bounded collect that builds the map.
-The logtype dictionary is always attached with a broadcast join: it is
-small by design (archives split before it grows).
+(``map_fits``), from the same bounded collects that build the maps.
+
+Both UDFs render rows through compiled logtype templates: each distinct
+logtype is split once per task into literal runs (escapes resolved) and
+placeholder kinds, so a row costs one ``str.format`` over its variables
+instead of a per-character walk of the logtype. Output is bit-exact with
+``ref.encoder.decode_message``.
 """
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from clpspark.ref import encoder as E
@@ -47,7 +55,7 @@ def attach_logtype(df: DataFrame, logtype_dict: DataFrame) -> DataFrame:
     """Attach the logtype string via a broadcast join (no-op if present).
 
     Rows routed under route.UNKNOWN_LOGTYPE_ID carry their own string in
-    ``unseen_logtype`` (the dictionary has no entry for them); it wins the
+    ``unseen_logtype`` (the dictionary has no entry for them); it fills the
     coalesce so quarantined rows still decode verbatim."""
     if "logtype" in df.columns:
         return df
@@ -79,38 +87,35 @@ def map_fits(n_entries: int, n_bytes: int | None) -> bool:
             and (n_bytes or 0) <= AUTO_MAP_MAX_BYTES)
 
 
+def collect_if_fits(df: DataFrame, cols: list[str],
+                    str_col: str | None = None) -> list | None:
+    """Rows of ``df[cols]`` when the table fits ``map_fits`` (counting the
+    characters of ``str_col``, if any), else None. One bounded collect in
+    the common case: the probe rows both decide the gate and are the
+    result; past ``AUTO_MAP_FUSE_ENTRIES`` a stats job decides first."""
+    rows = df.select(*cols).limit(AUTO_MAP_FUSE_ENTRIES + 1).collect()
+    if len(rows) > AUTO_MAP_FUSE_ENTRIES:
+        stats = df.agg(
+            F.count("*").alias("n"),
+            (F.sum(F.length(str_col)) if str_col else F.lit(0)).alias("b"),
+        ).first()
+        if not map_fits(stats["n"], stats["b"]):
+            return None
+        return df.select(*cols).collect()
+    n_bytes = (sum(len(r[str_col]) for r in rows if r[str_col] is not None)
+               if str_col else 0)
+    return rows if map_fits(len(rows), n_bytes) else None
+
+
 def resolve_mode_and_map(var_dict: DataFrame, key_col: str, value_col: str,
                          str_col: str = "var_str"):
-    """(mode, {key: value} or None) in ONE bounded collect for the common
-    case: the probe rows both decide the strategy (``map_fits`` over the
-    ``str_col`` strings) and form the map-mode dictionary, replacing a
-    separate stats job + full collect. Decode keys the map by id, enrich by
-    string."""
-    rows = (
-        var_dict.select(key_col, value_col)
-        .limit(AUTO_MAP_FUSE_ENTRIES + 1)
-        .collect()
-    )
-    if len(rows) > AUTO_MAP_FUSE_ENTRIES:
-        if resolve_decode_mode(var_dict, "auto", str_col) == "join":
-            return "join", None
-        rows = var_dict.select(key_col, value_col).collect()
-    elif not map_fits(len(rows), sum(
-            len(r[str_col]) for r in rows if r[str_col] is not None)):
+    """(mode, {key: value} or None) from ``collect_if_fits``: map mode when
+    the dictionary fits, with the collected rows as the map. Decode keys
+    the map by id, enrich by string."""
+    rows = collect_if_fits(var_dict, [key_col, value_col], str_col)
+    if rows is None:
         return "join", None
     return "map", {r[key_col]: r[value_col] for r in rows}
-
-
-def resolve_decode_and_map(var_dict: DataFrame, var_map_bc=None,
-                           value_col: str = "var_str"):
-    """(mode, var_map_bc) for decode: ``resolve_mode_and_map`` keyed by
-    var_id, broadcast in map mode."""
-    mode, var_map = resolve_mode_and_map(var_dict, "var_id", value_col,
-                                         value_col)
-    if mode == "join":
-        return "join", None
-    return "map", (var_map_bc
-                   or var_dict.sparkSession.sparkContext.broadcast(var_map))
 
 
 def resolve_decode_mode(var_dict: DataFrame, mode: str = "auto",
@@ -160,48 +165,152 @@ def attach_dict_var_strings(
     )
 
 
-def _decode_udf_map(var_map_bc):
+# ------------------------------------------------------- compiled templates
+_BRACES = {"{": "{{", "}": "}}"}
+
+
+def compile_logtype(logtype: str) -> tuple[str, tuple[int, ...],
+                                           tuple[int, ...]]:
+    """Split a logtype once into a ``str.format`` template plus the slot
+    positions of its float and dict placeholders. Literal runs have their
+    escapes resolved (a trailing lone escape is dropped, as in
+    ``decode_message``) and braces doubled; every placeholder is ``{}``,
+    consuming the encoded var of its own slot."""
+    parts: list[str] = []
+    floats: list[int] = []
+    dicts: list[int] = []
+    i, n, slot = 0, len(logtype), 0
+    while i < n:
+        c = logtype[i]
+        if c == E.PLACEHOLDER_ESCAPE:
+            i += 1
+            if i < n:
+                parts.append(_BRACES.get(logtype[i], logtype[i]))
+        elif c in (E.PLACEHOLDER_INT, E.PLACEHOLDER_FLOAT,
+                   E.PLACEHOLDER_DICT):
+            if c == E.PLACEHOLDER_FLOAT:
+                floats.append(slot)
+            elif c == E.PLACEHOLDER_DICT:
+                dicts.append(slot)
+            parts.append("{}")
+            slot += 1
+        else:
+            parts.append(_BRACES.get(c, c))
+        i += 1
+    return "".join(parts), tuple(floats), tuple(dicts)
+
+
+def render(template, encoded_vars: list[int], dict_vars: list[str],
+           decode_float=E.decode_float) -> str:
+    """``decode_message`` over a compiled template. ``encoded_vars`` holds
+    one int64 per placeholder slot (a dict slot's value is not read);
+    ``dict_vars`` the dict-var strings in placeholder order.
+    ``decode_float`` may be a memoized ``encoder.decode_float``."""
+    fmt, floats, dicts = template
+    if not floats and not dicts:
+        return fmt.format(*encoded_vars)
+    vals = list(encoded_vars)
+    for s in floats:
+        vals[s] = decode_float(vals[s])
+    for s, v in zip(dicts, dict_vars):
+        vals[s] = v
+    return fmt.format(*vals)
+
+
+def _decode_udf_map(var_map_bc, lt_map_bc):
+    """Map-mode decode of (logtype_id, fallback logtype string,
+    encoded_vars): the logtype comes from the broadcast logtype map, else
+    from the string column (a ``logtype`` column the events already carry,
+    or the ``unseen_logtype`` of quarantined rows); each dict slot's id
+    resolves through the broadcast var map."""
+    templates: dict[str, tuple] = {}
+
     @F.pandas_udf("string")
-    def dec(lt_s: pd.Series, ev_s: pd.Series, ds_s: pd.Series) -> pd.Series:
+    def dec(lid_s: pd.Series, lt_s: pd.Series,
+            ev_s: pd.Series) -> pd.Series:
         vm = var_map_bc.value
+        lm = lt_map_bc.value if lt_map_bc is not None else {}
+        dec_float = functools.cache(E.decode_float)
         msgs = []
-        for lt, ev, ds in zip(lt_s, ev_s, ds_s):
-            if lt is None:
+        for lid, lt, ev in zip(lid_s.tolist(), lt_s, ev_s):
+            lt_str = lm.get(lid)
+            if lt_str is None:
+                lt_str = lt
+            if lt_str is None:
                 msgs.append(UNKNOWN_LOGTYPE_MARKER)
                 continue
-            slots = set(int(x) for x in ds)
-            evs = [None if i in slots else int(v) for i, v in enumerate(ev)]
-            dvs = [vm.get(int(ev[i]), UNKNOWN_VAR_MARKER) for i in sorted(slots)]
-            msgs.append(E.decode_message(lt, evs, dvs))
+            tpl = templates.get(lt_str)
+            if tpl is None:
+                tpl = templates[lt_str] = compile_logtype(lt_str)
+            evl = ev.tolist()
+            msgs.append(render(
+                tpl, evl,
+                [vm.get(evl[s], UNKNOWN_VAR_MARKER) for s in tpl[2]],
+                dec_float))
         return pd.Series(msgs, dtype=object)
 
     return dec
+
+
+class MapDecoder:
+    """Map-mode decode state: the var dictionary and (unless every event
+    carries its ``logtype`` column) the logtype dictionary, broadcast as
+    Python dicts, and the UDF over them. Build it once per dictionary pair
+    and reuse it: each decode then adds one column and nothing else (a
+    fresh UDF re-pickles its closure on every query)."""
+
+    def __init__(self, spark, var_map: dict, lt_map: dict | None):
+        sc = spark.sparkContext
+        self._has_lt_map = lt_map is not None
+        self._udf = _decode_udf_map(
+            sc.broadcast(var_map),
+            sc.broadcast(lt_map) if lt_map is not None else None,
+        )
+        # decode column per source-column shape; racing builders store
+        # equivalent columns
+        self._cols: dict[tuple[bool, bool], Column] = {}
+
+    def column(self, columns: list[str]) -> Column:
+        """The decoded-message column for events with ``columns``."""
+        key = ("logtype" in columns, "unseen_logtype" in columns)
+        col = self._cols.get(key)
+        if col is None:
+            has_lt, has_unseen = key
+            if has_lt:
+                lid, lt = F.lit(None).cast("bigint"), F.col("logtype")
+            elif not self._has_lt_map:
+                raise ValueError("events lack a logtype column and the "
+                                 "decoder holds no logtype map")
+            else:
+                lid = F.col("logtype_id")
+                lt = (F.col("unseen_logtype") if has_unseen
+                      else F.lit(None).cast("string"))
+            col = self._cols[key] = self._udf(lid, lt, F.col("encoded_vars"))
+        return col
 
 
 def _decode_udf_join():
+    """Join-mode decode of (logtype, encoded_vars, dict-var strings in
+    slot order)."""
+    templates: dict[str, tuple] = {}
+
     @F.pandas_udf("string")
-    def dec(lt_s: pd.Series, ev_s: pd.Series, ds_s: pd.Series,
-            dv_s: pd.Series) -> pd.Series:
+    def dec(lt_s: pd.Series, ev_s: pd.Series, dv_s: pd.Series) -> pd.Series:
+        dec_float = functools.cache(E.decode_float)
         msgs = []
-        for lt, ev, ds, dv in zip(lt_s, ev_s, ds_s, dv_s):
+        for lt, ev, dv in zip(lt_s, ev_s, dv_s):
             if lt is None:
                 msgs.append(UNKNOWN_LOGTYPE_MARKER)
                 continue
-            slots = set(int(x) for x in ds)
-            evs = [None if i in slots else int(v) for i, v in enumerate(ev)]
-            dvs = list(dv) if dv is not None else []
-            msgs.append(E.decode_message(lt, evs, dvs))
+            tpl = templates.get(lt)
+            if tpl is None:
+                tpl = templates[lt] = compile_logtype(lt)
+            msgs.append(render(tpl, ev.tolist(),
+                               list(dv) if dv is not None else [],
+                               dec_float))
         return pd.Series(msgs, dtype=object)
 
     return dec
-
-
-def build_var_map_broadcast(var_dict: DataFrame):
-    """Collect + broadcast the var dictionary for the map strategy (callers
-    may cache this across repeated decodes, e.g. GrepEngine)."""
-    spark = var_dict.sparkSession
-    var_map = {r["var_id"]: r["var_str"] for r in var_dict.collect()}
-    return spark.sparkContext.broadcast(var_map)
 
 
 def decode_messages(
@@ -210,32 +319,45 @@ def decode_messages(
     logtype_dict: DataFrame | None = None,
     mode: str = "auto",
     out_col: str = "message",
-    var_map_bc=None,
+    decoder: MapDecoder | None = None,
 ) -> DataFrame:
     """Add the decoded ``message`` column to encoded/routed events.
 
-    Only the columns the decode needs round-trip through Arrow (narrow scalar
-    pandas UDF; whole-row mapInPandas costs ~10x more).
+    Events that already carry a ``logtype`` column decode from it; others
+    need ``logtype_dict``. A caller that decodes repeatedly over one
+    dictionary pair (GrepEngine) passes its prebuilt ``decoder`` and skips
+    all resolution. Only the columns the decode needs round-trip through
+    Arrow (narrow scalar pandas UDF; whole-row mapInPandas costs ~10x more).
     """
-    if "logtype" not in df.columns:
-        if logtype_dict is None:
-            raise ValueError("events lack a logtype column; pass logtype_dict")
-        df = attach_logtype(df, logtype_dict)
-    if mode == "auto" and var_map_bc is None:
-        mode, var_map_bc = resolve_decode_and_map(var_dict)
-    else:
-        mode = resolve_decode_mode(var_dict, mode)
-    if mode == "map":
-        bc = var_map_bc or build_var_map_broadcast(var_dict)
-        dec = _decode_udf_map(bc)
-        return df.withColumn(
-            out_col, dec(F.col("logtype"), F.col("encoded_vars"),
-                         F.col("dict_slots"))
-        )
+    cols = df.columns
+    has_lt = "logtype" in cols
+    if not has_lt and logtype_dict is None:
+        raise ValueError("events lack a logtype column; pass logtype_dict")
+    if decoder is None:
+        lt_map = None
+        if mode == "auto":
+            if not has_lt:
+                mode, lt_map = resolve_mode_and_map(
+                    logtype_dict, "logtype_id", "logtype", "logtype")
+            if mode != "join":
+                mode, var_map = resolve_mode_and_map(var_dict, "var_id",
+                                                     "var_str")
+        elif resolve_decode_mode(var_dict, mode) == "map":
+            var_map = {r["var_id"]: r["var_str"]
+                       for r in var_dict.select("var_id", "var_str")
+                       .collect()}
+            if not has_lt:
+                lt_map = {r["logtype_id"]: r["logtype"] for r in
+                          logtype_dict.select("logtype_id", "logtype")
+                          .collect()}
+        if mode == "map":
+            decoder = MapDecoder(df.sparkSession, var_map, lt_map)
+    if decoder is not None:
+        return df.withColumn(out_col, decoder.column(cols))
+    df = attach_logtype(df, logtype_dict)
     with_dvs = attach_dict_var_strings(df, var_dict)
     dec = _decode_udf_join()
     return with_dvs.withColumn(
         out_col,
-        dec(F.col("logtype"), F.col("encoded_vars"), F.col("dict_slots"),
-            F.col("_dvs")),
+        dec(F.col("logtype"), F.col("encoded_vars"), F.col("_dvs")),
     ).drop("_dvs")

@@ -96,13 +96,19 @@ def _batch_word_hashes(split_docs: list[list[str]],
     out = np.empty(len(all_words), dtype=np.uint64)
     get = word_cache.get
     bounded = len(word_cache) < _WORD_CACHE_MAX
+    # once the executor memo is full, new words go to a batch-local memo:
+    # hash_fn still runs once per distinct word per batch
+    overflow: dict[str, int] = {}
     for i, w in enumerate(all_words):
         h = get(w)
         if h is None:
-            h = hash_fn(w)
             if bounded:
-                word_cache[w] = h
+                h = word_cache[w] = hash_fn(w)
                 bounded = len(word_cache) < _WORD_CACHE_MAX
+            else:
+                h = overflow.get(w)
+                if h is None:
+                    h = overflow[w] = hash_fn(w)
         out[i] = h
     return out
 
@@ -933,6 +939,19 @@ def dedup_keep(
 # ------------------------------------------------------- embedding near-dup
 
 
+def triu_pair_chunks(n: int, chunk: int):
+    """``np.triu_indices(n, k=1)`` in row-major slices of at most ``chunk``
+    pairs, each derived from its flat pair-offset range: memory stays
+    O(n + chunk) where the full index arrays are O(n^2)."""
+    rows = np.arange(n, dtype=np.int64)
+    row_start = rows * n - rows * (rows + 1) // 2  # first pair of row i
+    total = n * (n - 1) // 2
+    for lo in range(0, total, chunk):
+        p = np.arange(lo, min(lo + chunk, total), dtype=np.int64)
+        i = np.searchsorted(row_start, p, side="right") - 1
+        yield i, p - row_start[i] + i + 1
+
+
 def embedding_dup_pairs(
     emb: DataFrame,
     vec_col: str = "embedding",
@@ -982,15 +1001,13 @@ def embedding_dup_pairs(
         pdf = pdf.sort_values("vid", kind="mergesort", ignore_index=True)
         V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
         nrm = np.sqrt((V * V).sum(axis=1))
-        ii, jj = np.triu_indices(n, k=1)
         vid = pdf["vid"].to_numpy()
         # chunk the pair expansion: a degenerate bucket (skewed sig) has
-        # O(B^2) pairs and V[ii] alone would be pairs x dim x 8 bytes in
-        # one allocation — bound it so only threshold survivors accumulate
+        # O(B^2) pairs, so neither the pair indices nor V[ic] may be built
+        # for the whole bucket — only threshold survivors accumulate
         chunk = max(1, 4_000_000 // max(V.shape[1], 1))
         outs = []
-        for s in range(0, len(ii), chunk):
-            ic, jc = ii[s:s + chunk], jj[s:s + chunk]
+        for ic, jc in triu_pair_chunks(n, chunk):
             dots = (V[ic] * V[jc]).sum(axis=1)
             cos = dots / (nrm[ic] * nrm[jc])
             m = cos >= pre_t

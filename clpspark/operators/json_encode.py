@@ -534,9 +534,10 @@ class JsonArchive:
         kv/KQL value-filter fast path (clp_s dictionary pre-filter).
         Engines are memoized per (leaf, archive version), and the
         dictionary state they lazily resolve (gate-checked logtype entries,
-        decode mode, var-map broadcast) is COPIED between leaf engines —
-        all leaves share one dictionary pair, so a multi-leaf query pays
-        each resolution job once per archive, not once per leaf."""
+        decode mode, dictionary maps and broadcasts) is SHARED between leaf
+        engines — all leaves share one dictionary pair, so a multi-leaf
+        query pays each resolution job once per archive, not once per
+        leaf."""
         return self._leaf_engine(leaf).search(query, **kw)
 
     def _leaf_engine(self, leaf: str):
@@ -549,49 +550,37 @@ class JsonArchive:
             eng = GrepEngine(slice_df, self.logtype_dict, self.var_dict)
             donor = next(iter(engines.values()), None)
             if donor is not None:
-                if donor._logtypes_resolved:
-                    eng._logtypes = donor._logtypes
-                    eng._logtypes_resolved = True
-                if donor._decode_mode != "auto":
-                    eng._decode_mode = donor._decode_mode
-                    eng._var_map_bc = donor._var_map_bc
+                eng._dicts = donor._dicts
             engines[leaf] = eng
         return eng
 
     def prewarm(self) -> None:
-        """Overlap the independent cold dictionary jobs a first query
-        would otherwise pay SERIALLY (gate-checked logtype entries,
-        decode-mode stats + var-map broadcast, VarString logtype id).
-        Results land in the version-checked memos, so a warm archive pays
-        nothing; kql_archive calls this before planning."""
-        from concurrent.futures import ThreadPoolExecutor
-
+        """Resolve the cold dictionary state a first query would otherwise
+        pay piecemeal (gate-checked logtype entries overlapped with the
+        var-dict collect, both broadcasts, VarString logtype id). Results
+        land in the version-checked memos, so a warm archive pays nothing;
+        kql_archive calls this before planning."""
         leaves = sorted(self.leaf_names())
         if not leaves:
             return
         eng = self._leaf_engine(leaves[0])
-        with ThreadPoolExecutor(2) as ex:
-            f_dec = ex.submit(eng._resolve_decode)
-            entries = eng._logtype_entries()
-            if entries is not None:
-                # the gate admitted the FULL dictionary: derive the
-                # VarString logtype id from the collected entries — its
-                # absence there proves there is none (zero extra job)
-                vs = next(
-                    (lid for lid, lt in entries
-                     if lt == _VARSTRING_LOGTYPE), None,
-                )
-                try:
-                    ver = os.stat(
-                        f"{self.dir}/logtype_dict/_SUCCESS"
-                    ).st_mtime_ns
-                except OSError:
-                    ver = None
-                if ver is not None:
-                    self._vs_lid_memo = (ver, vs)
-            else:
-                self._varstring_logtype_id()
-            f_dec.result()
+        eng._resolve_decode()
+        entries = eng._logtype_entries()
+        if entries is None:
+            self._varstring_logtype_id()
+            return
+        # the gate admitted the FULL dictionary: derive the VarString
+        # logtype id from the collected entries — its absence there proves
+        # there is none (zero extra job)
+        vs = next(
+            (lid for lid, lt in entries if lt == _VARSTRING_LOGTYPE), None,
+        )
+        try:
+            ver = os.stat(f"{self.dir}/logtype_dict/_SUCCESS").st_mtime_ns
+        except OSError:
+            ver = None
+        if ver is not None:
+            self._vs_lid_memo = (ver, vs)
 
     def kql(self, query: str, case_sensitive: bool = True,
             project: list[str] | None = None) -> DataFrame:
@@ -745,23 +734,16 @@ class JsonArchive:
     def _decode_slice(self, slice_df: DataFrame) -> DataFrame:
         """Decode any slice of the columns table with the archive-shared
         strategy (all leaves share ONE dictionary pair, so the decode mode
-        and var-map broadcast are resolved once per archive and reused):
+        and dictionary maps are resolved once per archive and reused):
         adds ``value``, keeps the slice's own columns. The single decode
         wiring point for decode_leaf / decode_array_leaf / reconstruct."""
-        from clpspark.operators.decode import decode_messages
-
         leaves = self.leaf_names()
         if not leaves:
             # all-typed archive (no string leaf sinks): the columns table
             # is empty — degrade to an empty decoded slice, same contract
             return slice_df.withColumn("value", F.lit(None).cast("string"))
-        eng = self._leaf_engine(sorted(leaves)[0])
-        eng._resolve_decode()
-        return decode_messages(
-            slice_df, self.var_dict, logtype_dict=self.logtype_dict,
-            out_col="value", mode=eng._decode_mode,
-            var_map_bc=eng._var_map_bc,
-        )
+        return self._leaf_engine(sorted(leaves)[0])._decode(
+            slice_df, out_col="value")
 
     def decode_leaf(self, leaf: str,
                     doc_ids: DataFrame | list | F.Column | None = None,

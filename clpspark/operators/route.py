@@ -123,6 +123,12 @@ def route(
     w.parquet(out_dir)
 
 
+# Declared schema of the var_index table the pipeline writes
+# (snapshots.collect_file_stats_and_var_index): readers pass it to skip the
+# schema-inference job of a plain parquet read.
+VAR_INDEX_SCHEMA = "logtype_id bigint, var_id bigint"
+
+
 def build_var_index(routed: DataFrame) -> DataFrame:
     """(var_id, logtype_id) inverted index over the routed fan-out.
 

@@ -8,19 +8,27 @@ wildcard_match on the decoded message (clp/Grep.cpp:81-140).
 
 Spark-first re-creation (plan-time, no custom Catalyst rules needed):
 
-  1. probe the (small, broadcastable) dictionaries on the driver:
+  1. probe the dictionaries at plan time:
        - exact variable tokens in the query -> encoded int/float literal or
          var-dict ids; a token with no dict match proves the query
          unsatisfiable -> ``lit(False)`` (the reference's WontMatch
          short-circuit, GrepCore.hpp:407-419)
        - a logtype LIKE pattern (query with variable tokens wildcarded)
-         selects candidate logtype_ids -> ``logtype_id.isin([...])``
-  2. the rewritten predicate is handed to Catalyst: isin on the partition
+         selects candidate logtype_ids -> ``logtype_id IN (...)``
+       - dict-var ids select sinks through the (var_id, logtype_id) index
+         and files through the manifest's bloom filters
+     While both dictionaries fit ``decode.map_fits`` (map mode), every
+     probe answers from driver-resident state — the collected maps the
+     decode broadcasts anyway, plus the collected var index — with no
+     Spark job, like CLP's in-memory dictionary readers. Past the gate
+     (join mode) each probe is a filtered Spark scan that returns only
+     the matching ids.
+  2. the rewritten predicate is handed to Catalyst: IN on the partition
      column prunes sinks (partitionBy(logtype_id) layout), array_contains
      prunes rows, all JVM-side
-  3. survivors are decoded (broadcast dict join in an Arrow UDF) and checked
-     with the exact wildcard match — same final-check structure as the
-     reference.
+  3. survivors are decoded (broadcast dictionary maps in one Arrow UDF, or
+     the join strategy) and checked with the exact wildcard match — same
+     final-check structure as the reference.
 
 Everything here is a *pre-filter*: correctness never depends on step 1 being
 tight, only on step 3.
@@ -53,7 +61,7 @@ _ESCAPED = re.compile(r"\\(.)", re.DOTALL)
 LOGTYPE_COLLECT_MAX_ENTRIES = 100_000
 LOGTYPE_COLLECT_MAX_BYTES = 64 << 20
 # A Spark-side probe matching more ids than this carries no pruning power
-# worth an isin() of that size — treat the query as logtype-unconstrained.
+# worth an IN list of that size — treat the query as logtype-unconstrained.
 LOGTYPE_PROBE_MAX_IDS = 10_000
 
 
@@ -177,14 +185,43 @@ def _work_dir_version(work_dir: str) -> tuple:
     return tuple(parts)
 
 
+class _DictState:
+    """Driver-resident state of one (logtype, var) dictionary pair,
+    resolved lazily and at most once. Engines over the same pair (the leaf
+    engines of a JSON archive) share one instance, so each collect runs
+    once per archive. Lock-guarded: engines serve concurrent searches."""
+
+    def __init__(self):
+        self.lock = threading.Lock()
+        # gate-checked (logtype_id, logtype) entries; None past the gate
+        self.logtypes: list[tuple[int, str]] | None = None
+        self.logtypes_resolved = False
+        # resolved decode mode ("map"/"join"); None until resolved
+        self.mode: str | None = None
+        # map mode only: {var_id: var_str} and the decoder broadcasting
+        # it with the logtype map
+        self.var_map: dict[int, str] | None = None
+        self.decoder = None
+        # map mode only: var_str (lowered when ignore_case) -> var ids,
+        # built on first use per case mode
+        self.inverse: dict[bool, dict[str, list[int]]] = {}
+
+
 class GrepEngine:
     """Search engine over a routed/enriched events table + its dictionaries.
 
-    Scale contract: the var dictionary is NEVER fully collected. Plan-time
-    token probes are filtered point lookups (only matching ids come back to
-    the driver), and decode uses a join strategy past a size threshold
-    (decode.py). Only the logtype dictionary — small by design, CLP splits
-    archives to bound it — is collected for the plan-time LIKE probe.
+    Scale contract, per decode mode (decode.py):
+
+      - map (both dictionaries fit ``decode.map_fits``): the var and
+        logtype dictionaries are collected once and broadcast for decode,
+        and the same driver copies — plus the var index, under the same
+        entry gate — answer every plan-time probe. A warm query runs only
+        its own scan.
+      - join (past the gate, or forced): neither dictionary is collected.
+        Plan-time probes are filtered Spark scans (only matching ids come
+        back to the driver) and decode joins. The logtype dictionary is
+        still collected for the LIKE probe while it fits its own, smaller
+        gate (LOGTYPE_COLLECT_MAX_*), unless join mode was forced.
     """
 
     def __init__(self, events: DataFrame, logtype_dict: DataFrame,
@@ -211,14 +248,14 @@ class GrepEngine:
         self.spark = events.sparkSession
         self._lt_df = logtype_dict
         self._vd_df = var_dict
-        # driver-side dictionary entries: resolved lazily on the first
-        # wildcard probe, and only when the dictionary fits the byte gate
-        # (None past the gate -> Spark-side probes)
-        self._logtypes: list[tuple[int, str]] | None = None
-        self._logtypes_resolved = False
+        # requested decode mode; the resolved one lives in self._dicts
         self._decode_mode = decode_mode
-        self._var_map_bc = None
+        self._dicts = _DictState()
         self._var_index = var_index
+        # map mode: {var_id: {logtype_id}} from the var index, collected on
+        # the first dict-var query (None past the gate -> Spark-side probe)
+        self._var_index_by_var: dict[int, set[int]] | None = None
+        self._var_index_resolved = False
         self._snapshot = snapshot
         self._snapshot_table = snapshot_table
         if file_stats is not None:
@@ -255,30 +292,28 @@ class GrepEngine:
         engine after a pipeline re-run (or, at real scale, write fresh
         uniquely-named files per run, which makes old snapshots readable —
         the Iceberg discipline this module mirrors)."""
-        from concurrent.futures import ThreadPoolExecutor
-
+        from clpspark.operators.enrich import (
+            LOGTYPE_DICT_SCHEMA,
+            VAR_DICT_SCHEMA,
+        )
+        from clpspark.operators.route import VAR_INDEX_SCHEMA
         from clpspark.snapshots import SnapshotStore
 
         store = SnapshotStore(work_dir)
         m = store.manifest()
         if m is None:
             raise FileNotFoundError(f"no snapshot under {work_dir}")
-        t = m["tables"]
-        # the four table opens are independent driver-side py4j calls
-        # (file-index build + footer schema read each) — overlap them;
-        # this halves engine construction latency, which is ~half of a
-        # cold single-query search
-        with ThreadPoolExecutor(4) as ex:
-            fr = ex.submit(store.read_table, spark, "routed")
-            fl = ex.submit(store.read_table, spark, "logtype_dict")
-            fv = ex.submit(store.read_table, spark, "var_dict")
-            fi = (ex.submit(store.read_table, spark, "var_index")
-                  if "var_index" in t else None)
+        # the tables the pipeline writes with a declared schema open with
+        # no Spark job; routed keeps inference (its partition column reads
+        # back as int where the written column was bigint)
         return cls(
-            fr.result(),
-            fl.result(),
-            fv.result(),
-            var_index=fi.result() if fi is not None else None,
+            store.read_table(spark, "routed"),
+            store.read_table(spark, "logtype_dict",
+                             schema=LOGTYPE_DICT_SCHEMA),
+            store.read_table(spark, "var_dict", schema=VAR_DICT_SCHEMA),
+            var_index=(store.read_table(spark, "var_index",
+                                        schema=VAR_INDEX_SCHEMA)
+                       if "var_index" in m["tables"] else None),
             snapshot=store,
             **kw,
         )
@@ -289,10 +324,11 @@ class GrepEngine:
         snapshot-backed when a manifest exists (file skipping + exact file
         lists), plain parquet reads (+ var_index when present) otherwise.
 
-        Construction (4 table opens + logtype collect) is ~half of a cold
-        single-query search, so engines are MEMOIZED per (session, dir,
-        archive version): repeated CLI/driver calls against an unchanged
-        archive reuse the built engine; any pipeline re-run bumps the
+        Construction plus the first query's dictionary collects are
+        ~half of a cold single-query search, so engines (and the driver
+        state they resolve) are MEMOIZED per (session, dir, archive
+        version): repeated CLI/driver calls against an unchanged archive
+        reuse the built engine; any pipeline re-run bumps the
         version signature (table _SUCCESS mtimes + snapshot pointer) and
         re-resolves. Only parameterless calls are cached."""
         import os
@@ -325,15 +361,24 @@ class GrepEngine:
             from clpspark.range_index import read_range_index
 
             kw["range_index"] = read_range_index(work_dir)
+        from clpspark.operators.enrich import (
+            LOGTYPE_DICT_SCHEMA,
+            VAR_DICT_SCHEMA,
+        )
+        from clpspark.operators.route import VAR_INDEX_SCHEMA
+
         if os.path.exists(os.path.join(work_dir, "_snapshots", "_current")):
             return cls.from_snapshot(spark, work_dir, **kw)
         idx = os.path.join(work_dir, "var_index")
         return cls(
             spark.read.parquet(os.path.join(work_dir, "routed")),
-            spark.read.parquet(os.path.join(work_dir, "logtype_dict")),
-            spark.read.parquet(os.path.join(work_dir, "var_dict")),
+            spark.read.schema(LOGTYPE_DICT_SCHEMA).parquet(
+                os.path.join(work_dir, "logtype_dict")),
+            spark.read.schema(VAR_DICT_SCHEMA).parquet(
+                os.path.join(work_dir, "var_dict")),
             var_index=(
-                spark.read.parquet(idx) if os.path.exists(idx) else None
+                spark.read.schema(VAR_INDEX_SCHEMA).parquet(idx)
+                if os.path.exists(idx) else None
             ),
             **kw,
         )
@@ -361,21 +406,29 @@ class GrepEngine:
             self.last_scan_files = None
             return self.events
         self.last_scan_files = len(kept)
+        # the full table's schema (incl. the int logtype_id partition
+        # column the pruned read produces) spares an inference job
         return self._snapshot.read_table(
             self.spark, self._snapshot_table,
-            files=[s["file"] for s in kept],
+            files=[s["file"] for s in kept], schema=self.events.schema,
         )
 
     # ------------------------------------------------------------- plan time
     def _probe_var_ids(
         self, tokens: list[str], ignore_case: bool
     ) -> dict[str, list[int]]:
-        """One filtered dictionary scan for all query tokens: returns only
-        the matching (var_str, var_id) rows — a point lookup, not a collect
-        of the dictionary (GrepCore probes its dictionary reader the same
-        way, clp/GrepCore.hpp:328-422)."""
+        """Var-dict ids of every query token. Map mode answers from the
+        driver's inverse of the decode map; join mode runs one filtered
+        dictionary scan that returns only the matching (var_str, var_id)
+        rows — a point lookup, not a collect of the dictionary (GrepCore
+        probes its dictionary reader the same way,
+        clp/GrepCore.hpp:328-422)."""
         if not tokens:
             return {}
+        inv = self._inverse_var_map(ignore_case)
+        if inv is not None:
+            return {t: inv.get(t.lower() if ignore_case else t, [])
+                    for t in tokens}
         key = F.lower(F.col("var_str")) if ignore_case else F.col("var_str")
         probes = [t.lower() for t in tokens] if ignore_case else tokens
         rows = (
@@ -389,6 +442,24 @@ class GrepEngine:
         if ignore_case:
             return {t: out[t.lower()] for t in tokens}
         return out
+
+    def _inverse_var_map(self, ignore_case: bool
+                         ) -> dict[str, list[int]] | None:
+        """var_str (lowered when ``ignore_case``) -> var ids, inverted once
+        per case mode from the map-mode decode map; None in join mode."""
+        d = self._resolve_decode()
+        if d.mode != "map":
+            return None
+        with d.lock:
+            inv = d.inverse.get(ignore_case)
+            if inv is None:
+                inv = {}
+                for vid, vs in d.var_map.items():
+                    if vs is not None:
+                        inv.setdefault(vs.lower() if ignore_case else vs,
+                                       []).append(vid)
+                d.inverse[ignore_case] = inv
+            return inv
 
     def _var_constraints(self, query: str, ignore_case: bool):
         """Dictionary pre-filter: Column predicates + WontMatch detection.
@@ -446,14 +517,12 @@ class GrepEngine:
         if self._var_index is None or not dict_hits:
             return None
         all_ids = sorted({i for ids in dict_hits for i in ids})
-        rows = (
-            self._var_index.where(F.col("var_id").isin(all_ids))
-            .select("var_id", "logtype_id")
-            .collect()
-        )
-        by_var: dict[int, set[int]] = {}
-        for r in rows:
-            by_var.setdefault(r["var_id"], set()).add(r["logtype_id"])
+        by_var = self._var_index_map()
+        if by_var is None:
+            by_var = {}
+            for r in (self._var_index.where(F.col("var_id").isin(all_ids))
+                      .select("var_id", "logtype_id").collect()):
+                by_var.setdefault(r["var_id"], set()).add(r["logtype_id"])
         result: set[int] | None = None
         for ids in dict_hits:
             lts: set[int] = set()
@@ -464,16 +533,41 @@ class GrepEngine:
                 return set()
         return result
 
+    def _var_index_map(self) -> dict[int, set[int]] | None:
+        """{var_id: {logtype_id}} collected once in map mode while the index
+        fits ``decode.map_fits``'s entry gate; None -> Spark-side probes."""
+        with self._state_lock:
+            if self._var_index_resolved:
+                return self._var_index_by_var
+        by_var = None
+        if self._resolve_decode().mode == "map":
+            from clpspark.operators.decode import collect_if_fits
+
+            rows = collect_if_fits(self._var_index, ["var_id", "logtype_id"])
+            if rows is not None:
+                by_var = {}
+                for vid, lid in rows:
+                    by_var.setdefault(vid, set()).add(lid)
+        with self._state_lock:
+            if not self._var_index_resolved:
+                self._var_index_by_var = by_var
+                self._var_index_resolved = True
+            return self._var_index_by_var
+
     def _logtype_entries(self) -> list[tuple[int, str]] | None:
         """Driver-side (logtype_id, logtype) list when the dictionary fits
-        the entry/byte gate, else None (probes stay Spark-side). One
-        limit-bounded collect resolves both gates — never an unbounded
-        collect of an oversized dictionary."""
-        with self._state_lock:
-            if self._logtypes_resolved:
-                return self._logtypes
-        # collect OUTSIDE the lock: prewarm overlaps this job with the
-        # decode resolution on another thread (racing builders are rare
+        the entry/byte gate, else None (probes stay Spark-side), and always
+        None when join mode was forced. One limit-bounded collect resolves
+        both gates — never an unbounded collect of an oversized
+        dictionary."""
+        if self._decode_mode == "join":
+            return None
+        d = self._dicts
+        with d.lock:
+            if d.logtypes_resolved:
+                return d.logtypes
+        # collect OUTSIDE the lock: _resolve_decode overlaps this job with
+        # the var-dict collect on another thread (racing builders are rare
         # and both produce the same value; first publisher wins)
         rows = (
             self._lt_df.select("logtype_id", "logtype")
@@ -488,23 +582,23 @@ class GrepEngine:
             [(r["logtype_id"], r["logtype"]) for r in rows]
             if small else None
         )
-        with self._state_lock:
-            if not self._logtypes_resolved:
-                self._logtypes = val
-                self._logtypes_resolved = True
-            return self._logtypes
+        with d.lock:
+            if not d.logtypes_resolved:
+                d.logtypes = val
+                d.logtypes_resolved = True
+            return d.logtypes
 
     def _candidate_logtype_ids(
         self, query: str, ignore_case: bool
     ) -> list[int] | None:
         """Sink ids whose logtype can match the query's pattern; None = no
         pruning signal (all-wildcard pattern, or a large-dictionary probe
-        matching too many ids to be worth an isin)."""
+        matching too many ids to be worth an IN list)."""
         pat = _logtype_like_pattern(query)
         if ignore_case:
             pat = pat.lower()
         if pat.strip("%") == "":
-            return None  # matches every logtype: isin(everything) is noise
+            return None  # matches every logtype: IN (everything) is noise
         entries = self._logtype_entries()
         if entries is not None:
             like = _sql_like_match(pat)
@@ -600,7 +694,11 @@ class GrepEngine:
 
                 if UNKNOWN_LOGTYPE_ID not in lids:
                     lids = [*lids, UNKNOWN_LOGTYPE_ID]
-                df = df.where(F.col("logtype_id").isin(lids))
+                # one parsed expression, not isin(): that converts each
+                # literal through py4j (~140 ms for ~54 ids)
+                df = df.where(F.expr(
+                    f"logtype_id IN ({', '.join(str(int(i)) for i in lids)})"
+                ))
             for p in preds:
                 df = df.where(p)
         out = self._final_match(self._decode(df), q, ignore_case)
@@ -704,51 +802,72 @@ class GrepEngine:
                 )
             delta *= 4
 
-    def _decode(self, df: DataFrame) -> DataFrame:
-        """Reconstruct messages of (pre-filtered) survivors.
-
-        Delegates to decode.decode_messages: broadcast-map decode while the
-        var dictionary is small, join decode (no driver collect) beyond —
-        and a broadcast join for the logtype string, which routed sinks no
-        longer carry (ids only, like CLP archives)."""
+    def _decode(self, df: DataFrame, out_col: str = "message") -> DataFrame:
+        """Reconstruct messages of (pre-filtered) survivors with the
+        engine's resolved strategy (decode.decode_messages): the engine's
+        MapDecoder over both broadcast dictionaries in map mode, joins in
+        join mode."""
         from clpspark.operators.decode import decode_messages
 
-        self._resolve_decode()
+        d = self._resolve_decode()
         return decode_messages(
             df,
             self._vd_df,
             logtype_dict=self._lt_df,
-            mode=self._decode_mode,
-            var_map_bc=self._var_map_bc,
+            mode=d.mode,
+            out_col=out_col,
+            decoder=d.decoder,
         )
 
-    def _resolve_decode(self) -> None:
-        """Resolve the decode strategy (+ var-map broadcast) once; also
-        called by JsonArchive.prewarm to overlap this job with the other
-        cold dictionary probes."""
-        from clpspark.operators.decode import (
-            build_var_map_broadcast,
-            resolve_decode_and_map,
-        )
+    def _resolve_decode(self) -> _DictState:
+        """Resolve the decode strategy once. Map mode (auto, when both
+        dictionaries fit ``decode.map_fits``, or forced) collects both
+        dictionaries — the var-dict collect overlapping the logtype one —
+        and broadcasts them; join mode collects neither."""
+        d = self._dicts
+        with d.lock:
+            if d.mode is not None:
+                return d
+        mode = self._decode_mode
+        if mode not in ("auto", "map", "join"):
+            raise ValueError(f"unknown decode mode: {mode}")
+        var_map = lt_map = None
+        if mode != "join":
+            from concurrent.futures import ThreadPoolExecutor
 
-        def _unresolved() -> bool:
-            return self._decode_mode == "auto" or (
-                self._decode_mode == "map" and self._var_map_bc is None
-            )
+            from clpspark.operators.decode import collect_if_fits, map_fits
 
-        with self._state_lock:
-            if not _unresolved():
-                return
-            mode = self._decode_mode
-        # the Spark job runs OUTSIDE the lock (prewarm overlaps it with
-        # the logtype collect); first publisher wins
-        if mode == "auto":
-            new_mode, bc = resolve_decode_and_map(self._vd_df)
-        else:
-            new_mode, bc = "map", build_var_map_broadcast(self._vd_df)
-        with self._state_lock:
-            if _unresolved():
-                self._decode_mode, self._var_map_bc = new_mode, bc
+            def var_rows():
+                if mode == "map":
+                    return self._vd_df.select("var_id", "var_str").collect()
+                return collect_if_fits(self._vd_df, ["var_id", "var_str"],
+                                       "var_str")
+
+            # the Spark jobs run OUTSIDE the lock; first publisher wins
+            with ThreadPoolExecutor(1) as ex:
+                f_var = ex.submit(var_rows)
+                entries = self._logtype_entries()
+                rows = f_var.result()
+            if entries is not None and map_fits(
+                    len(entries), sum(len(lt) for _, lt in entries)):
+                lt_map = dict(entries)
+            elif mode == "map":
+                lt_map = {r["logtype_id"]: r["logtype"] for r in
+                          self._lt_df.select("logtype_id", "logtype")
+                          .collect()}
+            if rows is not None and lt_map is not None:
+                var_map = {r["var_id"]: r["var_str"] for r in rows}
+        with d.lock:
+            if d.mode is None:
+                if var_map is None:
+                    d.mode = "join"
+                else:
+                    from clpspark.operators.decode import MapDecoder
+
+                    d.mode = "map"
+                    d.var_map = var_map
+                    d.decoder = MapDecoder(self.spark, var_map, lt_map)
+            return d
 
     @staticmethod
     def _final_match(decoded: DataFrame, q: str, ignore_case: bool) -> DataFrame:

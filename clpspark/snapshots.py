@@ -48,9 +48,11 @@ O(sinks + heavy-sink-splits) files, not O(tasks x sinks).
 
 Hash parity note: bloom positions are computed with Spark's ``xxhash64``
 (salted with a literal seed column). Probe-side positions are computed by
-the SAME Spark expression over the candidate ids (a one-row-per-id local
-job), so build and probe agree by construction — no Python reimplementation
-of Spark's hash to drift out of sync.
+the SAME Spark expression over the candidate ids, projected over an inline
+``VALUES`` table: the optimizer folds that local relation on the driver, so
+the probe runs no Spark job, and build and probe agree by construction — no
+Python reimplementation of Spark's hash to drift out of sync (and no py4j
+call into ``XXH64``, whose static overloads py4j resolves unreliably).
 """
 
 from __future__ import annotations
@@ -311,19 +313,20 @@ def probe_positions(
 ) -> dict[int, list[int]]:
     """Bloom bit positions for candidate var ids — computed with the SAME
     Spark xxhash64 expression as the build side (hash parity by
-    construction). One local job over len(var_ids) rows."""
+    construction). A projection over an inline ``VALUES`` table is a local
+    relation the optimizer folds on the driver: no Spark job."""
     if not var_ids:
         return {}
-    df = spark.createDataFrame([(int(v),) for v in var_ids], "v: long")
-    cols = [
-        F.pmod(F.xxhash64(F.col("v"), F.lit(seed)), F.lit(bloom_bits)).alias(
-            f"p{j}"
-        )
+    cols = ", ".join(
+        f"pmod(xxhash64(v, {seed}), {bloom_bits}) AS p{j}"
         for j, seed in enumerate(BLOOM_SEEDS)
-    ]
+    )
+    rows = ", ".join(f"(CAST({int(v)} AS BIGINT))" for v in var_ids)
     return {
         r["v"]: [r[f"p{j}"] for j in range(len(BLOOM_SEEDS))]
-        for r in df.select("v", *cols).collect()
+        for r in spark.sql(
+            f"SELECT v, {cols} FROM VALUES {rows} AS t(v)"
+        ).collect()
     }
 
 
@@ -446,24 +449,28 @@ class SnapshotStore:
         name: str,
         files: list[str] | None = None,
         version: int | None = None,
+        schema=None,
     ) -> DataFrame:
         """Read EXACTLY the snapshot's files (or a pruned subset of them).
         ``basePath`` keeps directory-derived partition columns (logtype_id)
-        alive even when single files are addressed directly."""
+        alive even when single files are addressed directly. ``schema``
+        (DDL string or StructType, incl. any partition column) skips the
+        schema-inference job of a plain parquet read."""
         m = self.manifest(version)
         if m is None or name not in m["tables"]:
             raise KeyError(f"no snapshot table: {name}")
         t = m["tables"][name]
         rel = files if files is not None else t["files"]
-        base = os.path.join(self.root, t.get("base", ""))
-        paths = [os.path.join(self.root, f) for f in rel]
-        if not paths:
+        reader = spark.read.option(
+            "basePath", os.path.join(self.root, t.get("base", "")))
+        if schema is not None:
+            reader = reader.schema(schema)
+        if not rel:
             # empty prune: preserve schema from the full table
-            full = spark.read.option("basePath", base).parquet(
+            return reader.parquet(
                 *[os.path.join(self.root, f) for f in t["files"]]
-            )
-            return full.where(F.lit(False))
-        return spark.read.option("basePath", base).parquet(*paths)
+            ).where(F.lit(False))
+        return reader.parquet(*[os.path.join(self.root, f) for f in rel])
 
     def stats(self, name: str, version: int | None = None) -> list[dict]:
         m = self.manifest(version)

@@ -108,6 +108,43 @@ def test_spaced_work_dir_manifest_and_search(spark, spaced_work):
     assert eng.search("*").count() == 1000
 
 
+def _jobs(sc, label: str, fn):
+    """(Spark jobs launched by ``fn()``, its result), from the job-id delta
+    between marker jobs."""
+    before = _marker_job_id(sc, f"{label}-before")
+    out = fn()
+    return _marker_job_id(sc, f"{label}-after") - before - 1, out
+
+
+def test_grep_warm_job_budget(spark, spaced_work):
+    """A warm engine answers every plan-time question on the driver: the
+    open runs no dictionary inference job, search() of a present-dict
+    needle launches no job, and a needle or haystack count launches at
+    most 2 (the scan and its aggregate)."""
+    from clpspark.plans.grep import GrepEngine
+
+    sc = spark.sparkContext
+    vd = spark.read.parquet(os.path.join(spaced_work, "var_dict"))
+    var = next(r["var_str"] for r in vd.orderBy("var_id").collect()
+               if len(r["var_str"]) > 4
+               and not any(c in r["var_str"] for c in "*?\\"))
+    needle, haystack = f"* {var} *", f"*{var[1:4]}*"
+    open_jobs, eng = _jobs(sc, "grep-open", lambda: GrepEngine.from_snapshot(
+        spark, spaced_work))
+    assert open_jobs <= 2  # routed: schema inference (+ listing)
+    expected = {q: eng.search(q, prefilter=False).count()
+                for q in (needle, haystack)}
+    assert expected[needle] > 0
+    for q in (needle, haystack):  # first sight resolves the engine state
+        assert eng.search(q).count() == expected[q], q
+    assert eng._dicts.mode == "map"
+    plan_jobs, df = _jobs(sc, "grep-plan", lambda: eng.search(needle))
+    assert plan_jobs == 0
+    for q in (needle, haystack):
+        n_jobs, n = _jobs(sc, "grep-count", lambda: eng.search(q).count())
+        assert n == expected[q] and n_jobs <= 2, (q, n_jobs)
+
+
 def _outputs(spark, work: str) -> dict:
     """Routed rows + per-sink file sizes, aggregate rows, route audit."""
     out = {}
@@ -163,14 +200,16 @@ def test_resume_after_dicts_equals_fresh_run(spark, small_corpus, tmp_path,
 
 def test_dict_stats_match_tables(spark, spaced_work):
     """The committed dictionary stats equal the written tables, whose
-    schemas are the declared dictionary schemas."""
+    schemas are the declared dictionary and var-index schemas."""
     from pyspark.sql import functions as F
 
     from clpspark.operators.enrich import LOGTYPE_DICT_SCHEMA, VAR_DICT_SCHEMA
+    from clpspark.operators.route import VAR_INDEX_SCHEMA
 
     m = LineageLog(spaced_work).metrics("dicts")
     for t, ddl in (("logtype_dict", LOGTYPE_DICT_SCHEMA),
-                   ("var_dict", VAR_DICT_SCHEMA)):
+                   ("var_dict", VAR_DICT_SCHEMA),
+                   ("var_index", VAR_INDEX_SCHEMA)):
         path = os.path.join(spaced_work, t)
         assert (spark.read.parquet(path).schema.simpleString()
                 == spark.read.schema(ddl).parquet(path).schema.simpleString())

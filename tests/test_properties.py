@@ -388,3 +388,59 @@ def test_range_index_match_equals_brute_force(sizes_fields, filters, cs):
         )
     }
     assert got == want
+
+
+# logtype bytes incl. every placeholder, the escape byte and str.format's
+# braces; a logtype may end in a lone escape
+_LOGTYPE = st.text(alphabet="ab {}.:\\\x11\x12\x13", max_size=40)
+_FLOAT_STR = st.from_regex(r"\A-?[0-9]{0,9}\.[0-9]{1,9}\Z")
+
+
+@settings(max_examples=500, deadline=None)
+@given(_LOGTYPE, st.data())
+def test_template_decode_equals_decode_message(logtype, data):
+    """Compiled-template decode (both UDF row shapes) is bit-exact with
+    encoder.decode_message: escaped placeholders, trailing escapes,
+    negative and edge floats, and unknown dict ids (<unk>)."""
+    from clpspark.operators import decode as D
+
+    tpl = D.compile_logtype(logtype)
+    kinds = [c for i, c in enumerate(logtype)
+             if c in "\x11\x12\x13"
+             and (len(logtype[:i]) - len(logtype[:i].rstrip("\\"))) % 2 == 0]
+    var_map = {7: "known", 8: "{x}", 9: "\\"}
+    ev_full: list[int] = []  # every slot's int64 (dict slots: the id)
+    evs: list[int | None] = []  # decode_message's shape (dict slots: None)
+    dvs: list[str] = []
+    for k in kinds:
+        if k == "\x11":
+            v = data.draw(st.integers(-(2**63), 2**63 - 1))
+        elif k == "\x13":
+            v = data.draw(_FLOAT_STR.map(E.encode_float).filter(
+                lambda x: x is not None))
+        else:
+            vid = data.draw(st.sampled_from([7, 8, 9, 123456, -1]))
+            ev_full.append(vid)
+            evs.append(None)
+            dvs.append(var_map.get(vid, D.UNKNOWN_VAR_MARKER))
+            continue
+        ev_full.append(v)
+        evs.append(v)
+    expected = E.decode_message(logtype, evs, dvs)
+    # join-mode row: dict strings arrive in slot order
+    assert D.render(tpl, ev_full, dvs) == expected
+    # map-mode row: dict slots resolve through the var map
+    assert D.render(tpl, ev_full, [
+        var_map.get(ev_full[s], D.UNKNOWN_VAR_MARKER) for s in tpl[2]
+    ]) == expected
+
+
+@settings(max_examples=300, deadline=None)
+@given(_TEXT)
+def test_template_decode_roundtrip(msg):
+    """encode_message output decodes back through its compiled template."""
+    from clpspark.operators import decode as D
+
+    em = E.encode_message(msg)
+    ev = [0 if v is None else v for v in em.encoded_vars]
+    assert D.render(D.compile_logtype(em.logtype), ev, em.dict_vars) == msg

@@ -327,8 +327,13 @@ def test_grep_dict_var_prefilter(grep_setup):
 
 def test_grep_join_decode_matches_map(grep_setup, spark, vocab_meta,
                                       small_corpus):
-    """Huge-dict regime: ids-only events + forced join decode (no var-dict
-    collect anywhere) return the same matches as the broadcast-map engine."""
+    """Huge-dict regime: ids-only events + forced join mode (Spark-side
+    probes and join decode, no collect of either dictionary) return the
+    same matches as the map engine, whose probes answer from its driver
+    maps — for haystacks, dict, number and absent needles, and
+    case-insensitive queries."""
+    import re
+
     engine, msgs = grep_setup
     df = spark.read.parquet(small_corpus)
     parsed = parse_sequences(df, vocab_meta.vocab)
@@ -336,14 +341,65 @@ def test_grep_join_decode_matches_map(grep_setup, spark, vocab_meta,
     vd = build_var_dict(parsed)
     events = enrich(parsed, lt, vd).drop("logtype", "dict_vars")
     engine_join = GrepEngine(events, lt, vd, decode_mode="join")
-    for q in ["*heartbeat*", "* INFO Task * completed in * ms",
-              r"*back\\slash pass*"]:
+    rests = [rest for _, (_ts, rest) in sorted(msgs.items())]
+    tok = next(m.group(1) for m in map(
+        re.compile(r"container (\S+) with").search, rests)
+        if m and not any(c in m.group(1) for c in "*?\\"))
+    val = next(m.group(1) for m in map(
+        re.compile(r" (\d{3,}) ms$").search, rests) if m)
+    queries = [
+        ("*heartbeat*", False, True),
+        ("* INFO Task * completed in * ms", False, True),
+        (r"*back\\slash pass*", False, True),
+        (f"* container {tok} with image *", False, True),  # dict needle
+        (f"* {val} ms", False, True),  # number needle
+        ("* zzz_absent_var9 *", False, False),  # absent needle
+        ("*connection*", True, True),
+        (f"* CONTAINER {tok.upper()} WITH image *", True, True),
+    ]
+    for q, ic, nonempty in queries:
         got = {(r["doc_id"], r["message"])
-               for r in engine_join.search(q).collect()}
+               for r in engine_join.search(q, ignore_case=ic).collect()}
         expected = {(r["doc_id"], r["message"])
-                    for r in engine.search(q).collect()}
+                    for r in engine.search(q, ignore_case=ic).collect()}
         assert got == expected, q
-        assert got
+        assert bool(got) == nonempty, q
+        assert {d for d, _ in got} == _oracle_matches(msgs, q, ic), q
+    assert engine._dicts.mode == "map"
+    d = engine_join._dicts
+    assert d.mode == "join" and d.var_map is None and d.decoder is None
+    assert not d.logtypes_resolved  # the logtype dictionary stayed put
+
+
+def test_grep_state_resolves_once_under_threads(grep_setup):
+    """Concurrent first queries on a cold engine race their dictionary
+    collects, but publish ONE decoder and one inverse map per case mode:
+    every thread gets the same objects, and they answer like the warm
+    engine."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    engine, _ = grep_setup
+    cold = GrepEngine(engine.events, engine._lt_df, engine._vd_df)
+
+    def first_query(ignore_case):
+        return (ignore_case, cold._resolve_decode().decoder,
+                cold._inverse_var_map(ignore_case))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as ex:
+            futs = [ex.submit(first_query, i % 2 == 0) for i in range(16)]
+            got = [f.result(timeout=300) for f in futs]
+    finally:
+        sys.setswitchinterval(old)
+    assert len({id(dec) for _, dec, _ in got}) == 1
+    for case in (False, True):
+        invs = {id(inv) for ic, _, inv in got if ic == case}
+        assert len(invs) == 1
+        assert next(inv for ic, _, inv in got if ic == case) == \
+            engine._inverse_var_map(case)
 
 
 def test_ordered_subsequence_prefilter(spark):

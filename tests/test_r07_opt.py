@@ -87,3 +87,62 @@ def test_emb_dup_pairs_chunked_bucket(spark):
     # identical-direction vectors: every in-bucket pair has cosine 1.0
     assert len(out) > 0
     assert all(abs(r["cosine"] - 1.0) < 1e-9 for r in out)
+
+
+@pytest.mark.parametrize("n", [0, 1, 2, 5, 17, 64])
+def test_triu_pair_chunks_equal_triu_indices(n):
+    """Per-chunk pair indices concatenate to np.triu_indices(n, k=1), for
+    chunks that split rows anywhere."""
+    import numpy as np
+
+    ii, jj = np.triu_indices(n, k=1)
+    for chunk in (1, 3, n + 1, 10_000):
+        parts = list(dd.triu_pair_chunks(n, chunk))
+        assert all(len(i) <= chunk for i, _ in parts)
+        got_i = np.concatenate([i for i, _ in parts] or [np.empty(0, int)])
+        got_j = np.concatenate([j for _, j in parts] or [np.empty(0, int)])
+        assert got_i.tolist() == ii.tolist() and got_j.tolist() == jj.tolist()
+
+
+def test_triu_pair_chunks_memory_tracks_chunk():
+    """A 100k-vector bucket (~5e9 pairs; triu_indices would need ~80 GB)
+    costs memory proportional to the chunk, not to the pair count."""
+    import tracemalloc
+
+    import numpy as np
+
+    n, chunk = 100_000, 20_000
+    tracemalloc.start()
+    try:
+        chunks = dd.triu_pair_chunks(n, chunk)
+        for _ in range(3):
+            i, j = next(chunks)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    # a few n-sized (row starts) and chunk-sized int64 arrays
+    assert peak < 4 * 8 * n + 8 * 8 * chunk, peak
+    assert (i < j).all() and i[0] == 0 and j[0] == 2 * chunk + 1
+
+
+def test_word_hashes_overflow_memo(monkeypatch):
+    """Past the executor memo cap, each distinct word of a batch is still
+    hashed once (batch-local memo), with the same hashes as uncapped."""
+    calls = []
+
+    def counting_hash(w):
+        calls.append(w)
+        return len(w) * 1_000_003 + ord(w[0])
+
+    docs = [["a", "b", "c", "d", "a"], ["d", "e", "c", "e", "a", "f"]]
+    expected = dd._batch_word_hashes(docs, {}, counting_hash)
+    calls.clear()
+    monkeypatch.setattr(dd, "_WORD_CACHE_MAX", 2)
+    cache: dict[str, int] = {}
+    got = dd._batch_word_hashes(docs, cache, counting_hash)
+    assert got.tolist() == expected.tolist()
+    assert sorted(calls) == sorted(set(calls)) == list("abcdef")
+    assert len(cache) == 2
+    calls.clear()
+    dd._batch_word_hashes(docs, cache, counting_hash)  # next batch
+    assert sorted(calls) == list("cdef")  # a, b stay memoized

@@ -110,6 +110,28 @@ def test_file_stats_no_false_negatives(spark, snap_work):
     assert misses == 0
 
 
+def test_probe_positions_match_build_expression(spark):
+    """probe_positions (a driver-folded VALUES projection) equals the
+    build side's pmod(xxhash64(id, seed), bits) over a DataFrame column,
+    for negative ids and ids at and past 2^31 and 2^40."""
+    from clpspark.snapshots import BLOOM_SEEDS
+
+    ids = [0, 1, -1, -2, -(2**63), 2**31 - 1, 2**31, 2**32 + 5, 2**40,
+           2**40 + 123, 2**62, 2**63 - 1]
+    bits = 2048
+    df = spark.range(1).select(F.explode(F.array(
+        *[F.lit(i).cast("bigint") for i in ids])).alias("v"))
+    built = {
+        r["v"]: [r[f"p{j}"] for j in range(len(BLOOM_SEEDS))]
+        for r in df.select("v", *[
+            F.pmod(F.xxhash64(F.col("v"), F.lit(seed)), F.lit(bits))
+            .alias(f"p{j}") for j, seed in enumerate(BLOOM_SEEDS)
+        ]).collect()
+    }
+    assert probe_positions(spark, ids, bits) == built
+    assert len(built) == len(ids)
+
+
 def test_prune_by_time_and_bloom(spark, snap_work):
     store = SnapshotStore(snap_work)
     stats = store.stats("routed")

@@ -75,6 +75,68 @@ def test_unknown_var_sentinel_roundtrip(spark):
         assert decoded["message"] == f"login {UNKNOWN_VAR_MARKER} ok", mode
 
 
+def test_decode_modes_quarantine_rows(spark):
+    """Both decode strategies (map: both dictionaries broadcast; join)
+    reproduce encoder.decode_message over ids-only rows: escaped
+    placeholder bytes, negative/edge numbers, an id absent from the var
+    dictionary (<unk>), a quarantined row whose logtype lives only in
+    unseen_logtype, and a logtype id with no string at all."""
+    from clpspark.operators.decode import (
+        UNKNOWN_LOGTYPE_MARKER,
+        UNKNOWN_VAR_MARKER,
+        decode_messages,
+    )
+    from clpspark.operators.route import UNKNOWN_LOGTYPE_ID
+    from clpspark.ref import encoder as E
+
+    msgs = [
+        "job j-17 done in -42 ms ratio -0.50 at {0} \\ end\\",
+        "esc\x11 \x12 \x13 raw user_7 x=.5 y=9223372036854775807",
+        "only constants here",
+        "user_7 and user_8 and user_9",
+        "quarantined node-3 at 1.25",
+    ]
+    lt_ids: dict[str, int] = {}
+    var_ids: dict[str, int] = {}
+    rows, expected = [], {}
+    for i, msg in enumerate(msgs):
+        em = E.encode_message(msg)
+        ev, ds = [], []
+        for slot, v in enumerate(em.encoded_vars):
+            if v is None:
+                ds.append(slot)
+            ev.append(v)
+        dvs = list(em.dict_vars)
+        for j, slot in enumerate(ds):
+            if dvs[j] == "user_9":  # never entered into the var dictionary
+                ev[slot], dvs[j] = 99_999, UNKNOWN_VAR_MARKER
+            else:
+                ev[slot] = var_ids.setdefault(dvs[j], len(var_ids))
+        evs = [None if k in ds else v for k, v in enumerate(ev)]
+        want = E.decode_message(em.logtype, evs, dvs)
+        if msg.startswith("quarantined"):
+            lid, unseen = UNKNOWN_LOGTYPE_ID, em.logtype
+        else:
+            lid, unseen = lt_ids.setdefault(em.logtype, len(lt_ids)), None
+        rows.append((f"d{i}", lid, unseen, ev, ds))
+        expected[f"d{i}"] = want
+    rows.append(("lost", 555, None, [], []))
+    expected["lost"] = UNKNOWN_LOGTYPE_MARKER
+    events = spark.createDataFrame(
+        rows, "doc_id string, logtype_id bigint, unseen_logtype string, "
+        "encoded_vars array<bigint>, dict_slots array<int>")
+    lt = spark.createDataFrame(list(lt_ids.items()),
+                               "logtype string, logtype_id bigint")
+    vd = spark.createDataFrame(
+        [(s, i) for s, i in var_ids.items() if s != "user_9"],
+        "var_str string, var_id bigint")
+    assert expected["d0"] == msgs[0] and UNKNOWN_VAR_MARKER in expected["d3"]
+    for mode in ("auto", "map", "join"):
+        got = {r["doc_id"]: r["message"] for r in decode_messages(
+            events, vd, logtype_dict=lt, mode=mode).collect()}
+        assert got == expected, mode
+
+
 def test_stream_route_matches_batch(spark, vocab_meta, small_corpus, tmp_path):
     batch_parsed = parse_sequences(
         spark.read.parquet(small_corpus), vocab_meta.vocab
