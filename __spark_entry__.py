@@ -404,7 +404,7 @@ def _q_docs_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DSIR distribution aggregation) — they are independent, so construct
     # them concurrently instead of serializing the eager parts (guide
     # §2.6 overlap; results unchanged)
-    from concurrent.futures import ThreadPoolExecutor
+    from clpspark.operators.util import run_jobs
 
     def _build_budget():
         return (
@@ -423,11 +423,9 @@ def _q_docs_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit("dsir").alias("method"), "doc_id", "lang")
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        budget_f = pool.submit(_build_budget)
-        dsir_f = pool.submit(_build_dsir)
-        budget = budget_f.result()
-        dsir = dsir_f.result()
+    built = run_jobs(spark, {"budget": _build_budget, "dsir": _build_dsir},
+                     max_workers=2)
+    budget, dsir = built["budget"], built["dsir"]
     return (strat.unionAll(topn).unionAll(budget).unionAll(dsir)
             .orderBy("method", "doc_id"))
 

@@ -16,6 +16,7 @@ dictionaries, exactly like the reference's per-archive search tasks.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -265,9 +266,8 @@ def search_json_archives(
     archives newest-first in batches and stop planning/running once
     ``limit`` rows exist (OutputHandler.hpp:188-201 early-exit analog) —
     the result is capped to the newest archives' matches."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from clpspark.operators.json_encode import JsonArchive
+    from clpspark.operators.util import run_jobs
     from clpspark.plans.kql_archive import kql_archive
 
     selected = select_archives(spark, catalog_dir, tags=tags, tge=tge,
@@ -287,8 +287,7 @@ def search_json_archives(
     if not json_archives:
         return None
 
-    def _plan(item: tuple[str, str]) -> DataFrame:
-        archive_id, path = item
+    def _plan(archive_id: str, path: str) -> DataFrame:
         # shared handle: per-archive engine/leaf memos amortize across
         # repeated catalog searches (version-validated, rewrite-safe)
         arch = JsonArchive.open(spark, path)
@@ -320,34 +319,37 @@ def search_json_archives(
             )
         return hits.withColumn("archive_id", F.lit(archive_id))
 
-    with ThreadPoolExecutor(min(8, len(json_archives))) as pool:
-        if limit is None:
-            parts = list(pool.map(_plan, json_archives))
-            return _tree_union(parts, allow_missing=True)
-        # newest-first early exit (select_archives orders by end_ts DESC).
-        # Each batch's matches are localCheckpoint-materialized (tiny:
-        # matching rows only, GC-released) so the per-batch limit check and
-        # the final collect never re-execute earlier batches' searches —
-        # without it the loop is quadratic in batches when matches are rare.
-        out: DataFrame | None = None
-        n_rows = 0
-        batch = 8
-        for i in range(0, len(json_archives), batch):
-            parts = list(pool.map(_plan, json_archives[i:i + batch]))
-            grown = _tree_union(parts, allow_missing=True).localCheckpoint(
-                eager=True
-            )
-            got = grown.count()
-            if n_rows + got > limit:
-                # the final batch overshoots: trim IT, never the union — a
-                # trailing limit() over the whole union could displace
-                # earlier (newer-archive) rows with this batch's
-                grown = grown.limit(limit - n_rows)
-                got = limit - n_rows
-            n_rows += got
-            out = grown if out is None else out.unionByName(
-                grown, allowMissingColumns=True
-            )
-            if n_rows >= limit:
-                break
-        return out
+    def _plans(items: list[tuple[str, str]]) -> list[DataFrame]:
+        return list(run_jobs(spark, {
+            aid: functools.partial(_plan, aid, path) for aid, path in items
+        }, max_workers=min(8, len(json_archives))).values())
+
+    if limit is None:
+        return _tree_union(_plans(json_archives), allow_missing=True)
+    # newest-first early exit (select_archives orders by end_ts DESC).
+    # Each batch's matches are localCheckpoint-materialized (tiny: matching
+    # rows only, GC-released) so the per-batch limit check and the final
+    # collect never re-execute earlier batches' searches — without it the
+    # loop is quadratic in batches when matches are rare.
+    out: DataFrame | None = None
+    n_rows = 0
+    batch = 8
+    for i in range(0, len(json_archives), batch):
+        parts = _plans(json_archives[i:i + batch])
+        grown = _tree_union(parts, allow_missing=True).localCheckpoint(
+            eager=True
+        )
+        got = grown.count()
+        if n_rows + got > limit:
+            # the final batch overshoots: trim IT, never the union — a
+            # trailing limit() over the whole union could displace earlier
+            # (newer-archive) rows with this batch's
+            grown = grown.limit(limit - n_rows)
+            got = limit - n_rows
+        n_rows += got
+        out = grown if out is None else out.unionByName(
+            grown, allowMissingColumns=True
+        )
+        if n_rows >= limit:
+            break
+    return out

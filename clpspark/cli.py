@@ -105,7 +105,6 @@ def cmd_compress(args) -> int:
         tags=tuple(args.tag or ()),
         catalog_dir=args.catalog,
         dataset=args.dataset,
-        snapshot=not args.no_snapshot,
         # $-namespace metadata pruning (clp_s range index): one range per
         # ingested file, creator id = this compression run
         range_index=not args.no_range_index,
@@ -789,7 +788,6 @@ def build_parser() -> argparse.ArgumentParser:
     c.add_argument("--catalog")
     c.add_argument("--dataset", default=None,
                    help="catalog dataset namespace (clp --dataset)")
-    c.add_argument("--no-snapshot", action="store_true")
     c.add_argument("--no-range-index", action="store_true",
                    help="skip the per-file metadata range index")
     c.add_argument("--compression-level", type=int, default=3,

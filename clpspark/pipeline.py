@@ -3,18 +3,25 @@
 Stage layout (each stage writes parquet through a few Spark jobs and is
 committed to the lineage log; resume skips committed stages):
 
-  1. parse      sequences -> parsed/            (1 full parse pass)
+  1. parse      sequences -> parsed/ or _parsed_twopass/  (1 full parse pass)
   2. dicts      parsed -> logtype_dict/, var_dict/   (column-pruned scans)
   3. route      parsed + dicts -> routed/ (partitionBy logtype_id, salted)
   4. aggregate  routed -> agg_sink_counts/, agg_source_stats/, agg_by_time/
   5. snapshot   one manifest over every output table
 
-Scale notes: parse is the CPU-heavy pass and runs exactly once; dict build
-and route re-read the parsed table with column pruning instead of
-re-parsing. With ``materialize_parsed`` that table is the durable parsed/
-(the analog of CLP's IR — a one-time encoding all downstream stages
-reuse); in two-pass mode it is a transient snappy spill, _parsed_twopass/,
-deleted once the route stage has read it.
+Every stage goes through one runner, ``stage()``: a stage is skipped on
+resume when its lineage entry is done under this config's fingerprint and
+its outputs exist. Otherwise the runner begins its lineage entry, runs its
+Spark jobs under the ``clpspark:<stage>`` job group, and commits the
+stage's metrics with its measured ``sec`` only after the work has run.
+
+One parse path: parse is the CPU-heavy pass and runs exactly once, to
+parquet that the dict build and route stages re-read column-pruned
+(read back with the parse schema, so no inference job). Durability picks
+the path and codec: with ``materialize_parsed`` it is the durable parsed/
+at the archive's zstd level (the analog of CLP's IR — a one-time encoding
+all downstream stages reuse); in two-pass mode it is a transient snappy
+spill, _parsed_twopass/, deleted with the route stage.
 
 Fixed per-run cost: a small batch's wall is mostly metadata jobs, so the
 stages reuse what the run already knows instead of asking Spark again —
@@ -30,8 +37,9 @@ from __future__ import annotations
 import functools
 import os
 import re
+import shutil
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,8 +57,9 @@ from clpspark.operators.enrich import (
     build_var_dict,
     enrich,
 )
-from clpspark.operators.parse import parse_sequences
+from clpspark.operators.parse import PARSED_SCHEMA, parse_sequences
 from clpspark.operators.route import route
+from clpspark.operators.util import job_group, rebalance_for_udf, run_jobs
 
 
 @dataclass
@@ -67,21 +76,17 @@ class PipelineConfig:
     route_salt: int | None = None  # None -> one salt bucket per shuffle task
     bucket_ms: int = 3_600_000  # 1h count-by-time buckets
     version: int = 1
-    # True: materialize parsed/ as parquet (durable IR; dict + route stages
-    # re-read it). False: two-pass throughput mode — no durable parsed
-    # table; the parse spills to a transient _parsed_twopass/ that the dict
-    # and route stages re-read, deleted after the route stage.
+    # Where the one parse pass lands; the dict and route stages re-read it.
+    # True: parsed/ at the archive's zstd level (durable IR, kept for
+    # resume). False: two-pass throughput mode — a transient snappy
+    # _parsed_twopass/, written only when the dict or route stage runs and
+    # deleted with the route stage.
     materialize_parsed: bool = True
     # Optional archive catalog registration (tags + ts-range pruning DB)
     catalog_dir: str | None = None
     tags: tuple[str, ...] = ()
     # Dataset namespace for catalog registration (clp-package --dataset)
     dataset: str | None = None
-    # Snapshot-atomic multi-table commit + per-file skipping stats
-    # (clpspark.snapshots — the Iceberg layer of SURVEY §1.5). The stats
-    # pass costs two column-pruned scans of the routed table; disable for
-    # pure-ingest-throughput runs that will never be searched.
-    snapshot: bool = True
     # Per-row-range metadata KV index (clp_s RangeIndexWriter analog,
     # clpspark.range_index): one range per ingested file with _filename /
     # _file_split_number / _archive_creator_id, enabling $-namespace query
@@ -102,7 +107,6 @@ class PipelineConfig:
     # Strip this prefix from stored source paths (clp --remove-path-prefix);
     # unset keeps the basename-only naming.
     remove_path_prefix: str | None = None
-    extra: dict = field(default_factory=dict)
 
     def fp(self, stage: str) -> str:
         return fingerprint(
@@ -139,6 +143,43 @@ def _level_writer(config: "PipelineConfig"):
     return zw
 
 
+def _parsed_path(config: "PipelineConfig", durable: bool) -> str:
+    return config.path("parsed" if durable else "_parsed_twopass")
+
+
+def _write_parsed(spark: SparkSession, config: "PipelineConfig",
+                  durable: bool) -> None:
+    """Parse the input, once, to parquet: the durable parsed/ at the
+    archive's zstd level, or the transient _parsed_twopass/ as snappy —
+    scratch, so write speed beats ratio."""
+    if config.input_format == "text":
+        # raw text logs: multiline event assembly, then the same parse
+        from clpspark.sources.text_logs import ingest_text_logs
+
+        df = ingest_text_logs(
+            spark,
+            list(config.input_files) if config.input_files
+            else config.input_path,
+            remove_path_prefix=config.remove_path_prefix)
+    else:
+        # parse is CPU-bound: when the input has fewer splits than cores
+        # (small files coalesced by maxPartitionBytes), rebalance first. At
+        # cluster scale input splits >> cores and this no-ops.
+        df = parse_sequences(
+            rebalance_for_udf(spark.read.parquet(config.input_path)),
+            corpus_mod.build_vocab(config.vocab_seed).vocab)
+    writer = (_level_writer(config)(df) if durable
+              else df.write.option("compression", "snappy"))
+    writer.mode("overwrite").parquet(_parsed_path(config, durable))
+
+
+def _read_parsed(spark: SparkSession, config: "PipelineConfig",
+                 durable: bool) -> DataFrame:
+    # the writer's schema: no inference job
+    return spark.read.schema(PARSED_SCHEMA).parquet(
+        _parsed_path(config, durable))
+
+
 def _write_stats_sidecar(config: "PipelineConfig", route_fp: str,
                          stats: list[dict]) -> None:
     """Atomically persist the route stage's per-file stats, keyed by the
@@ -165,6 +206,21 @@ def _read_stats_sidecar(config: "PipelineConfig",
     return d["stats"] if d.get("route_fp") == route_fp else None
 
 
+def _register(spark: SparkSession, config: "PipelineConfig",
+              catalog_dir: str, routed: DataFrame, archive_id: str,
+              path: str, dict_path: str | None = None) -> None:
+    """Register one routed archive in the metadata catalog with its
+    timestamp range and row count."""
+    from clpspark.catalog import register_archive
+
+    rng = routed.agg(F.min("ts").alias("b"), F.max("ts").alias("e"),
+                     F.count("*").alias("n")).first()
+    register_archive(spark, catalog_dir, archive_id=archive_id, path=path,
+                     begin_ts=rng["b"], end_ts=rng["e"], n_rows=rng["n"],
+                     tags=list(config.tags), dict_path=dict_path,
+                     dataset=config.dataset)
+
+
 # dictionary stats the dicts stage commits and the route stage consumes; a
 # committed dicts entry without them (older work dir) is rebuilt
 _DICT_STATS = frozenset(("n_logtypes", "n_rows", "n_vars", "var_bytes"))
@@ -183,149 +239,83 @@ def run_pipeline(
     # lazily-executed earlier writes could pick up a later run's level
     zw = _level_writer(config)
     metrics: dict = {}
-    dirty = False  # any stage actually executed -> table files changed
+    ran: list[str] = []  # stages executed this run -> table files changed
     t0 = time.time()
 
+    def done(name: str, *outputs: str) -> bool:
+        return (resume and log.is_done(name, config.fp(name))
+                and all(os.path.exists(config.path(p)) for p in outputs))
+
+    def stage(name: str, work, *outputs: str, rerun: bool = False) -> None:
+        """Run ``work()`` as lineage stage ``name`` unless resume finds it
+        done with ``outputs`` in place (``rerun`` forces it). The work's
+        Spark jobs run under the ``clpspark:<name>`` job group, and its
+        returned metrics are committed with the stage's wall ``sec``."""
+        fp = config.fp(name)
+        if not rerun and done(name, *outputs):
+            metrics[name] = log.metrics(name)
+            return
+        t = time.time()
+        log.begin(name, fp)
+        with job_group(spark, f"clpspark:{name}", name):
+            m = work()
+        log.commit(name, fp, {**m, "sec": time.time() - t})
+        metrics[name] = log.metrics(name)
+        ran.append(name)
+
+    need_dicts = not (done("dicts", "logtype_dict", "var_dict")
+                      and _DICT_STATS <= log.metrics("dicts").keys())
+    need_route = not done("route", "routed")
+    durable = config.materialize_parsed
+    spill = None if durable else _parsed_path(config, durable)
+
     # -- stage 1: parse ------------------------------------------------------
-    def _sequences():
-        from clpspark.operators.util import rebalance_for_udf
+    def _parse() -> dict:
+        _write_parsed(spark, config, durable)
+        return {"mode": "materialized" if durable else "two-pass"}
 
-        # parse is CPU-bound: when the input has fewer splits than cores
-        # (small files coalesced by maxPartitionBytes), rebalance first. At
-        # cluster scale input splits >> cores and this no-ops.
-        return rebalance_for_udf(spark.read.parquet(config.input_path))
-
-    def _parse():
-        if config.input_format == "text":
-            from clpspark.sources.text_logs import ingest_text_logs
-
-            src = (list(config.input_files) if config.input_files
-                   else config.input_path)
-            return ingest_text_logs(
-                spark, src, remove_path_prefix=config.remove_path_prefix)
-        meta = corpus_mod.build_vocab(config.vocab_seed)
-        return parse_sequences(_sequences(), meta.vocab)
-
-    parsed_path = config.path("parsed")
-    fp = config.fp("parse")
-    lt_path, var_path = config.path("logtype_dict"), config.path("var_dict")
-    routed_path = config.path("routed")
-    need_dicts = not (
-        resume and log.is_done("dicts", config.fp("dicts"))
-        and os.path.exists(lt_path)
-        and _DICT_STATS <= log.metrics("dicts").keys()
-    )
-    need_route = not (
-        resume and log.is_done("route", config.fp("route"))
-        and os.path.exists(routed_path)
-    )
-    tmp_parsed: str | None = None
-    parsed_on_disk = config.materialize_parsed
-    if config.materialize_parsed:
-        if not (resume and log.is_done("parse", fp) and os.path.exists(parsed_path)):
-            log.begin("parse", fp)
-            dirty = True
-            zw(_parse()).mode("overwrite").parquet(parsed_path)
-            n = spark.read.parquet(parsed_path).count()
-            log.commit("parse", fp, {"rows": n, "sec": time.time() - t0})
-        metrics["parse"] = log.metrics("parse")
-        parsed = spark.read.parquet(parsed_path)
+    if durable:
+        stage("parse", _parse, "parsed")
     else:
-        # two-pass throughput mode: no DURABLE intermediate. The parse has
-        # no committed artifact and resume granularity stays per-stage via
-        # the dict/route/aggregate outputs. But when BOTH the dict and the
-        # route stage are about to execute, running the CPU-heavy parse
-        # twice (once per consumer) loses to one parse spilled to a
-        # transient parquet table that both stages re-read column-pruned —
-        # measured at 12M rows/32c: a second parse pass costs ~14.5s while
-        # the spill write adds ~0-2s over the parse itself and the dict
-        # build re-reads 2 narrow zstd columns for ~1s (the same
-        # re-scan-beats-recompute observation as the aggregate stage). The
-        # spill is deleted after the route stage, so nothing persists
-        # across runs.
-        parsed = _parse()
-        log.commit("parse", fp, {"sec": time.time() - t0, "mode": "two-pass"})
-        metrics["parse"] = log.metrics("parse")
-        # a crash between the spill and the route commit leaves the
-        # scratch table behind — sweep any stale copy up front so the
-        # work dir never accumulates one per failed run
-        stale = config.path("_parsed_twopass")
-        if os.path.exists(stale):
-            import shutil
-
-            shutil.rmtree(stale, ignore_errors=True)
-        if need_dicts and need_route:
-            # snappy, not the archive's zstd level: this table is transient
-            # scratch (deleted below), so write speed wins over ratio
-            tmp_parsed = config.path("_parsed_twopass")
-            parsed.write.option("compression", "snappy").mode(
-                "overwrite"
-            ).parquet(tmp_parsed)
-            # the writer's schema: no inference job over the spill
-            parsed = spark.read.schema(parsed.schema).parquet(tmp_parsed)
-            parsed_on_disk = True
+        # two-pass: no durable intermediate, so parse whenever a consumer
+        # runs. One parse spilled to parquet that both stages re-read
+        # beats parsing twice — measured at 12M rows/32c: a second parse
+        # pass costs ~14.5s, the spill write ~0-2s over the parse itself.
+        # A crash before the route stage leaves the spill behind: sweep it.
+        shutil.rmtree(spill, ignore_errors=True)
+        stage("parse", _parse, rerun=need_dicts or need_route)
+    parsed = functools.cache(lambda: _read_parsed(spark, config, durable))
 
     # -- stage 2: dictionaries ----------------------------------------------
-    t1 = time.time()
-    fp = config.fp("dicts")
-    if need_dicts:
-        log.begin("dicts", fp)
-        dirty = True
-        from concurrent.futures import ThreadPoolExecutor
+    lt_path, var_path = config.path("logtype_dict"), config.path("var_dict")
 
-        if parsed_on_disk:
-            # parquet-backed parse: both dictionary builds scan their own
-            # single pruned column — cheaper than materializing a shared
-            # projection (CLAUDE.md: re-scanning zstd parquet beats persist
-            # for narrow fan-out reads), and the two builds are independent
-            # jobs, so run them concurrently: the second back-fills the
-            # straggler tail of the first (guide §2.6).
-            src, workers = parsed, 2
-        else:
-            # lazy (non-materialized) parse with only this stage running:
-            # one narrow projection feeds BOTH dictionary builds so the
-            # parse runs once, spilled DISK_ONLY (keeps the big
-            # executor-storage pool out of play in single-JVM local mode);
-            # one worker, so the second build reads what the first spilled.
-            from pyspark.storagelevel import StorageLevel
+    def _dicts() -> dict:
+        src = parsed()
 
-            src = parsed.select("logtype", "dict_vars").persist(
-                StorageLevel.DISK_ONLY
-            )
-            workers = 1
+        def build(fn, path: str):
+            def job() -> dict:
+                df, stats = fn(src)
+                zw(df).mode("overwrite").parquet(path)
+                return stats
+            return job
 
-        def _build(name: str, build, path: str) -> dict:
-            spark.sparkContext.setJobDescription(f"dicts: {name}")
-            df, stats = build(src)
-            zw(df).mode("overwrite").parquet(path)
-            return stats
-
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            lt_stats, var_stats = [
-                f.result() for f in [
-                    pool.submit(_build, "logtype_dict",
-                                _logtype_dict_and_stats, lt_path),
-                    pool.submit(_build, "var_dict", _var_dict_and_stats,
-                                var_path),
-                ]
-            ]
-        if src is not parsed:
-            src.unpersist()
+        # each build scans its own single pruned column of the parse
+        # parquet (CLAUDE.md: re-scanning zstd parquet beats persist for
+        # narrow fan-out reads); the second back-fills the straggler tail
+        # of the first (guide §2.6)
+        out = run_jobs(spark, {
+            "logtype_dict": build(_logtype_dict_and_stats, lt_path),
+            "var_dict": build(_var_dict_and_stats, var_path),
+        }, max_workers=2)
         # the stats come from the builds' own id-offset collects: the
         # route stage (this run or a resumed one) reads them from lineage
         # instead of counting the dictionaries again
-        log.commit(
-            "dicts",
-            fp,
-            {
-                "n_logtypes": lt_stats["entries"],
-                "n_rows": lt_stats["carried"],
-                "n_vars": var_stats["entries"],
-                "var_bytes": var_stats["value_bytes"],
-                "sec": time.time() - t1,
-            },
-        )
-    metrics["dicts"] = log.metrics("dicts")
+        return {
+            "n_logtypes": out["logtype_dict"]["entries"],
+            "n_rows": out["logtype_dict"]["carried"],
+            "n_vars": out["var_dict"]["entries"],
+            "var_bytes": out["var_dict"]["value_bytes"],
+        }
 
     @functools.cache
     def _routed() -> DataFrame:
@@ -333,14 +323,10 @@ def run_pipeline(
         # partition discovery over more than 32 sink dirs is a distributed
         # listing job. No forced schema here — the logtype_id partition
         # column reads back as int, the written column is bigint.
-        return spark.read.parquet(routed_path)
+        return spark.read.parquet(config.path("routed"))
 
     # -- stage 3: enrich + route ---------------------------------------------
-    t2 = time.time()
-    fp = config.fp("route")
-    if need_route:
-        log.begin("route", fp)
-        dirty = True
+    def _route() -> dict:
         dict_stats = log.metrics("dicts")
         enrich_mode = config.enrich_mode
         if enrich_mode == "auto":
@@ -350,10 +336,10 @@ def run_pipeline(
                            else "join")
         logtype_dict = spark.read.schema(LOGTYPE_DICT_SCHEMA).parquet(lt_path)
         var_dict = spark.read.schema(VAR_DICT_SCHEMA).parquet(var_path)
-        enriched = enrich(parsed, logtype_dict, var_dict, mode=enrich_mode)
+        enriched = enrich(parsed(), logtype_dict, var_dict, mode=enrich_mode)
         route(
             enriched,
-            routed_path,
+            config.path("routed"),
             salt=config.route_salt,
             sink_counts=logtype_dict.select("logtype_id", "n_rows"),
             write_options=zw.options,
@@ -374,24 +360,23 @@ def run_pipeline(
             _routed(), config.work_dir
         )
         zw(var_index).mode("overwrite").parquet(config.path("var_index"))
-        _write_stats_sidecar(config, fp, stats)
+        _write_stats_sidecar(config, config.fp("route"), stats)
+        if spill:  # every consumer of the spill is done
+            shutil.rmtree(spill, ignore_errors=True)
         audit = sink_audit_from_stats(stats)
-        log.commit(
-            "route",
-            fp,
-            {
-                "n_sinks": len(audit),
-                "rows": sum(a["n_rows"] for a in audit),
-                "sinks": audit,
-                "sec": time.time() - t2,
-            },
-        )
-    metrics["route"] = log.metrics("route")
-    if tmp_parsed is not None:
-        # transient two-pass spill: all consumers (dicts, route) are done
-        import shutil
+        return {
+            "enrich_mode": enrich_mode,
+            "n_sinks": len(audit),
+            "rows": sum(a["n_rows"] for a in audit),
+            "sinks": audit,
+        }
 
-        shutil.rmtree(tmp_parsed, ignore_errors=True)
+    try:
+        stage("dicts", _dicts, "logtype_dict", "var_dict", rerun=need_dicts)
+        stage("route", _route, "routed")
+    finally:
+        if spill:  # a dicts-only rerun or a failure leaves the spill
+            shutil.rmtree(spill, ignore_errors=True)
 
     # -- optional: range index (per-ingested-file metadata KV) ---------------
     if config.range_index:
@@ -401,12 +386,7 @@ def run_pipeline(
             write_range_index,
         )
 
-        fp = config.fp("range_index")
-        ri_path = os.path.join(config.work_dir, RANGE_INDEX_FILE)
-        if not (resume and log.is_done("range_index", fp)
-                and os.path.exists(ri_path)):
-            log.begin("range_index", fp)
-            t_ri = time.time()
+        def _range_index() -> dict:
             extra = {"_file_split_number": "0"}
             if config.archive_creator_id is not None:
                 extra["_archive_creator_id"] = config.archive_creator_id
@@ -438,34 +418,17 @@ def run_pipeline(
                 # non-contiguous doc_ids per file (e.g. a shuffled corpus):
                 # degrade to "no index" rather than failing the compression
                 # — $-namespace queries then match nothing, never wrongly
+                ri_path = config.path(RANGE_INDEX_FILE)
                 if os.path.exists(ri_path):
                     os.remove(ri_path)  # never leave a stale index behind
-                log.commit("range_index", fp,
-                           {"n_ranges": 0, "skipped": str(exc)[:200],
-                            "sec": time.time() - t_ri})
-            else:
-                write_range_index(config.work_dir, ranges)
-                log.commit(
-                    "range_index", fp,
-                    {"n_ranges": len(ranges), "sec": time.time() - t_ri},
-                )
-        metrics["range_index"] = log.metrics("range_index")
+                return {"n_ranges": 0, "skipped": str(exc)[:200]}
+            write_range_index(config.work_dir, ranges)
+            return {"n_ranges": len(ranges)}
+
+        stage("range_index", _range_index, RANGE_INDEX_FILE)
 
     # -- stage 4: aggregates ---------------------------------------------------
-    t3 = time.time()
-    fp = config.fp("aggregate")
-    agg_paths = {
-        "agg_sink_counts": None,
-        "agg_source_stats": None,
-        "agg_by_time": None,
-    }
-    if not (
-        resume
-        and log.is_done("aggregate", fp)
-        and all(os.path.exists(config.path(p)) for p in agg_paths)
-    ):
-        log.begin("aggregate", fp)
-        dirty = True
+    def _aggregate() -> dict:
         # three column-pruned scans of the columnar fan-out — measured 5x
         # CHEAPER than persisting one shared projection (the cache
         # materialization costs more than re-decoding 2 narrow zstd columns
@@ -473,65 +436,44 @@ def run_pipeline(
         # aggregates are independent jobs over different columns: run them
         # concurrently so each back-fills the others' straggler tails
         # (guide §2.6).
-        from concurrent.futures import ThreadPoolExecutor
-
         routed = _routed()
 
-        def _agg_job(name: str, df_fn):
-            spark.sparkContext.setJobDescription(f"aggregate: {name}")
-            zw(df_fn()).mode("overwrite").parquet(config.path(name))
+        def write(name: str, fn):
+            return lambda: zw(fn(routed)).mode("overwrite").parquet(
+                config.path(name))
 
-        agg_jobs = [
-            ("agg_sink_counts", lambda: agg.per_sink_counts(routed)),
-            ("agg_source_stats", lambda: agg.per_source_token_stats(routed)),
-            ("agg_by_time", lambda: agg.count_by_time(
-                routed, config.bucket_ms, group_cols=("source",))),
-        ]
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            for f in [pool.submit(_agg_job, n, fn) for n, fn in agg_jobs]:
-                f.result()
-        log.commit("aggregate", fp, {"sec": time.time() - t3})
-    metrics["aggregate"] = log.metrics("aggregate")
+        run_jobs(spark, {
+            "agg_sink_counts": write("agg_sink_counts", agg.per_sink_counts),
+            "agg_source_stats": write("agg_source_stats",
+                                      agg.per_source_token_stats),
+            "agg_by_time": write("agg_by_time", lambda r: agg.count_by_time(
+                r, config.bucket_ms, group_cols=("source",))),
+        }, max_workers=3)
+        return {}
+
+    stage("aggregate", _aggregate, "agg_sink_counts", "agg_source_stats",
+          "agg_by_time")
 
     # -- stage 5: snapshot commit (atomic multi-table publish + file stats) ---
-    if config.snapshot:
-        t4 = time.time()
-        fp = config.fp("snapshot")
-        # a re-run stage rewrote its files: the committed manifest would point
-        # at deleted paths — always publish a fresh snapshot in that case
-        if dirty or not (resume and log.is_done("snapshot", fp)):
-            from clpspark.snapshots import snapshot_pipeline_tables
+    def _snapshot() -> dict:
+        from clpspark.snapshots import snapshot_pipeline_tables
 
-            log.begin("snapshot", fp)
-            v = snapshot_pipeline_tables(
-                spark,
-                config.work_dir,
-                routed_stats=_read_stats_sidecar(config, config.fp("route")),
-            )
-            log.commit(
-                "snapshot", fp, {"version": v, "sec": time.time() - t4}
-            )
-        metrics["snapshot"] = log.metrics("snapshot")
+        return {"version": snapshot_pipeline_tables(
+            spark,
+            config.work_dir,
+            routed_stats=_read_stats_sidecar(config, config.fp("route")),
+        )}
+
+    # a re-run stage rewrote its files: the committed manifest would point
+    # at deleted paths — always publish a fresh snapshot in that case
+    stage("snapshot", _snapshot, rerun=bool(ran))
 
     # -- optional: register this archive in the metadata catalog --------------
     if config.catalog_dir:
-        from clpspark.catalog import register_archive
-
-        rng = _routed().agg(
-            F.min("ts").alias("b"), F.max("ts").alias("e"),
-            F.count("*").alias("n"),
-        ).first()
-        register_archive(
-            spark,
-            config.catalog_dir,
-            archive_id=f"{os.path.basename(config.work_dir)}-{config.fp('route')[:12]}",
-            path=config.work_dir,
-            begin_ts=rng["b"],
-            end_ts=rng["e"],
-            n_rows=rng["n"],
-            tags=list(config.tags),
-            dataset=config.dataset,
-        )
+        with job_group(spark, "clpspark:catalog", "catalog"):
+            _register(spark, config, config.catalog_dir, _routed(),
+                      f"{os.path.basename(config.work_dir)}-"
+                      f"{config.fp('route')[:12]}", config.work_dir)
 
     metrics["total_sec"] = time.time() - t0
     return metrics
@@ -568,30 +510,15 @@ def run_split_pipeline(
 
     Returns {"archives": [(archive_id, path)...], "n_archives": k, ...}.
     """
-    from clpspark.catalog import register_archive
-
     t0 = time.time()
     zw = _level_writer(config)
-    parsed_path = config.path("parsed")
+    parsed_path = _parsed_path(config, durable=True)
     if not resume or not os.path.exists(f"{parsed_path}/_SUCCESS"):
-        if config.input_format == "text":
-            # raw text logs split the same way the reference's clp does —
-            # the parse stage is the only format-specific step
-            from clpspark.sources.text_logs import ingest_text_logs
-
-            src = (list(config.input_files) if config.input_files
-                   else config.input_path)
-            parsed_df = ingest_text_logs(
-                spark, src, remove_path_prefix=config.remove_path_prefix)
-        else:
-            from clpspark.operators.util import rebalance_for_udf
-
-            meta = corpus_mod.build_vocab(config.vocab_seed)
-            sequences = rebalance_for_udf(
-                spark.read.parquet(config.input_path))
-            parsed_df = parse_sequences(sequences, meta.vocab)
-        zw(parsed_df).mode("overwrite").parquet(parsed_path)
-    parsed = spark.read.parquet(parsed_path)
+        # raw text logs split the same way the reference's clp does — the
+        # parse stage is the only format-specific step
+        _write_parsed(spark, config, durable=True)
+    parsed = _read_parsed(spark, config, durable=True)
+    n = parsed.count()
 
     if target_rows_per_archive is None:
         if target_encoded_bytes is None:
@@ -600,12 +527,11 @@ def run_split_pipeline(
                 "target_encoded_bytes")
         if target_encoded_bytes <= 0:
             raise ValueError("target_encoded_bytes must be > 0")
-        total_rows = parsed.count()
         on_disk = sum(
             os.path.getsize(os.path.join(r, f))
             for r, _d, fs in os.walk(parsed_path) for f in fs
         )
-        bytes_per_row = max(on_disk / max(total_rows, 1), 1e-9)
+        bytes_per_row = max(on_disk / max(n, 1), 1e-9)
         target_rows_per_archive = max(
             1, int(target_encoded_bytes / bytes_per_row))
 
@@ -615,10 +541,9 @@ def run_split_pipeline(
     if not resume or not os.path.exists(f"{lt_path}/_SUCCESS"):
         zw(build_logtype_dict(parsed)).mode("overwrite").parquet(lt_path)
         zw(build_var_dict(parsed)).mode("overwrite").parquet(var_path)
-    logtype_dict = spark.read.parquet(lt_path)
-    var_dict = spark.read.parquet(var_path)
+    logtype_dict = spark.read.schema(LOGTYPE_DICT_SCHEMA).parquet(lt_path)
+    var_dict = spark.read.schema(VAR_DICT_SCHEMA).parquet(var_path)
 
-    n = parsed.count()
     k = max(1, -(-n // target_rows_per_archive))  # ceil
     # time cut points at row-count quantiles -> near-equal archives that are
     # time-contiguous (CLP archives are ordered time ranges)
@@ -678,28 +603,14 @@ def run_split_pipeline(
             sink_counts=logtype_dict.select("logtype_id", "n_rows"),
             write_options=zw.options,
         )
-        routed = spark.read.parquet(arch_dir)
-        rng = routed.agg(
-            F.min("ts").alias("b"), F.max("ts").alias("e"),
-            F.count("*").alias("n"),
-        ).first()
         archive_id = (
             f"{os.path.basename(config.work_dir)}-{config.fp('route')[:8]}"
             f"-{i:04d}"
         )
         if catalog_dir or config.catalog_dir:
-            register_archive(
-                spark,
-                catalog_dir or config.catalog_dir,
-                archive_id=archive_id,
-                path=arch_dir,
-                begin_ts=rng["b"],
-                end_ts=rng["e"],
-                n_rows=rng["n"],
-                tags=list(config.tags),
-                dict_path=dicts_dir,
-                dataset=config.dataset,
-            )
+            _register(spark, config, catalog_dir or config.catalog_dir,
+                      spark.read.parquet(arch_dir), archive_id, arch_dir,
+                      dict_path=dicts_dir)
         archives.append((archive_id, arch_dir))
     # one (var_id, logtype_id) index covers the whole generation (shared
     # dictionary ids make per-archive indexes redundant for logtype pruning).

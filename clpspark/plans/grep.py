@@ -161,7 +161,7 @@ def _logtype_like_pattern(query: str) -> str:
 
 # from_work_dir memo: engines keyed by (spark app, dir, version signature).
 # Insertion-ordered dict, FIFO-bounded at 8 entries. The module itself
-# searches from a ThreadPoolExecutor (and catalog search does too), so the
+# collects from run_jobs threads (and catalog search plans on them), so the
 # cache and each engine's mutable per-query state are lock-guarded.
 _ENGINE_CACHE: dict[tuple, "GrepEngine"] = {}
 _ENGINE_CACHE_LOCK = threading.Lock()
@@ -269,7 +269,7 @@ class GrepEngine:
         self._range_index = range_index
         self._bloom_pos_cache: dict[int, list[int]] = {}
         # engines are shared across threads (memoized handles; catalog
-        # searches fan out on a ThreadPoolExecutor): guard the mutable
+        # searches fan out on run_jobs threads): guard the mutable
         # per-query state
         self._state_lock = threading.Lock()
         # observability: file count of the last snapshot-pruned scan on
@@ -833,9 +833,8 @@ class GrepEngine:
             raise ValueError(f"unknown decode mode: {mode}")
         var_map = lt_map = None
         if mode != "join":
-            from concurrent.futures import ThreadPoolExecutor
-
             from clpspark.operators.decode import collect_if_fits, map_fits
+            from clpspark.operators.util import run_jobs
 
             def var_rows():
                 if mode == "map":
@@ -843,11 +842,12 @@ class GrepEngine:
                 return collect_if_fits(self._vd_df, ["var_id", "var_str"],
                                        "var_str")
 
-            # the Spark jobs run OUTSIDE the lock; first publisher wins
-            with ThreadPoolExecutor(1) as ex:
-                f_var = ex.submit(var_rows)
-                entries = self._logtype_entries()
-                rows = f_var.result()
+            # the two collects overlap and run OUTSIDE the lock; first
+            # publisher wins
+            got = run_jobs(self.spark, {"var_dict": var_rows,
+                                        "logtype_dict": self._logtype_entries},
+                           max_workers=2)
+            rows, entries = got["var_dict"], got["logtype_dict"]
             if entries is not None and map_fits(
                     len(entries), sum(len(lt) for _, lt in entries)):
                 lt_map = dict(entries)

@@ -218,7 +218,7 @@ def collect_file_stats_and_var_index(
     # the row-grain stats collect and the (file, var_id) pair distinct are
     # independent jobs over different columns of the same fan-out: run them
     # concurrently so each back-fills the other's straggler tail (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
+    from clpspark.operators.util import run_jobs
 
     def _rows():
         return (
@@ -247,11 +247,10 @@ def collect_file_stats_and_var_index(
             .localCheckpoint(eager=True)
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        rows_f = pool.submit(_rows)
-        pairs_f = pool.submit(_pairs)
-        rows = rows_f.result()
-        pairs = pairs_f.result()
+    out = run_jobs(routed.sparkSession,
+                   {"file stats": _rows, "file var pairs": _pairs},
+                   max_workers=2)
+    rows, pairs = out["file stats"], out["file var pairs"]
     var_index = pairs.select(
         F.regexp_extract("file", r"logtype_id=(-?[0-9]+)", 1)
         .cast("bigint")

@@ -157,6 +157,7 @@ def test_stats_json(archive, capsys):
     d = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert d["stages"]["route"] == "done"
     assert d["route"]["rows"] == 2 * N
+    assert d["route"]["enrich_mode"] in ("map", "join")
     assert d["per_logtype"] and d["n_var_entries"] > 0
     assert sum(r["n_rows"] for r in d["per_logtype"]) == 2 * N
 

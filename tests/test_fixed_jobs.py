@@ -1,23 +1,28 @@
 """Fixed per-run Spark work of run_pipeline: the job budget of a small
 batch, the driver-side table listing behind the snapshot commit, resume from
-committed dictionary stats, and work dirs whose paths need percent-encoding
-in Spark's file URIs."""
+committed dictionary stats, work dirs whose paths need percent-encoding in
+Spark's file URIs, and who owns each job: every job of a run belongs to its
+stage's ``clpspark:<stage>`` group, stage times account for the run's wall,
+and ``run_jobs`` labels, groups and cancels its jobs."""
 
 from __future__ import annotations
 
 import json
 import os
 import shutil
+import time
 from urllib.parse import unquote, urlparse
 
 import pytest
 
 from clpspark.lineage import LineageLog
+from clpspark.operators.util import job_group, run_jobs
 from clpspark.pipeline import PipelineConfig, run_pipeline
 from clpspark.snapshots import list_table_files
 
 TABLES = ("routed", "logtype_dict", "var_dict", "var_index",
           "agg_sink_counts", "agg_source_stats", "agg_by_time")
+STAGES = ("parse", "dicts", "route", "aggregate", "snapshot")
 
 
 def _marker_job_id(sc, group: str) -> int:
@@ -198,6 +203,32 @@ def test_resume_after_dicts_equals_fresh_run(spark, small_corpus, tmp_path,
         spark, str(tmp_path / "fresh"))
 
 
+@pytest.mark.parametrize("rerun_from,removed", [
+    ("dicts", ("logtype_dict", "var_dict")), ("route", ("routed",))])
+def test_two_pass_partial_resume_equals_fresh_run(
+        spark, small_corpus, spaced_work, tmp_path, rerun_from, removed):
+    """A two-pass resume that reruns from the dicts or the route stage
+    parses once more, to the spill, and its outputs equal a fresh run's;
+    no spill is left behind."""
+    c = PipelineConfig(input_path=small_corpus, work_dir=str(tmp_path / "w"),
+                       materialize_parsed=False)
+    run_pipeline(spark, c, resume=False)
+    log = LineageLog(c.work_dir)
+    parse_at = json.load(open(log.path))["stages"]["parse"]["committed_at"]
+    stages = ("dicts", "route", "aggregate", "snapshot")
+    for stage in stages[stages.index(rerun_from):]:
+        log.invalidate(stage)
+    for t in removed:
+        shutil.rmtree(c.path(t))
+
+    run_pipeline(spark, c, resume=True)
+    assert json.load(open(log.path))["stages"]["parse"][
+        "committed_at"] != parse_at
+    assert set(log.job_status().values()) == {"done"}
+    assert not os.path.exists(c.path("_parsed_twopass"))
+    assert _outputs(spark, c.work_dir) == _outputs(spark, spaced_work)
+
+
 def test_dict_stats_match_tables(spark, spaced_work):
     """The committed dictionary stats equal the written tables, whose
     schemas are the declared dictionary and var-index schemas."""
@@ -243,3 +274,97 @@ def test_enrich_auto_resolves_in_one_job(spark, small_corpus, vocab_meta):
     cols = ["doc_id", "logtype_id", "encoded_vars", "var_ids"]
     assert sorted(map(tuple, auto.select(cols).collect())) == sorted(
         map(tuple, forced.select(cols).collect()))
+
+
+def _job(sc, job_id: int):
+    """The status store's record of a job (description, group, times)."""
+    return sc._jsc.sc().statusStore().job(job_id)
+
+
+def test_run_jobs_label_and_caller_group(spark):
+    """Each job runs under the caller's job group with its label as the
+    job description; the caller's group is untouched afterwards and the
+    results come back by label."""
+    sc = spark.sparkContext
+
+    def job(n: int):
+        return lambda: sc.parallelize(range(n), 2).count()
+
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    with job_group(spark, "run-jobs-labels", "caller"):
+        out = run_jobs(spark, {"two": job(2), "three": job(3)}, max_workers=2)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "run-jobs-labels"
+    assert out == {"two": 2, "three": 3}
+    assert sc.getLocalProperty("spark.jobGroup.id") == prev
+    ids = sc.statusTracker().getJobIdsForGroup("run-jobs-labels")
+    assert sorted(_job(sc, j).description().get() for j in ids) == [
+        "three", "two"]
+
+
+def test_run_jobs_failure_cancels_running_sibling(spark):
+    """The first failure is re-raised, and a sibling job still running
+    is cancelled rather than waited for."""
+    sc = spark.sparkContext
+
+    def slow():
+        return sc.parallelize(range(2), 2).map(
+            lambda x: (time.sleep(120), x)[1]).count()
+
+    def fail():
+        t = time.time()
+        while (not sc.statusTracker().getActiveJobsIds()
+               and time.time() - t < 60):
+            time.sleep(0.05)
+        raise ValueError("boom")
+
+    t0 = time.time()
+    with job_group(spark, "run-jobs-cancel", "caller"):
+        with pytest.raises(ValueError, match="boom"):
+            run_jobs(spark, {"slow": slow, "fail": fail}, max_workers=2)
+    assert time.time() - t0 < 60
+    (slow_job,) = sc.statusTracker().getJobIdsForGroup("run-jobs-cancel")
+    assert sc.statusTracker().getJobInfo(slow_job).status == "FAILED"
+    assert _job(sc, slow_job).description().get() == "slow"
+
+
+@pytest.mark.parametrize("materialize,enrich_mode", [
+    (True, "auto"), (False, "map"), (False, "join")])
+def test_fresh_run_stages_own_jobs_and_wall(spark, small_corpus, tmp_path,
+                                            materialize, enrich_mode):
+    """A fresh run in each parse mode: stage ``sec`` values sum to at least
+    95% of ``total_sec``; every Spark job between two marker jobs belongs
+    to a ``clpspark:<stage>`` group; each stage's jobs finish before its
+    lineage commit (parse included: the parse parquet is written inside
+    the parse stage); the route stage records the enrich path it took;
+    the two-pass spill is gone."""
+    sc = spark.sparkContext
+    cfg = PipelineConfig(input_path=small_corpus,
+                         work_dir=str(tmp_path / "w"),
+                         materialize_parsed=materialize,
+                         enrich_mode=enrich_mode)
+    before = _marker_job_id(sc, "stages-before")
+    m = run_pipeline(spark, cfg, resume=False)
+    after = _marker_job_id(sc, "stages-after")
+
+    assert sum(m[s]["sec"] for s in STAGES) >= 0.95 * m["total_sec"]
+    owned = {s: set(sc.statusTracker().getJobIdsForGroup(f"clpspark:{s}"))
+             for s in STAGES}
+    assert set(range(before + 1, after)) <= set().union(*owned.values())
+    entries = json.load(open(LineageLog(cfg.work_dir).path))["stages"]
+    for s in STAGES:
+        if s == "snapshot":
+            continue  # the snapshot commit lists files on the driver
+        mine = owned[s] & set(range(before + 1, after))
+        assert mine, s
+        for j in mine:
+            info = _job(sc, j)
+            assert info.submissionTime().get().getTime() / 1000 >= (
+                entries[s]["started_at"] - 1e-3), s
+            assert info.completionTime().get().getTime() / 1000 <= (
+                entries[s]["committed_at"] + 1e-3), s
+    assert m["parse"]["mode"] == ("materialized" if materialize
+                                  else "two-pass")
+    assert m["route"]["enrich_mode"] == (
+        "map" if enrich_mode == "auto" else enrich_mode)
+    assert not os.path.exists(cfg.path("_parsed_twopass"))
+    assert os.path.exists(cfg.path("parsed")) == materialize

@@ -137,7 +137,6 @@ def test_compression_level_knob(spark, vocab_meta, tmp_path):
         work = str(tmp_path / f"w{lvl}")
         run_pipeline(spark, PipelineConfig(
             input_path=inp, work_dir=work, compression_level=lvl,
-            snapshot=False,
         ))
         sizes[lvl] = int(subprocess.check_output(
             ["du", "-sb", f"{work}/routed"]).split()[0])

@@ -49,7 +49,6 @@ def test_zstd_level_is_per_write_not_session_global(spark, vocab_meta,
         work = str(tmp_path / f"work{lvl}")
         run_pipeline(spark, PipelineConfig(
             input_path=inp, work_dir=work, compression_level=lvl,
-            snapshot=False,
         ))
         sizes[lvl] = sum(
             os.path.getsize(f)
