@@ -15,8 +15,14 @@ clp/clp/FileDecompressor.hpp:29). Two Spark strategies:
     picks broadcast vs shuffle hash join by size) and reassembled in slot
     order. No driver collect, no memory bound — the 100 TB path.
 
-``mode="auto"`` picks by dictionary entry count and string bytes
-(``map_fits``), from the same bounded collects that build the maps.
+Whether a dictionary may live on the driver is decided in one place,
+``driver_rows``: ``"auto"`` collects it when it fits ``map_fits`` (entry
+count and string bytes, from the same bounded collect that yields the
+rows), ``"map"`` collects it unconditionally and ``"join"`` never does.
+``decode_messages``, ``enrich.enrich`` and ``plans.grep.GrepEngine`` all
+resolve their strategy through it; callers that already know a
+dictionary's size (the pipeline's route stage, from lineage) ask
+``map_fits`` directly.
 
 Both UDFs render rows through compiled logtype templates: each distinct
 logtype is split once per task into literal runs (escapes resolved) and
@@ -36,7 +42,8 @@ from pyspark.sql import functions as F
 from clpspark.ref import encoder as E
 
 # Above this many dictionary entries the collected python-dict broadcast is
-# no longer safe (driver memory) and decode switches to the join strategy.
+# no longer safe (driver memory) and decode, enrich and grep switch to the
+# join strategy.
 AUTO_MAP_MAX_ENTRIES = 1_000_000
 # Entry count alone under-estimates: a dictionary of long strings can blow
 # the driver well below 1M rows, so the same stats job also sums string
@@ -80,9 +87,9 @@ AUTO_MAP_FUSE_ENTRIES = 200_000
 
 def map_fits(n_entries: int, n_bytes: int | None) -> bool:
     """The map-vs-join gate: may a dictionary of ``n_entries`` strings
-    totalling ``n_bytes`` characters be collected to the driver? Shared by
-    every auto-mode resolver, whether the stats come from a Spark job or
-    from the pipeline's lineage log."""
+    totalling ``n_bytes`` characters be collected to the driver? Asked by
+    ``driver_rows`` (auto mode) and by the pipeline's route stage, whose
+    stats come from the lineage log."""
     return (n_entries <= AUTO_MAP_MAX_ENTRIES
             and (n_bytes or 0) <= AUTO_MAP_MAX_BYTES)
 
@@ -107,28 +114,19 @@ def collect_if_fits(df: DataFrame, cols: list[str],
     return rows if map_fits(len(rows), n_bytes) else None
 
 
-def resolve_mode_and_map(var_dict: DataFrame, key_col: str, value_col: str,
-                         str_col: str = "var_str"):
-    """(mode, {key: value} or None) from ``collect_if_fits``: map mode when
-    the dictionary fits, with the collected rows as the map. Decode keys
-    the map by id, enrich by string."""
-    rows = collect_if_fits(var_dict, [key_col, value_col], str_col)
-    if rows is None:
-        return "join", None
-    return "map", {r[key_col]: r[value_col] for r in rows}
-
-
-def resolve_decode_mode(var_dict: DataFrame, mode: str = "auto",
-                        value_col: str = "var_str") -> str:
+def driver_rows(df: DataFrame, cols: list[str], str_col: str | None,
+                mode: str) -> list | None:
+    """The residency gate: rows of ``df[cols]`` collected to the driver, or
+    None when the dictionary stays in Spark (join strategy). ``"auto"``
+    collects while the table fits ``map_fits`` (``collect_if_fits``),
+    ``"map"`` always, ``"join"`` never; any other mode raises."""
     if mode == "auto":
-        stats = var_dict.agg(
-            F.count("*").alias("n"),
-            F.sum(F.length(value_col)).alias("b"),
-        ).first()
-        return "map" if map_fits(stats["n"], stats["b"]) else "join"
-    if mode not in ("map", "join"):
-        raise ValueError(f"unknown decode mode: {mode}")
-    return mode
+        return collect_if_fits(df, cols, str_col)
+    if mode == "map":
+        return df.select(*cols).collect()
+    if mode == "join":
+        return None
+    raise ValueError(f"unknown dictionary mode: {mode}")
 
 
 def attach_dict_var_strings(
@@ -324,9 +322,10 @@ def decode_messages(
     """Add the decoded ``message`` column to encoded/routed events.
 
     Events that already carry a ``logtype`` column decode from it; others
-    need ``logtype_dict``. A caller that decodes repeatedly over one
-    dictionary pair (GrepEngine) passes its prebuilt ``decoder`` and skips
-    all resolution. Only the columns the decode needs round-trip through
+    need ``logtype_dict``. ``mode`` resolves map vs join through
+    ``driver_rows``. A caller that decodes repeatedly over one dictionary
+    pair (GrepEngine) passes its prebuilt ``decoder`` and skips all
+    resolution. Only the columns the decode needs round-trip through
     Arrow (narrow scalar pandas UDF; whole-row mapInPandas costs ~10x more).
     """
     cols = df.columns
@@ -334,24 +333,17 @@ def decode_messages(
     if not has_lt and logtype_dict is None:
         raise ValueError("events lack a logtype column; pass logtype_dict")
     if decoder is None:
-        lt_map = None
-        if mode == "auto":
-            if not has_lt:
-                mode, lt_map = resolve_mode_and_map(
-                    logtype_dict, "logtype_id", "logtype", "logtype")
-            if mode != "join":
-                mode, var_map = resolve_mode_and_map(var_dict, "var_id",
-                                                     "var_str")
-        elif resolve_decode_mode(var_dict, mode) == "map":
-            var_map = {r["var_id"]: r["var_str"]
-                       for r in var_dict.select("var_id", "var_str")
-                       .collect()}
-            if not has_lt:
-                lt_map = {r["logtype_id"]: r["logtype"] for r in
-                          logtype_dict.select("logtype_id", "logtype")
-                          .collect()}
-        if mode == "map":
-            decoder = MapDecoder(df.sparkSession, var_map, lt_map)
+        # the logtype dictionary first: when it must stay in Spark the var
+        # dictionary is not collected either
+        lt_rows = None if has_lt else driver_rows(
+            logtype_dict, ["logtype_id", "logtype"], "logtype", mode)
+        if has_lt or lt_rows is not None:
+            var_rows = driver_rows(var_dict, ["var_id", "var_str"],
+                                   "var_str", mode)
+            if var_rows is not None:
+                decoder = MapDecoder(
+                    df.sparkSession, dict(var_rows),
+                    dict(lt_rows) if lt_rows is not None else None)
     if decoder is not None:
         return df.withColumn(out_col, decoder.column(cols))
     df = attach_logtype(df, logtype_dict)

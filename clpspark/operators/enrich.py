@@ -9,12 +9,13 @@ Spark-first equivalents here:
     scalable zipWithIndex pattern — no global window, no per-partition
     counters, parallelism-invariant ids.
   - ``enrich``: broadcast hash join of events against the logtype dictionary
-    plus dict-var id fill. Two var-dict strategies:
-      * 'map'  (default): the var dict is broadcast as a Python dict into an
+    plus dict-var id fill. Two var-dict strategies, picked by
+    ``decode.driver_rows`` (the one residency gate):
+      * map: the var dict is broadcast as a Python dict into an
         Arrow-batched UDF that fills the null slots of ``encoded_vars`` —
-        right when the dict fits in executor memory (CLP bounds dictionary
-        size by splitting archives; we mirror that assumption).
-      * 'join': posexplode -> shuffle join -> re-assemble; no memory bound,
+        right while the dict fits ``decode.map_fits`` (CLP bounds
+        dictionary size by splitting archives; we mirror that assumption).
+      * join: posexplode -> shuffle join -> re-assemble; no memory bound,
         strictly more shuffle. Kept for the huge-dict regime and tested equal.
 """
 
@@ -23,6 +24,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from clpspark.operators.decode import driver_rows
 
 ENRICHED_EXTRA_COLS = ("logtype_id", "var_ids")
 
@@ -181,30 +184,18 @@ def enrich(
 ) -> DataFrame:
     """Attach logtype_id (broadcast hash join) and fill dict-var ids.
 
-    ``mode="auto"`` selects the strategy by dictionary size: the python-map
-    broadcast while the dictionary is collectable, the shuffle join beyond —
-    a tens-of-GB var dictionary at 100 TB must never reach the driver. One
-    bounded collect both gates and builds the map (decode's
-    ``resolve_mode_and_map``, keyed by string); callers that already know
-    the dictionary's size resolve the gate with ``decode.map_fits`` and
-    pass ``"map"`` or ``"join"``.
+    ``mode`` goes to ``decode.driver_rows``: ``"auto"`` fills from a
+    broadcast python map while the var dictionary fits ``map_fits`` and
+    through the shuffle join beyond — a tens-of-GB var dictionary at
+    100 TB must never reach the driver — with one bounded collect that
+    both gates and builds the map; ``"map"`` and ``"join"`` force a path.
     """
-    spark = parsed.sparkSession
-    if mode == "auto":
-        from clpspark.operators.decode import resolve_mode_and_map
-
-        # entry-count AND byte-size gated (huge-string dicts must not be
-        # collected to the driver even below the entry cap)
-        mode, var_map = resolve_mode_and_map(var_dict, "var_str", "var_id")
-    elif mode == "map":
-        var_map = {r["var_str"]: r["var_id"] for r in var_dict.collect()}
-    if mode == "map":
-        var_map_bc = spark.sparkContext.broadcast(var_map)
-        filled = _fill_var_ids_map(parsed, var_map_bc)
-    elif mode == "join":
+    rows = driver_rows(var_dict, ["var_str", "var_id"], "var_str", mode)
+    if rows is None:
         filled = _fill_var_ids_join(parsed, var_dict)
     else:
-        raise ValueError(f"unknown enrich mode: {mode}")
+        var_map_bc = parsed.sparkSession.sparkContext.broadcast(dict(rows))
+        filled = _fill_var_ids_map(parsed, var_map_bc)
     return filled.join(
         F.broadcast(logtype_dict.select("logtype", "logtype_id")), "logtype", "left"
     )
@@ -213,8 +204,9 @@ def enrich(
 def _fill_var_ids_join(parsed: DataFrame, var_dict: DataFrame) -> DataFrame:
     """Shuffle-join variant: posexplode dict_vars -> join -> reassemble.
 
-    Used when the var dictionary exceeds broadcastable size. One extra
-    shuffle on doc_id; keyed reassembly preserves variable order via pos.
+    Used when ``decode.driver_rows`` keeps the var dictionary in Spark.
+    One extra shuffle on doc_id; keyed reassembly preserves variable order
+    via pos.
     """
     base = parsed
     exploded = base.select(
@@ -237,15 +229,4 @@ def _fill_var_ids_join(parsed: DataFrame, var_dict: DataFrame) -> DataFrame:
     out = base.join(ids, "doc_id", "left").withColumn(
         "var_ids", F.coalesce(F.col("var_ids"), F.array().cast("array<bigint>"))
     )
-    # fill dict slots from var_ids by position (JVM-side, codegen'd)
-    return out.withColumn(
-        "encoded_vars",
-        F.expr(
-            """
-            transform(encoded_vars, (v, i) ->
-              CASE WHEN array_position(dict_slots, i) > 0
-                   THEN var_ids[CAST(array_position(dict_slots, i) AS INT) - 1]
-                   ELSE v END)
-            """
-        ),
-    )
+    return out.withColumn("encoded_vars", F.expr(_FILL_EXPR))

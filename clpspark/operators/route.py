@@ -154,11 +154,6 @@ def build_var_index(routed: DataFrame) -> DataFrame:
     )
 
 
-def read_routed(spark, out_dir: str) -> DataFrame:
-    """Read the fan-out back; partition pruning applies on sink_col filters."""
-    return spark.read.parquet(out_dir)
-
-
 def logtype_var_classes(logtype: str) -> list[str]:
     """Variable-slot classes of a logtype, in placeholder order:
     'i' (encoded int), 'f' (encoded float), 'd' (dictionary id)."""

@@ -72,7 +72,6 @@ class PipelineConfig:
     # compresses. Downstream stages are format-agnostic.
     input_format: str = "corpus"
     vocab_seed: int = 42
-    enrich_mode: str = "auto"
     route_salt: int | None = None  # None -> one salt bucket per shuffle task
     bucket_ms: int = 3_600_000  # 1h count-by-time buckets
     version: int = 1
@@ -115,7 +114,6 @@ class PipelineConfig:
                 "input": self.input_path,
                 "input_format": self.input_format,
                 "vocab_seed": self.vocab_seed,
-                "enrich_mode": self.enrich_mode,
                 "route_salt": self.route_salt,
                 "bucket_ms": self.bucket_ms,
                 "version": self.version,
@@ -328,12 +326,10 @@ def run_pipeline(
     # -- stage 3: enrich + route ---------------------------------------------
     def _route() -> dict:
         dict_stats = log.metrics("dicts")
-        enrich_mode = config.enrich_mode
-        if enrich_mode == "auto":
-            # decode's map-vs-join gate, fed from lineage: no stats job
-            enrich_mode = ("map" if map_fits(dict_stats["n_vars"],
-                                             dict_stats["var_bytes"])
-                           else "join")
+        # decode's map-vs-join gate, fed from lineage: no stats job
+        enrich_mode = ("map" if map_fits(dict_stats["n_vars"],
+                                         dict_stats["var_bytes"])
+                       else "join")
         logtype_dict = spark.read.schema(LOGTYPE_DICT_SCHEMA).parquet(lt_path)
         var_dict = spark.read.schema(VAR_DICT_SCHEMA).parquet(var_path)
         enriched = enrich(parsed(), logtype_dict, var_dict, mode=enrich_mode)
@@ -574,7 +570,7 @@ def run_split_pipeline(
         lo = c
     bounds.append((lo, None))
 
-    enriched = enrich(parsed, logtype_dict, var_dict, mode=config.enrich_mode)
+    enriched = enrich(parsed, logtype_dict, var_dict)
     # all archives of one run live under ONE parquet root as an extra
     # partition level (archive=<i>/logtype_id=<j>): a dictionary generation
     # reads back as a single partition-pruned scan, not N conflicting roots

@@ -17,12 +17,14 @@ Spark-first re-creation (plan-time, no custom Catalyst rules needed):
          selects candidate logtype_ids -> ``logtype_id IN (...)``
        - dict-var ids select sinks through the (var_id, logtype_id) index
          and files through the manifest's bloom filters
-     While both dictionaries fit ``decode.map_fits`` (map mode), every
-     probe answers from driver-resident state — the collected maps the
-     decode broadcasts anyway, plus the collected var index — with no
-     Spark job, like CLP's in-memory dictionary readers. Past the gate
-     (join mode) each probe is a filtered Spark scan that returns only
-     the matching ids.
+     Each dictionary's driver residency is decided by
+     ``decode.driver_rows``, the gate decode and enrich use too. While
+     both dictionaries fit ``decode.map_fits`` (map mode), every probe
+     answers from driver-resident state — the collected maps the decode
+     broadcasts anyway, plus the collected var index — with no Spark job,
+     like CLP's in-memory dictionary readers. A dictionary past the gate
+     is probed with a filtered Spark scan that returns only the matching
+     ids.
   2. the rewritten predicate is handed to Catalyst: IN on the partition
      column prunes sinks (partitionBy(logtype_id) layout), array_contains
      prunes rows, all JVM-side
@@ -51,17 +53,14 @@ from clpspark.ref.wildcard import (
 _WILDCARDS = "*?"
 _ESCAPED = re.compile(r"\\(.)", re.DOTALL)
 
-# Logtype-dictionary driver-residency gate. CLP bounds dictionary growth by
-# splitting archives, and the reference scans its in-memory dictionary per
-# query (clp/DictionaryReader.hpp:243-307) — but a merged/catalog-scale
-# dictionary must NOT be collected to the driver. Past these caps the
-# wildcard probe runs as a filtered Spark scan instead (only matching ids
-# come back), mirroring the byte guard the var-dict decode already has
-# (operators/decode.py resolve_decode_mode).
-LOGTYPE_COLLECT_MAX_ENTRIES = 100_000
-LOGTYPE_COLLECT_MAX_BYTES = 64 << 20
-# A Spark-side probe matching more ids than this carries no pruning power
-# worth an IN list of that size — treat the query as logtype-unconstrained.
+# CLP bounds dictionary growth by splitting archives, and the reference scans
+# its in-memory dictionary per query (clp/DictionaryReader.hpp:243-307) — but
+# a merged/catalog-scale dictionary must NOT be collected to the driver. Past
+# ``decode.map_fits`` (asked through ``decode.driver_rows``) the logtype
+# wildcard probe runs as a filtered Spark scan instead: only matching ids
+# come back. A Spark-side probe matching more ids than this carries no
+# pruning power worth an IN list of that size — treat the query as
+# logtype-unconstrained.
 LOGTYPE_PROBE_MAX_IDS = 10_000
 
 
@@ -217,11 +216,15 @@ class GrepEngine:
         and the same driver copies — plus the var index, under the same
         entry gate — answer every plan-time probe. A warm query runs only
         its own scan.
-      - join (past the gate, or forced): neither dictionary is collected.
-        Plan-time probes are filtered Spark scans (only matching ids come
-        back to the driver) and decode joins. The logtype dictionary is
-        still collected for the LIKE probe while it fits its own, smaller
-        gate (LOGTYPE_COLLECT_MAX_*), unless join mode was forced.
+      - join (either dictionary past the gate, or forced): decode joins
+        and the var probes are filtered Spark scans (only matching ids come
+        back to the driver). In auto mode a logtype dictionary that fits
+        the gate on its own still answers the LIKE probe from the driver;
+        forced join collects neither dictionary.
+
+    Both modes resolve each dictionary through ``decode.driver_rows``, the
+    same gate ``decode_messages`` and ``enrich`` use, so all three pick the
+    same path for the same dictionary pair.
     """
 
     def __init__(self, events: DataFrame, logtype_dict: DataFrame,
@@ -555,11 +558,10 @@ class GrepEngine:
             return self._var_index_by_var
 
     def _logtype_entries(self) -> list[tuple[int, str]] | None:
-        """Driver-side (logtype_id, logtype) list when the dictionary fits
-        the entry/byte gate, else None (probes stay Spark-side), and always
-        None when join mode was forced. One limit-bounded collect resolves
-        both gates — never an unbounded collect of an oversized
-        dictionary."""
+        """Driver-side (logtype_id, logtype) rows from ``decode.driver_rows``
+        under the engine's decode mode, resolved once: None when the
+        dictionary stays in Spark (probes stay Spark-side), and without
+        any job when join mode was forced."""
         if self._decode_mode == "join":
             return None
         d = self._dicts
@@ -569,22 +571,13 @@ class GrepEngine:
         # collect OUTSIDE the lock: _resolve_decode overlaps this job with
         # the var-dict collect on another thread (racing builders are rare
         # and both produce the same value; first publisher wins)
-        rows = (
-            self._lt_df.select("logtype_id", "logtype")
-            .limit(LOGTYPE_COLLECT_MAX_ENTRIES + 1)
-            .collect()
-        )
-        small = len(rows) <= LOGTYPE_COLLECT_MAX_ENTRIES and (
-            sum(len(r["logtype"]) for r in rows)
-            <= LOGTYPE_COLLECT_MAX_BYTES
-        )
-        val = (
-            [(r["logtype_id"], r["logtype"]) for r in rows]
-            if small else None
-        )
+        from clpspark.operators.decode import driver_rows
+
+        rows = driver_rows(self._lt_df, ["logtype_id", "logtype"], "logtype",
+                           self._decode_mode)
         with d.lock:
             if not d.logtypes_resolved:
-                d.logtypes = val
+                d.logtypes = rows
                 d.logtypes_resolved = True
             return d.logtypes
 
@@ -820,53 +813,35 @@ class GrepEngine:
         )
 
     def _resolve_decode(self) -> _DictState:
-        """Resolve the decode strategy once. Map mode (auto, when both
-        dictionaries fit ``decode.map_fits``, or forced) collects both
-        dictionaries — the var-dict collect overlapping the logtype one —
-        and broadcasts them; join mode collects neither."""
+        """Resolve the decode strategy once: map mode iff
+        ``decode.driver_rows`` keeps BOTH dictionaries on the driver (the
+        var-dict collect overlapping the logtype one), which are then
+        broadcast; join mode otherwise."""
         d = self._dicts
         with d.lock:
             if d.mode is not None:
                 return d
-        mode = self._decode_mode
-        if mode not in ("auto", "map", "join"):
-            raise ValueError(f"unknown decode mode: {mode}")
-        var_map = lt_map = None
-        if mode != "join":
-            from clpspark.operators.decode import collect_if_fits, map_fits
-            from clpspark.operators.util import run_jobs
+        from clpspark.operators.decode import MapDecoder, driver_rows
+        from clpspark.operators.util import run_jobs
 
-            def var_rows():
-                if mode == "map":
-                    return self._vd_df.select("var_id", "var_str").collect()
-                return collect_if_fits(self._vd_df, ["var_id", "var_str"],
-                                       "var_str")
-
-            # the two collects overlap and run OUTSIDE the lock; first
-            # publisher wins
-            got = run_jobs(self.spark, {"var_dict": var_rows,
-                                        "logtype_dict": self._logtype_entries},
-                           max_workers=2)
-            rows, entries = got["var_dict"], got["logtype_dict"]
-            if entries is not None and map_fits(
-                    len(entries), sum(len(lt) for _, lt in entries)):
-                lt_map = dict(entries)
-            elif mode == "map":
-                lt_map = {r["logtype_id"]: r["logtype"] for r in
-                          self._lt_df.select("logtype_id", "logtype")
-                          .collect()}
-            if rows is not None and lt_map is not None:
-                var_map = {r["var_id"]: r["var_str"] for r in rows}
+        # the two collects overlap and run OUTSIDE the lock; first
+        # publisher wins
+        got = run_jobs(self.spark, {
+            "var_dict": lambda: driver_rows(
+                self._vd_df, ["var_id", "var_str"], "var_str",
+                self._decode_mode),
+            "logtype_dict": self._logtype_entries,
+        }, max_workers=2)
+        rows, entries = got["var_dict"], got["logtype_dict"]
         with d.lock:
             if d.mode is None:
-                if var_map is None:
+                if rows is None or entries is None:
                     d.mode = "join"
                 else:
-                    from clpspark.operators.decode import MapDecoder
-
                     d.mode = "map"
-                    d.var_map = var_map
-                    d.decoder = MapDecoder(self.spark, var_map, lt_map)
+                    d.var_map = dict(rows)
+                    d.decoder = MapDecoder(self.spark, d.var_map,
+                                           dict(entries))
             return d
 
     @staticmethod
@@ -922,7 +897,3 @@ def _sql_like_match(pattern: str):
         ) + "$"
     )
     return lambda s: rx.match(s) is not None
-
-
-def _spark_type(df: DataFrame, col: str) -> str:
-    return df.schema[col].dataType.simpleString()

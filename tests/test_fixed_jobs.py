@@ -330,18 +330,23 @@ def test_run_jobs_failure_cancels_running_sibling(spark):
 @pytest.mark.parametrize("materialize,enrich_mode", [
     (True, "auto"), (False, "map"), (False, "join")])
 def test_fresh_run_stages_own_jobs_and_wall(spark, small_corpus, tmp_path,
-                                            materialize, enrich_mode):
+                                            monkeypatch, materialize,
+                                            enrich_mode):
     """A fresh run in each parse mode: stage ``sec`` values sum to at least
     95% of ``total_sec``; every Spark job between two marker jobs belongs
     to a ``clpspark:<stage>`` group; each stage's jobs finish before its
     lineage commit (parse included: the parse parquet is written inside
-    the parse stage); the route stage records the enrich path it took;
-    the two-pass spill is gone."""
+    the parse stage); the route stage records the enrich path it took
+    (the default gates pick map; join is forced by shrinking
+    ``decode.AUTO_MAP_MAX_ENTRIES``); the two-pass spill is gone."""
+    import clpspark.operators.decode as D
+
+    if enrich_mode == "join":
+        monkeypatch.setattr(D, "AUTO_MAP_MAX_ENTRIES", 0)
     sc = spark.sparkContext
     cfg = PipelineConfig(input_path=small_corpus,
                          work_dir=str(tmp_path / "w"),
-                         materialize_parsed=materialize,
-                         enrich_mode=enrich_mode)
+                         materialize_parsed=materialize)
     before = _marker_job_id(sc, "stages-before")
     m = run_pipeline(spark, cfg, resume=False)
     after = _marker_job_id(sc, "stages-after")

@@ -158,6 +158,23 @@ def test_enrich_modes_agree(spark, small_corpus, vocab_meta):
     assert ka == kb
 
 
+def test_auto_mode_switches_on_bytes(spark, monkeypatch):
+    """A dictionary of huge strings selects the join strategy well below the
+    entry cap (driver must never collect it)."""
+    import clpspark.operators.decode as D
+
+    monkeypatch.setattr(D, "AUTO_MAP_MAX_BYTES", 1000)
+    small = spark.createDataFrame(
+        [("x" * 10, 0)], "var_str string, var_id bigint"
+    )
+    huge = spark.createDataFrame(
+        [("x" * 2000, 0)], "var_str string, var_id bigint"
+    )
+    cols = ["var_str", "var_id"]
+    assert D.driver_rows(small, cols, "var_str", "auto") == [("x" * 10, 0)]
+    assert D.driver_rows(huge, cols, "var_str", "auto") is None
+
+
 def test_zip_with_index_dense_and_deterministic(spark):
     vals = [f"v{i:03d}" for i in range(57)]
     df = spark.createDataFrame([(v,) for v in vals * 3], ["x"])

@@ -371,6 +371,114 @@ def test_grep_join_decode_matches_map(grep_setup, spark, vocab_meta,
     assert not d.logtypes_resolved  # the logtype dictionary stayed put
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_residency_gate_agrees_across_decode_enrich_grep(spark, monkeypatch):
+    """decode_messages, enrich and GrepEngine resolve map vs join through
+    one gate, so they agree on every dictionary pair. A logtype dictionary
+    of 100,001 entries fits ``map_fits`` under the default gates: all three
+    pick map and decode plans no join. With ``AUTO_MAP_MAX_*`` below the
+    var dictionary's size all three take the join path, with the same
+    output."""
+    import clpspark.operators.decode as D
+    from pyspark.sql import functions as F
+
+    from clpspark.ref import encoder as E
+
+    msgs = {f"d{i:02d}": f"task t{i % 4} finished for user_{i % 3} "
+                         f"in {7 * i} ms" for i in range(40)}
+    msgs["d40"] = "disk node-7 low at 0.25 ratio"
+    parsed_rows, lts, var_ids = [], {}, {}
+    for doc_id, msg in sorted(msgs.items()):
+        em = E.encode_message(msg)
+        slots = [k for k, v in enumerate(em.encoded_vars) if v is None]
+        for v in em.dict_vars:
+            var_ids.setdefault(v, len(var_ids))
+        lts.setdefault(em.logtype, len(lts))
+        parsed_rows.append((doc_id, em.logtype,
+                            [v or 0 for v in em.encoded_vars], slots,
+                            list(em.dict_vars)))
+    parsed = spark.createDataFrame(
+        parsed_rows, "doc_id string, logtype string, "
+        "encoded_vars array<bigint>, dict_slots array<int>, "
+        "dict_vars array<string>")
+    n_logtypes = 100_001
+    lt = spark.createDataFrame(list(lts.items()),
+                               "logtype string, logtype_id bigint").union(
+        spark.range(len(lts), n_logtypes).select(
+            F.concat(F.lit("filler "), F.col("id").cast("string")),
+            F.col("id")))
+    vd = spark.createDataFrame(list(var_ids.items()),
+                               "var_str string, var_id bigint")
+    queries = ["* user_1 *", "*finished*", "* in 35 ms", "* node-7 *",
+               "* user_9 *"]
+
+    def run(path: str):
+        enriched = enrich(parsed, lt, vd)
+        assert ("posexplode" in _plan(enriched)) == (path == "join")
+        events = enriched.drop("logtype", "dict_vars").localCheckpoint()
+        decoded = D.decode_messages(events, vd, logtype_dict=lt)
+        assert ("Join" in _plan(decoded)) == (path == "join")
+        eng = GrepEngine(events, lt, vd)
+        assert eng._resolve_decode().mode == path
+        cols = ["doc_id", "logtype_id", "encoded_vars", "var_ids"]
+        return (sorted(map(tuple, enriched.select(cols).collect())),
+                {r["doc_id"]: r["message"] for r in decoded.collect()},
+                {q: sorted(r["doc_id"] for r in eng.search(q).collect())
+                 for q in queries})
+
+    enriched, decoded, found = run("map")
+    assert decoded == msgs
+    assert found["* user_1 *"] and found["* node-7 *"]
+    assert not found["* user_9 *"]
+    assert len(found["*finished*"]) == 40
+    monkeypatch.setattr(D, "AUTO_MAP_MAX_ENTRIES", len(var_ids) - 1)
+    monkeypatch.setattr(D, "AUTO_MAP_MAX_BYTES", 1)
+    assert run("join") == (enriched, decoded, found)
+
+
+def test_logtype_dict_byte_gate_spark_probe(spark, vocab_meta, tmp_path,
+                                            monkeypatch):
+    """Past the driver-residency gate (``decode.map_fits``, forced down
+    through ``decode.AUTO_MAP_MAX_*``) the logtype wildcard probe must run
+    as a filtered Spark scan with identical search results."""
+    import clpspark.operators.decode as D
+    import clpspark.plans.grep as G
+    from clpspark.corpus import write_corpus
+    from clpspark.pipeline import PipelineConfig, run_pipeline
+
+    inp = str(tmp_path / "seq")
+    write_corpus(spark, inp, n_rows=3000, seed=11, partitions=2)
+    work = str(tmp_path / "work")
+    run_pipeline(spark, PipelineConfig(input_path=inp, work_dir=work))
+
+    queries = ["* error *", "*disk_low*", "* user=* action=login *",
+               "session *", "* zzz_nothing *"]
+
+    eng_small = G.GrepEngine._from_work_dir_uncached(spark, work)
+    baseline = {q: sorted(r["doc_id"]
+                          for r in eng_small.search(q).select("doc_id").collect())
+                for q in queries}
+    assert eng_small._logtype_entries() is not None  # small path taken
+    assert any(baseline.values())  # at least one query matches something
+
+    monkeypatch.setattr(D, "AUTO_MAP_MAX_ENTRIES", 1)
+    eng_big = G.GrepEngine._from_work_dir_uncached(spark, work)
+    assert eng_big._logtype_entries() is None  # gate forced the fallback
+    for q in queries:
+        got = sorted(r["doc_id"]
+                     for r in eng_big.search(q).select("doc_id").collect())
+        assert got == baseline[q], q
+    # over-wide probes degrade to unconstrained, never to empty
+    monkeypatch.setattr(G, "LOGTYPE_PROBE_MAX_IDS", 0)
+    eng_cap = G.GrepEngine._from_work_dir_uncached(spark, work)
+    got = sorted(r["doc_id"]
+                 for r in eng_cap.search("* error *").select("doc_id").collect())
+    assert got == baseline["* error *"]
+
+
 def test_grep_state_resolves_once_under_threads(grep_setup):
     """Concurrent first queries on a cold engine race their dictionary
     collects, but publish ONE decoder and one inverse map per case mode:

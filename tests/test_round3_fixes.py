@@ -167,25 +167,6 @@ def test_pair_miners_leave_no_persistent_rdds(spark):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-# -------------------------------------------------- byte-gated dict auto mode
-
-
-def test_auto_mode_switches_on_bytes(spark, monkeypatch):
-    """A dictionary of huge strings selects the join strategy well below the
-    entry cap (driver must never collect it)."""
-    import clpspark.operators.decode as D
-
-    monkeypatch.setattr(D, "AUTO_MAP_MAX_BYTES", 1000)
-    small = spark.createDataFrame(
-        [("x" * 10, 0)], "var_str string, var_id bigint"
-    )
-    huge = spark.createDataFrame(
-        [("x" * 2000, 0)], "var_str string, var_id bigint"
-    )
-    assert D.resolve_decode_mode(small) == "map"
-    assert D.resolve_decode_mode(huge) == "join"
-
-
 # -------------------------------------------------- vectorized simhash parity
 
 

@@ -100,45 +100,6 @@ def test_bounded_catalog_search_keeps_dateless_json_archive(spark, tmp_path):
     assert [r["doc_id"] for r in out.collect()] == ["d0"]
 
 
-def test_logtype_dict_byte_gate_spark_probe(spark, vocab_meta, tmp_path,
-                                            monkeypatch):
-    """Past the driver-residency gate the logtype wildcard probe must run
-    as a filtered Spark scan with identical search results (VERDICT r4 #2:
-    the var-dict got a byte guard, the logtype dict didn't)."""
-    import clpspark.plans.grep as G
-    from clpspark.corpus import write_corpus
-    from clpspark.pipeline import PipelineConfig, run_pipeline
-
-    inp = str(tmp_path / "seq")
-    write_corpus(spark, inp, n_rows=3000, seed=11, partitions=2)
-    work = str(tmp_path / "work")
-    run_pipeline(spark, PipelineConfig(input_path=inp, work_dir=work))
-
-    queries = ["* error *", "*disk_low*", "* user=* action=login *",
-               "session *", "* zzz_nothing *"]
-
-    eng_small = G.GrepEngine._from_work_dir_uncached(spark, work)
-    baseline = {q: sorted(r["doc_id"]
-                          for r in eng_small.search(q).select("doc_id").collect())
-                for q in queries}
-    assert eng_small._logtype_entries() is not None  # small path taken
-    assert any(baseline.values())  # at least one query matches something
-
-    monkeypatch.setattr(G, "LOGTYPE_COLLECT_MAX_ENTRIES", 1)
-    eng_big = G.GrepEngine._from_work_dir_uncached(spark, work)
-    assert eng_big._logtype_entries() is None  # gate forced the fallback
-    for q in queries:
-        got = sorted(r["doc_id"]
-                     for r in eng_big.search(q).select("doc_id").collect())
-        assert got == baseline[q], q
-    # over-wide probes degrade to unconstrained, never to empty
-    monkeypatch.setattr(G, "LOGTYPE_PROBE_MAX_IDS", 0)
-    eng_cap = G.GrepEngine._from_work_dir_uncached(spark, work)
-    got = sorted(r["doc_id"]
-                 for r in eng_cap.search("* error *").select("doc_id").collect())
-    assert got == baseline["* error *"]
-
-
 def test_kql_first_class_projection(spark, tmp_path):
     """JsonArchive.kql(project=[...]) — clp_s search/Projection.cpp parity:
     encoded leaves decode for matching docs only, records paths stay typed,
