@@ -9,9 +9,10 @@ atomically via write-to-temp + rename; ``run_pipeline(resume=True)`` skips
 stages whose fingerprint matches and whose output exists.
 
 Per-partition metrics: the route stage records one row per sink (row count +
-order-insensitive checksum of doc_ids), computed with a single aggregation
-over the written data — audit rows derived from what was actually committed,
-not from what the job intended to write.
+order-insensitive checksum of doc_ids), rolled up from the per-file stats of
+its fused post-route pass over the written files — audit rows derived from
+what was actually committed, not from what the job intended to write. The
+aggregate stage publishes those counts as agg_sink_counts.
 """
 
 from __future__ import annotations

@@ -3,18 +3,15 @@
 Every aggregate here maps to a built-in partial/final hash aggregate — the
 same two-phase split the reference implements by hand
 (reducer/CountOperator.cpp:4-24 intra/inter-stage merge; Spark's
-partial_count -> final merge is identical and free).
+partial_count -> final merge is identical and free). Per-sink row counts
+are not among them: the pipeline rolls those up from the route stage's
+fused per-file counts (snapshots.sink_audit_from_stats) without a scan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def per_sink_counts(df: DataFrame, sink_col: str = "logtype_id") -> DataFrame:
-    """Exact per-sink row counts (the correctness gate of the north rule)."""
-    return df.groupBy(sink_col).agg(F.count("*").alias("n_rows"))
 
 
 def per_source_token_stats(df: DataFrame) -> DataFrame:

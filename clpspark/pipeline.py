@@ -6,7 +6,8 @@ committed to the lineage log; resume skips committed stages):
   1. parse      sequences -> parsed/ or _parsed_twopass/  (1 full parse pass)
   2. dicts      parsed -> logtype_dict/, var_dict/   (column-pruned scans)
   3. route      parsed + dicts -> routed/ (partitionBy logtype_id, salted)
-  4. aggregate  routed -> agg_sink_counts/, agg_source_stats/, agg_by_time/
+  4. aggregate  agg_sink_counts/ from route's audit; routed ->
+                agg_source_stats/, agg_by_time/
   5. snapshot   one manifest over every output table
 
 Every stage goes through one runner, ``stage()``: a stage is skipped on
@@ -30,6 +31,16 @@ dictionary build's own collect and are committed to lineage, where the
 enrich gate and route's salting read them; just-written tables are read
 back with a known schema (no inference job); routed/ is read once per run;
 the snapshot lists files on the driver.
+
+One source for routed metadata: the route stage's fused pass
+(snapshots.collect_file_stats_and_var_index) is the only code that derives
+metadata from routed/. Its per-file stats (rows, ts bounds, sink, doc_id
+checksum, bloom) are a declared route output, the _routed_file_stats.json
+sidecar keyed by the route fingerprint, so a resume that skips route
+always has them — a missing or stale sidecar reruns route. The per-sink
+audit rolls up from them and becomes agg_sink_counts; the snapshot manifest
+and the catalog row (ts range, row count) are folded from them on the
+driver. Only agg_source_stats and agg_by_time scan routed/ again.
 """
 
 from __future__ import annotations
@@ -41,6 +52,7 @@ import shutil
 import time
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -178,22 +190,23 @@ def _read_parsed(spark: SparkSession, config: "PipelineConfig",
         _parsed_path(config, durable))
 
 
-def _write_stats_sidecar(config: "PipelineConfig", route_fp: str,
+def _write_stats_sidecar(config: "PipelineConfig",
                          stats: list[dict]) -> None:
     """Atomically persist the route stage's per-file stats, keyed by the
-    route fingerprint, so the snapshot stage (this run or a resumed one)
-    reuses them instead of re-scanning the fan-out."""
+    route fingerprint: every later stage (this run or a resumed one) reads
+    them instead of scanning the fan-out."""
     import json
 
     path = config.path("_routed_file_stats.json")
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump({"route_fp": route_fp, "stats": stats}, f)
+        json.dump({"route_fp": config.fp("route"), "stats": stats}, f)
     os.replace(tmp, path)
 
 
-def _read_stats_sidecar(config: "PipelineConfig",
-                        route_fp: str) -> list[dict] | None:
+def _read_stats_sidecar(config: "PipelineConfig") -> list[dict] | None:
+    """The route stage's per-file stats; None when the sidecar is missing
+    or was written under another route fingerprint."""
     import json
 
     path = config.path("_routed_file_stats.json")
@@ -201,22 +214,31 @@ def _read_stats_sidecar(config: "PipelineConfig",
         return None
     with open(path) as f:
         d = json.load(f)
-    return d["stats"] if d.get("route_fp") == route_fp else None
+    return d["stats"] if d.get("route_fp") == config.fp("route") else None
+
+
+def _no_rows(config: "PipelineConfig") -> ValueError:
+    src = list(config.input_files) if config.input_files \
+        else config.input_path
+    return ValueError(f"input {src!r} parsed to 0 rows: nothing to route")
 
 
 def _register(spark: SparkSession, config: "PipelineConfig",
-              catalog_dir: str, routed: DataFrame, archive_id: str,
+              catalog_dir: str, stats: list[dict], archive_id: str,
               path: str, dict_path: str | None = None) -> None:
     """Register one routed archive in the metadata catalog with its
-    timestamp range and row count."""
+    timestamp range and row count, folded on the driver from the archive's
+    per-file stats (no Spark scan)."""
     from clpspark.catalog import register_archive
 
-    rng = routed.agg(F.min("ts").alias("b"), F.max("ts").alias("e"),
-                     F.count("*").alias("n")).first()
-    register_archive(spark, catalog_dir, archive_id=archive_id, path=path,
-                     begin_ts=rng["b"], end_ts=rng["e"], n_rows=rng["n"],
-                     tags=list(config.tags), dict_path=dict_path,
-                     dataset=config.dataset)
+    register_archive(
+        spark, catalog_dir, archive_id=archive_id, path=path,
+        begin_ts=min((s["min_ts"] for s in stats
+                      if s["min_ts"] is not None), default=None),
+        end_ts=max((s["max_ts"] for s in stats
+                    if s["max_ts"] is not None), default=None),
+        n_rows=sum(s["n_rows"] for s in stats),
+        tags=list(config.tags), dict_path=dict_path, dataset=config.dataset)
 
 
 # dictionary stats the dicts stage commits and the route stage consumes; a
@@ -263,7 +285,10 @@ def run_pipeline(
 
     need_dicts = not (done("dicts", "logtype_dict", "var_dict")
                       and _DICT_STATS <= log.metrics("dicts").keys())
-    need_route = not done("route", "routed")
+    # the route stage's per-file stats: read from its sidecar on resume,
+    # set by the stage itself when it runs
+    routed_stats = _read_stats_sidecar(config)
+    need_route = not (done("route", "routed") and routed_stats is not None)
     durable = config.materialize_parsed
     spill = None if durable else _parsed_path(config, durable)
 
@@ -319,13 +344,20 @@ def run_pipeline(
     def _routed() -> DataFrame:
         # ONE read of the fan-out per run, after the route stage wrote it:
         # partition discovery over more than 32 sink dirs is a distributed
-        # listing job. No forced schema here — the logtype_id partition
-        # column reads back as int, the written column is bigint.
+        # listing job. Its readers: the route stage's fused stats pass, the
+        # two scanning aggregates and the text-input range index; every
+        # other metadata consumer reads the fused stats. No forced schema
+        # here — the logtype_id partition column reads back as int, the
+        # written column is bigint.
         return spark.read.parquet(config.path("routed"))
 
     # -- stage 3: enrich + route ---------------------------------------------
     def _route() -> dict:
+        nonlocal routed_stats
         dict_stats = log.metrics("dicts")
+        if dict_stats["n_rows"] == 0:
+            # routed/ would hold only _SUCCESS, which no read can type
+            raise _no_rows(config)
         # decode's map-vs-join gate, fed from lineage: no stats job
         enrich_mode = ("map" if map_fits(dict_stats["n_vars"],
                                          dict_stats["var_bytes"])
@@ -343,23 +375,23 @@ def run_pipeline(
         )
         # fused post-route metadata pass (2 narrow scans): per-file
         # skipping stats + the var-id -> sink inverted index
-        # (Archive.cpp:487-526 analog). The stats serve three consumers —
-        # per-sink audit (file ⊂ sink under partitionBy), the snapshot
-        # stage's file skipping, and the snapshot's routed file list (no
-        # re-scan, no re-listing) — via a fingerprinted sidecar.
+        # (Archive.cpp:487-526 analog). The stats are the run's one source
+        # of routed metadata — the per-sink audit (file ⊂ sink under
+        # partitionBy) and agg_sink_counts, the snapshot's file skipping and
+        # routed file list, the catalog row — via a fingerprinted sidecar.
         from clpspark.snapshots import (
             collect_file_stats_and_var_index,
             sink_audit_from_stats,
         )
 
-        stats, var_index = collect_file_stats_and_var_index(
+        routed_stats, var_index = collect_file_stats_and_var_index(
             _routed(), config.work_dir
         )
         zw(var_index).mode("overwrite").parquet(config.path("var_index"))
-        _write_stats_sidecar(config, config.fp("route"), stats)
+        _write_stats_sidecar(config, routed_stats)
         if spill:  # every consumer of the spill is done
             shutil.rmtree(spill, ignore_errors=True)
-        audit = sink_audit_from_stats(stats)
+        audit = sink_audit_from_stats(routed_stats)
         return {
             "enrich_mode": enrich_mode,
             "n_sinks": len(audit),
@@ -369,7 +401,8 @@ def run_pipeline(
 
     try:
         stage("dicts", _dicts, "logtype_dict", "var_dict", rerun=need_dicts)
-        stage("route", _route, "routed")
+        stage("route", _route, "routed", "_routed_file_stats.json",
+              rerun=need_route)
     finally:
         if spill:  # a dicts-only rerun or a failure leaves the spill
             shutil.rmtree(spill, ignore_errors=True)
@@ -425,25 +458,31 @@ def run_pipeline(
 
     # -- stage 4: aggregates ---------------------------------------------------
     def _aggregate() -> dict:
-        # three column-pruned scans of the columnar fan-out — measured 5x
-        # CHEAPER than persisting one shared projection (the cache
-        # materialization costs more than re-decoding 2 narrow zstd columns
-        # per aggregate; 13.6s vs 2.7s at 48M rows / 16 cores). The three
-        # aggregates are independent jobs over different columns: run them
+        # per-sink counts: the route stage's committed audit, written from
+        # the driver with the types a routed/ groupBy gives (a pandas frame
+        # crosses over Arrow; a list of tuples costs a Python worker job).
+        # The other two are column-pruned scans of the columnar
+        # fan-out — measured 5x CHEAPER than persisting one shared
+        # projection (the cache materialization costs more than
+        # re-decoding 2 narrow zstd columns per aggregate; 13.6s vs 2.7s at
+        # 48M rows / 16 cores). The writes are independent jobs: run them
         # concurrently so each back-fills the others' straggler tails
         # (guide §2.6).
+        sink_counts = spark.createDataFrame(
+            pd.DataFrame(metrics["route"]["sinks"],
+                         columns=["logtype_id", "n_rows"]),
+            "logtype_id int, n_rows bigint not null").coalesce(1)
         routed = _routed()
 
-        def write(name: str, fn):
-            return lambda: zw(fn(routed)).mode("overwrite").parquet(
-                config.path(name))
+        def write(name: str, df: DataFrame):
+            return lambda: zw(df).mode("overwrite").parquet(config.path(name))
 
         run_jobs(spark, {
-            "agg_sink_counts": write("agg_sink_counts", agg.per_sink_counts),
+            "agg_sink_counts": write("agg_sink_counts", sink_counts),
             "agg_source_stats": write("agg_source_stats",
-                                      agg.per_source_token_stats),
-            "agg_by_time": write("agg_by_time", lambda r: agg.count_by_time(
-                r, config.bucket_ms, group_cols=("source",))),
+                                      agg.per_source_token_stats(routed)),
+            "agg_by_time": write("agg_by_time", agg.count_by_time(
+                routed, config.bucket_ms, group_cols=("source",))),
         }, max_workers=3)
         return {}
 
@@ -454,11 +493,8 @@ def run_pipeline(
     def _snapshot() -> dict:
         from clpspark.snapshots import snapshot_pipeline_tables
 
-        return {"version": snapshot_pipeline_tables(
-            spark,
-            config.work_dir,
-            routed_stats=_read_stats_sidecar(config, config.fp("route")),
-        )}
+        return {"version": snapshot_pipeline_tables(config.work_dir,
+                                                    routed_stats)}
 
     # a re-run stage rewrote its files: the committed manifest would point
     # at deleted paths — always publish a fresh snapshot in that case
@@ -467,7 +503,7 @@ def run_pipeline(
     # -- optional: register this archive in the metadata catalog --------------
     if config.catalog_dir:
         with job_group(spark, "clpspark:catalog", "catalog"):
-            _register(spark, config, config.catalog_dir, _routed(),
+            _register(spark, config, config.catalog_dir, routed_stats,
                       f"{os.path.basename(config.work_dir)}-"
                       f"{config.fp('route')[:12]}", config.work_dir)
 
@@ -515,6 +551,8 @@ def run_split_pipeline(
         _write_parsed(spark, config, durable=True)
     parsed = _read_parsed(spark, config, durable=True)
     n = parsed.count()
+    if n == 0:
+        raise _no_rows(config)
 
     if target_rows_per_archive is None:
         if target_encoded_bytes is None:
@@ -553,9 +591,9 @@ def run_split_pipeline(
         )
         # under timestamp skew (>= 1/k of rows sharing the max ts) a cut can
         # equal the global max, leaving the final (ts_max, None] slice empty
-        # — route() would then write a data-less dir that crashes the
-        # read-back. Drop any cut at/above the max; the previous slice's
-        # half-open upper bound absorbs those rows.
+        # — route() would then write a data-less archive. Drop any cut
+        # at/above the max; the previous slice's half-open upper bound
+        # absorbs those rows.
         ts_max = int(raw[-1]) if raw else None
         seen: set[int] = set()
         for c in raw[:-1]:
@@ -603,16 +641,13 @@ def run_split_pipeline(
             f"{os.path.basename(config.work_dir)}-{config.fp('route')[:8]}"
             f"-{i:04d}"
         )
-        if catalog_dir or config.catalog_dir:
-            _register(spark, config, catalog_dir or config.catalog_dir,
-                      spark.read.parquet(arch_dir), archive_id, arch_dir,
-                      dict_path=dicts_dir)
         archives.append((archive_id, arch_dir))
     # one (var_id, logtype_id) index covers the whole generation (shared
     # dictionary ids make per-archive indexes redundant for logtype pruning).
     # The SAME fused pass yields per-file skipping stats, committed as a
     # generation-level snapshot so catalog search can manifest-prune files
-    # across all archives of the run.
+    # across all archives of the run, and folded per archive into its
+    # catalog row.
     from clpspark.snapshots import (
         SnapshotStore,
         collect_file_stats_and_var_index,
@@ -642,6 +677,12 @@ def run_split_pipeline(
             "base": os.path.relpath(p, config.work_dir),
         }
     store.commit(tables)
+    if catalog_dir or config.catalog_dir:
+        for archive_id, arch_dir in archives:
+            prefix = os.path.relpath(arch_dir, config.work_dir) + os.sep
+            _register(spark, config, catalog_dir or config.catalog_dir,
+                      [s for s in stats if s["file"].startswith(prefix)],
+                      archive_id, arch_dir, dict_path=dicts_dir)
     return {
         "archives": archives,
         "n_archives": len(bounds),

@@ -616,6 +616,26 @@ class GrepEngine:
         return [r["logtype_id"] for r in rows]
 
     # -------------------------------------------------------------- execution
+    def _scan(self, tge: int | None, tle: int | None,
+              dict_hits: list[list[int]] | None, source: str | None,
+              meta: dict[str, str] | None, ignore_case: bool) -> DataFrame:
+        """The event rows every search path starts from: the manifest- and
+        partition-pruned scan (``_events_for``) narrowed by the range-index
+        ``meta`` filters, ``source`` and the ``tge``/``tle`` bounds."""
+        df = self._events_for(tge, tle, dict_hits)
+        if meta is not None:
+            from clpspark.range_index import match_ranges, range_predicate
+
+            df = df.where(range_predicate(match_ranges(
+                self._range_index, meta, case_sensitive=not ignore_case)))
+        if source is not None:
+            df = df.where(F.col("source") == F.lit(source))
+        if tge is not None:
+            df = df.where(F.col("ts") >= F.lit(tge))
+        if tle is not None:
+            df = df.where(F.col("ts") <= F.lit(tle))
+        return df
+
     def search(
         self,
         query: str,
@@ -643,22 +663,8 @@ class GrepEngine:
             if (prefilter and q != "*")
             else ([], [])
         )
-        df = self._events_for(
-            tge, tle, constraints[1] if constraints else None
-        )
-        if meta is not None:
-            from clpspark.range_index import match_ranges, range_predicate
-
-            matched = match_ranges(
-                self._range_index, meta, case_sensitive=not ignore_case
-            )
-            df = df.where(range_predicate(matched))
-        if source is not None:
-            df = df.where(F.col("source") == F.lit(source))
-        if tge is not None:
-            df = df.where(F.col("ts") >= F.lit(tge))
-        if tle is not None:
-            df = df.where(F.col("ts") <= F.lit(tle))
+        df = self._scan(tge, tle, constraints[1] if constraints else None,
+                        source, meta, ignore_case)
         if q == "*":
             out = self._decode(df)
             return out.limit(limit) if limit else out
@@ -714,23 +720,9 @@ class GrepEngine:
                 add_prefix_suffix_wildcards=True,
             )
         except RegexTranslationError:
-            tge, tle = kw.pop("tge", None), kw.pop("tle", None)
-            df = self._events_for(tge, tle, None)
-            meta = kw.pop("meta", None)
-            if meta is not None:
-                from clpspark.range_index import match_ranges, range_predicate
-
-                df = df.where(range_predicate(match_ranges(
-                    self._range_index, meta,
-                    case_sensitive=not ignore_case,
-                )))
-            for col, val in (("source", kw.pop("source", None)),):
-                if val is not None:
-                    df = df.where(F.col(col) == F.lit(val))
-            if tge is not None:
-                df = df.where(F.col("ts") >= F.lit(tge))
-            if tle is not None:
-                df = df.where(F.col("ts") <= F.lit(tle))
+            df = self._scan(kw.pop("tge", None), kw.pop("tle", None), None,
+                            kw.pop("source", None), kw.pop("meta", None),
+                            ignore_case)
             limit = kw.pop("limit", None)
             pat = f"(?i){regex}" if ignore_case else regex
             out = self._decode(df).where(F.col("message").rlike(pat))

@@ -38,6 +38,12 @@ directly over parquet:
    only — correctness never depends on the filter, exactly like the
    engine's other pre-filters.
 
+One stats builder: :func:`collect_file_stats_and_var_index` computes items 2
+and 3 (plus each file's sink and doc_id checksum) in the route stage's
+fused pass; the snapshot commit takes its result as given and never scans.
+Blooms are always ``BLOOM_BITS`` wide — there is no size knob — and each
+stats entry records its width, so older manifests still prune.
+
 Scale bound: a per-file stats entry is ~300 bytes (256-byte bloom + ts
 bounds), collected to the driver and stored in one manifest JSON. That is
 comfortable to ~100k files per table (≈30 MB manifest); beyond it, shard
@@ -69,7 +75,7 @@ from pyspark.sql import functions as F
 # and the false-positive rate under ~6% at 250 distinct dict vars per file
 # ((1-e^(-kn/m))^k). Files at real scale hold more rows but not many more
 # DISTINCT dict vars per sink (a sink is one logtype family); bump
-# ``bloom_bits`` at build time if vocabulary-per-file grows.
+# BLOOM_BITS if vocabulary-per-file grows.
 BLOOM_BITS = 2048
 BLOOM_SEEDS = (101, 202)
 
@@ -105,103 +111,12 @@ def list_table_files(path: str) -> list[str]:
     return sorted(out)
 
 
-def collect_file_stats(
-    routed: DataFrame,
-    root: str,
-    bloom_bits: int = BLOOM_BITS,
-) -> list[dict]:
-    """Per-data-file skipping stats for a routed fan-out.
-
-    One column-pruned scan feeds two aggregations: (a) per-file row count +
-    ts min/max, (b) per-file distinct bloom-bit positions of the dict-var
-    ids (explode → pmod(xxhash64(id, seed), m) → collect_set). Both group
-    by ``input_file_name()`` — output is #files rows, tiny relative to the
-    data, same shape as an Iceberg manifest.
-    """
-    # ONE scan + ONE shuffle: posexplode_outer keeps empty-array rows (as a
-    # null element), so per-file row counts and ts bounds come from the same
-    # exploded frame as the bloom positions (rows = elements with index 0 or
-    # null; min/max ts are explode-invariant). Map-side partial aggregation
-    # collapses the exploded rows to per-file position sets (≤ bloom_bits
-    # entries each) before anything moves.
-    #
-    # The same pass also yields the route stage's per-sink audit inputs
-    # (sink_audit_from_stats): partitionBy layout means one file ⊂ one sink,
-    # so per-file (logtype_id, doc_id-XOR checksum) roll up exactly.
-    cols = set(routed.columns)
-    ex = routed.select(
-        F.input_file_name().alias("file"),
-        "ts",
-        *(["logtype_id"] if "logtype_id" in cols else []),
-        *(["doc_id"] if "doc_id" in cols else []),
-        F.posexplode_outer(F.expr(_DICT_VAR_IDS)).alias("i", "v"),
-    )
-    is_row = F.col("i").isNull() | (F.col("i") == 0)
-    # xxhash64(NULL, seed) is a non-null constant — guard the padding rows
-    # posexplode_outer emits for empty arrays, or every dict-var-less file
-    # gets a spurious bloom bit (collect_set skips nulls)
-    pos_sets = [
-        F.collect_set(
-            F.when(
-                F.col("v").isNotNull(),
-                F.pmod(F.xxhash64(F.col("v"), F.lit(seed)), F.lit(bloom_bits)),
-            )
-        ).alias(f"s{j}")
-        for j, seed in enumerate(BLOOM_SEEDS)
-    ]
-    extra = []
-    if "logtype_id" in cols:
-        extra.append(F.first("logtype_id").alias("logtype_id"))
-    if "doc_id" in cols:
-        # aggregates skip nulls: only each row's first exploded element
-        # contributes, so duplicates can't cancel the XOR
-        extra.append(
-            F.expr("bit_xor(CASE WHEN i IS NULL OR i = 0 "
-                   "THEN xxhash64(doc_id) END)").alias("checksum")
-        )
-    rows = (
-        ex.groupBy("file")
-        .agg(
-            F.count(F.when(is_row, 1)).alias("n_rows"),
-            F.min("ts").alias("min_ts"),
-            F.max("ts").alias("max_ts"),
-            *extra,
-            *pos_sets,
-        )
-        .collect()
-    )
-    out = []
-    for r in rows:
-        bits = bytearray(bloom_bits // 8)
-        for j in range(len(BLOOM_SEEDS)):
-            for p in r[f"s{j}"]:
-                bits[p // 8] |= 1 << (p % 8)
-        d = {
-            "file": _rel(r["file"], root),
-            "n_rows": r["n_rows"],
-            "min_ts": r["min_ts"],
-            "max_ts": r["max_ts"],
-            "bloom_bits": bloom_bits,
-            "bloom": bytes(bits).hex(),
-        }
-        if "logtype_id" in cols:
-            d["logtype_id"] = r["logtype_id"]
-        if "doc_id" in cols:
-            d["checksum"] = r["checksum"]
-        out.append(d)
-    out.sort(key=lambda d: d["file"])
-    return out
-
-
-def collect_file_stats_and_var_index(
-    routed: DataFrame,
-    root: str,
-    bloom_bits: int = BLOOM_BITS,
-):
-    """Fused post-route metadata pass: per-file stats AND the
-    (var_id, logtype_id) inverted index from TWO narrow scans (instead of
-    three full ones — the standalone stats + var_index jobs were
-    near-constant-cost additions that ate scaling efficiency):
+def collect_file_stats_and_var_index(routed: DataFrame, root: str):
+    """Fused post-route metadata pass — the ONLY code that derives metadata
+    from a routed fan-out: per-file stats AND the (var_id, logtype_id)
+    inverted index from TWO narrow scans. Every other consumer (the route
+    audit, agg_sink_counts, the snapshot manifest, catalog registration)
+    reads the returned stats instead of scanning again:
 
       1. row grain, no explode: per-file counts / ts bounds / audit
          checksum / owning sink (cheap: 2 narrow columns);
@@ -259,14 +174,15 @@ def collect_file_stats_and_var_index(
     ).distinct().select("logtype_id", "var_id")
     pos_cols = [
         F.collect_set(
-            F.pmod(F.xxhash64(F.col("var_id"), F.lit(seed)), F.lit(bloom_bits))
+            F.pmod(F.xxhash64(F.col("var_id"), F.lit(seed)),
+                   F.lit(BLOOM_BITS))
         ).alias(f"s{j}")
         for j, seed in enumerate(BLOOM_SEEDS)
     ]
     bloom_rows = pairs.groupBy("file").agg(*pos_cols).collect()
     blooms: dict[str, bytes] = {}
     for r in bloom_rows:
-        bits = bytearray(bloom_bits // 8)
+        bits = bytearray(BLOOM_BITS // 8)
         for j in range(len(BLOOM_SEEDS)):
             for p in r[f"s{j}"]:
                 bits[p // 8] |= 1 << (p % 8)
@@ -279,10 +195,8 @@ def collect_file_stats_and_var_index(
                 "n_rows": r["n_rows"],
                 "min_ts": r["min_ts"],
                 "max_ts": r["max_ts"],
-                "bloom_bits": bloom_bits,
-                "bloom": blooms.get(
-                    r["file"], bytes(bloom_bits // 8)
-                ).hex(),
+                "bloom_bits": BLOOM_BITS,
+                "bloom": blooms.get(r["file"], bytes(BLOOM_BITS // 8)).hex(),
                 "logtype_id": r["logtype_id"],
                 "checksum": r["checksum"],
             }
@@ -478,22 +392,22 @@ class SnapshotStore:
         return m["tables"][name].get("stats", [])
 
 
-def snapshot_pipeline_tables(
-    spark: SparkSession,
-    work_dir: str,
-    with_stats: bool = True,
-    routed_stats: list[dict] | None = None,
-) -> int:
+def snapshot_pipeline_tables(work_dir: str, routed_stats: list[dict]) -> int:
     """Commit every pipeline output table of ``work_dir`` as ONE snapshot
     (the multi-table transactional commit the reference gets from its
-    metadata DB). Routed gets per-file skipping stats; pass
-    ``routed_stats`` when the route stage already collected them (the
-    pipeline does) to avoid re-scanning — the stats' file list then also
-    replaces the routed directory listing."""
+    metadata DB). Routed gets the route stage's per-file skipping stats
+    (collect_file_stats_and_var_index), whose file list also stands in for
+    the routed directory listing; the other tables are listed on the
+    driver."""
     store = SnapshotStore(work_dir)
-    tables: dict[str, dict] = {}
+    tables: dict[str, dict] = {
+        "routed": {
+            "files": sorted(s["file"] for s in routed_stats),
+            "base": "routed",
+            "stats": routed_stats,
+        },
+    }
     for name in (
-        "routed",
         "logtype_dict",
         "var_dict",
         "var_index",
@@ -502,21 +416,6 @@ def snapshot_pipeline_tables(
         "agg_by_time",
     ):
         path = os.path.join(work_dir, name)
-        if not os.path.exists(path):
-            continue
-        stats = None
-        if name == "routed":
-            stats = routed_stats
-            if stats is None and with_stats:
-                stats = collect_file_stats(
-                    spark.read.parquet(path), work_dir
-                )
-        if stats is not None:
-            tables[name] = {
-                "files": sorted(s["file"] for s in stats),
-                "base": name,
-                "stats": stats,
-            }
-        else:
+        if os.path.exists(path):
             tables[name] = {"files": store.table_files(path), "base": name}
     return store.commit(tables)

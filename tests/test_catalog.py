@@ -145,3 +145,64 @@ def test_catalog_json_kql_many_archives(spark):
         assert {a for a, _ in top_rows} <= newest_matching
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def test_catalog_rows_fold_from_file_stats(spark, small_corpus, tmp_path,
+                                           monkeypatch):
+    """An archive's catalog row (begin_ts, end_ts, n_rows) is folded from
+    the fused per-file stats and equals a direct scan of the archive: for
+    run_pipeline the clpspark:catalog job group runs no job before the
+    catalog write, and run_split_pipeline reads no archive directory."""
+    from pyspark.sql import DataFrameReader
+    from pyspark.sql import functions as F
+
+    import clpspark.catalog as catalog
+    from clpspark.pipeline import run_split_pipeline
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def group_jobs() -> set[int]:
+        return set(tracker.getJobIdsForGroup("clpspark:catalog"))
+
+    seen = group_jobs()
+    before_register: list[set[int]] = []
+    register = catalog.register_archive
+
+    def spy_register(*a, **kw):
+        before_register.append(group_jobs() - seen)
+        return register(*a, **kw)
+
+    read_paths: list[str] = []
+    parquet = DataFrameReader.parquet
+
+    def spy_parquet(self, *paths, **kw):
+        read_paths.extend(paths)
+        return parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(catalog, "register_archive", spy_register)
+    monkeypatch.setattr(DataFrameReader, "parquet", spy_parquet)
+
+    def scan(path: str) -> tuple:
+        return tuple(spark.read.parquet(path).agg(
+            F.min("ts"), F.max("ts"), F.count("*")).first())
+
+    def catalog_rows(cat: str) -> dict[str, tuple]:
+        return {r["path"]: (r["begin_ts"], r["end_ts"], r["n_rows"])
+                for r in spark.read.parquet(f"{cat}/archives").collect()}
+
+    work, cat = str(tmp_path / "w"), str(tmp_path / "cat")
+    run_pipeline(spark, PipelineConfig(input_path=small_corpus,
+                                       work_dir=work, catalog_dir=cat))
+    assert before_register == [set()]
+    assert catalog_rows(cat) == {work: scan(f"{work}/routed")}
+
+    split_cat = str(tmp_path / "split_cat")
+    read_paths.clear()
+    res = run_split_pipeline(
+        spark, PipelineConfig(input_path=small_corpus,
+                              work_dir=str(tmp_path / "split")),
+        target_rows_per_archive=300, catalog_dir=split_cat)
+    archive_dirs = {p for _, p in res["archives"]}
+    assert len(archive_dirs) >= 3
+    assert not archive_dirs & set(read_paths)
+    assert catalog_rows(split_cat) == {p: scan(p) for p in archive_dirs}

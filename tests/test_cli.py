@@ -622,3 +622,44 @@ def test_compress_text_target_encoded_size(logs_dir, tmp_path_factory,
     assert rc == 0
     assert int(capsys.readouterr().out.strip().splitlines()[-1]) \
         == 2 * (N // 10)
+
+
+@pytest.mark.parametrize(
+    ("raw", "safe"),
+    [
+        ("svc.log", "svc.log"),
+        ("../../etc/passwd", "_/_/etc/passwd".replace("/", "_")),
+        ("a/b.log", "a_b.log"),
+        ("..", "_"),
+        ("", "_"),
+    ],
+)
+def test_safe_member_name(raw, safe):
+    from clpspark.cli import _safe_member_name
+
+    out = _safe_member_name(raw)
+    assert "/" not in out and ".." not in out and out
+    assert out == safe
+
+
+def test_cli_search_streams_results(spark, monkeypatch, tmp_path, capsys):
+    """Unlimited search printing must go through toLocalIterator, not a
+    driver-side collect of the whole match set."""
+    from clpspark import cli
+
+    df = spark.createDataFrame(
+        [("s1", 1, "hello a"), ("s2", 2, "hello b")],
+        "source string, ts long, message string",
+    )
+    called = {"collect": 0}
+    orig = type(df).collect
+
+    def spy(self):
+        called["collect"] += 1
+        return orig(self)
+
+    monkeypatch.setattr(type(df), "collect", spy)
+    cli._print_matches(df)
+    out = capsys.readouterr().out
+    assert "s1: hello a" in out and "s2: hello b" in out
+    assert called["collect"] == 0

@@ -429,3 +429,34 @@ def test_order_col_metadata_vs_user_field(spark, tmp_path):
     got = {r["doc_id"]: J.loads(r["json"])
            for r in user.reconstruct().collect()}
     assert got["d3"] == {"log_event_idx": 3, "m": "msg 3 ok"}
+
+
+def test_match_varstring_survives_archive_rewrite(spark, tmp_path):
+    """A positive VarString-logtype-id memo must not survive a rewrite of
+    the same archive directory (ids can shuffle between generations)."""
+    from clpspark.operators.json_encode import write_json_archive
+
+    def build(tag_mod: int):
+        rows = [
+            (
+                f"d{i:03d}",
+                f"msg {'failed' if i % 2 else 'completed'} number {i}",
+                f"t{i % tag_mod}",
+            )
+            for i in range(60)
+        ]
+        return spark.createDataFrame(
+            rows, "doc_id string, msg string, tag string"
+        )
+
+    out = str(tmp_path / "arch")
+    arch = write_json_archive(build(3), out)
+    got1 = {r["doc_id"] for r in arch.match_varstring("tag", "t1").collect()}
+    assert got1 == {f"d{i:03d}" for i in range(60) if i % 3 == 1}
+    memo1 = arch._vs_lid_memo
+
+    # rewrite the SAME directory with different tag cardinality
+    write_json_archive(build(5), out)
+    got2 = {r["doc_id"] for r in arch.match_varstring("tag", "t4").collect()}
+    assert got2 == {f"d{i:03d}" for i in range(60) if i % 5 == 4}
+    assert arch._vs_lid_memo[0] != memo1[0]  # memo re-keyed on rewrite

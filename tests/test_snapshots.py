@@ -3,16 +3,19 @@ skipping, and grep-result equality between snapshot-pruned and plain scans."""
 
 from __future__ import annotations
 
+import json
 import os
+from urllib.parse import unquote, urlparse
 
 import pytest
 from pyspark.sql import functions as F
 
+from clpspark.lineage import LineageLog
 from clpspark.pipeline import PipelineConfig, run_pipeline
 from clpspark.plans.grep import GrepEngine
 from clpspark.snapshots import (
     SnapshotStore,
-    collect_file_stats,
+    collect_file_stats_and_var_index,
     probe_positions,
     prune_files,
     snapshot_pipeline_tables,
@@ -85,7 +88,7 @@ def test_file_stats_no_false_negatives(spark, snap_work):
     """Every (file, dict var id) actually present MUST pass that file's
     bloom — pre-filters may admit extras, never drop a match."""
     routed = spark.read.parquet(f"{snap_work}/routed")
-    stats = collect_file_stats(routed, snap_work)
+    stats, _ = collect_file_stats_and_var_index(routed, snap_work)
     by_file = {s["file"]: s for s in stats}
     truth = (
         routed.select(
@@ -238,9 +241,9 @@ def test_stage_rerun_republishes_snapshot(spark, small_corpus, tmp_path):
 
 def test_fused_pass_matches_standalone(spark, snap_work):
     """The fused stats+index pass must reproduce build_var_index exactly
-    and agree with the generic collect_file_stats on every shared field."""
+    and match an independent per-file aggregation of routed/: row count,
+    ts bounds, owning sink and the doc_id XOR checksum."""
     from clpspark.operators.route import build_var_index
-    from clpspark.snapshots import collect_file_stats_and_var_index
 
     routed = spark.read.parquet(f"{snap_work}/routed")
     stats, vi = collect_file_stats_and_var_index(routed, snap_work)
@@ -249,18 +252,76 @@ def test_fused_pass_matches_standalone(spark, snap_work):
     }
     got_vi = {(r["logtype_id"], r["var_id"]) for r in vi.collect()}
     assert got_vi == want_vi and want_vi
-    plain = {s["file"]: s for s in collect_file_stats(routed, snap_work)}
-    assert set(plain) == {s["file"] for s in stats}
+    root = os.path.abspath(snap_work)
+    oracle = {
+        os.path.relpath(unquote(urlparse(r["file"]).path), root): r
+        for r in routed.groupBy(F.input_file_name().alias("file")).agg(
+            F.count("*").alias("n_rows"),
+            F.min("ts").alias("min_ts"),
+            F.max("ts").alias("max_ts"),
+            F.min("logtype_id").alias("logtype_id"),
+            F.max("logtype_id").alias("max_lid"),
+            F.expr("bit_xor(xxhash64(doc_id))").alias("checksum"),
+        ).collect()
+    }
+    assert set(oracle) == {s["file"] for s in stats}
     for s in stats:
-        p = plain[s["file"]]
-        for k in ("n_rows", "min_ts", "max_ts", "bloom", "logtype_id",
-                  "checksum"):
-            assert s[k] == p[k], (s["file"], k)
+        o = oracle[s["file"]]
+        assert o["logtype_id"] == o["max_lid"]  # one file, one sink
+        for k in ("n_rows", "min_ts", "max_ts", "logtype_id", "checksum"):
+            assert s[k] == o[k], (s["file"], k)
 
 
 def test_snapshot_helper_reruns_bump_version(spark, snap_work):
     store = SnapshotStore(snap_work)
     v = store.current_version()
-    v2 = snapshot_pipeline_tables(spark, snap_work, with_stats=False)
+    stats = store.stats("routed")
+    v2 = snapshot_pipeline_tables(snap_work, stats)
     assert v2 == v + 1
-    assert store.manifest(v2)["tables"]["routed"].get("stats") is None
+    assert store.manifest(v2)["tables"]["routed"]["stats"] == stats
+
+
+def _sink_stats(stats: list[dict]) -> list[tuple]:
+    """Per-file stats without the file's random part name."""
+    return sorted(
+        (os.path.dirname(s["file"]),
+         *(s[k] for k in ("n_rows", "min_ts", "max_ts", "logtype_id",
+                          "checksum", "bloom_bits", "bloom")))
+        for s in stats
+    )
+
+
+def test_resume_without_stats_sidecar_reruns_route(spark, small_corpus,
+                                                   tmp_path):
+    """The stats sidecar is a declared output of the route stage: a resume
+    that finds it missing, or written under another route fingerprint,
+    reruns route and publishes the same routed stats as the fresh run —
+    the snapshot stage never scans routed/ itself."""
+    work = str(tmp_path / "w")
+    cfg = PipelineConfig(input_path=small_corpus, work_dir=work)
+    sidecar = os.path.join(work, "_routed_file_stats.json")
+    run_pipeline(spark, cfg)
+    store = SnapshotStore(work)
+    fresh = _sink_stats(store.stats("routed"))
+    fresh_audit = LineageLog(work).metrics("route")["sinks"]
+    assert fresh
+
+    def route_commit() -> float:
+        return LineageLog(work)._load()["stages"]["route"]["committed_at"]
+
+    for damage in ("delete", "stale"):
+        before, v = route_commit(), store.current_version()
+        if damage == "delete":
+            os.remove(sidecar)
+        else:
+            with open(sidecar) as f:
+                d = json.load(f)
+            with open(sidecar, "w") as f:
+                json.dump({**d, "route_fp": "0" * 16}, f)
+        m = run_pipeline(spark, cfg, resume=True)
+        assert route_commit() > before, damage
+        assert store.current_version() == v + 1, damage
+        assert _sink_stats(store.stats("routed")) == fresh, damage
+        assert m["route"]["sinks"] == fresh_audit, damage
+        with open(sidecar) as f:
+            assert json.load(f)["route_fp"] == cfg.fp("route")

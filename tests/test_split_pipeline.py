@@ -3,6 +3,7 @@ grouped multi-archive search (sublinear plan growth)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -205,3 +206,40 @@ def test_split_resume_false_reparses(spark, small_corpus, tmp_path_factory):
         spark, PipelineConfig(input_path=other, work_dir=work),
         target_rows_per_archive=600, resume=False)
     assert res2["rows"] == 500
+
+
+def test_split_pipeline_survives_timestamp_skew(spark, vocab_meta, tmp_path):
+    """>= 1/k of rows sharing the max ts used to make approxQuantile return
+    ts_max as a cut, leaving the final (ts_max, None] slice empty — route()
+    wrote a data-less dir and the read-back aborted the run."""
+    from clpspark.corpus import SEQUENCES_SCHEMA, generate_pdf
+    from clpspark.pipeline import PipelineConfig, run_split_pipeline
+
+    pdf = generate_pdf(np.arange(1000), vocab_meta, seed=42)
+    lo = vocab_meta.off_ts
+    hi = vocab_meta.off_ts + vocab_meta.n_ts - 1
+
+    def retime(i: int, toks: np.ndarray) -> np.ndarray:
+        t = toks.copy()
+        if t[0] >= vocab_meta.off_ts:  # timestamped template
+            t[0] = lo if i < 500 else hi
+        return t
+
+    pdf = pdf.assign(
+        tokens=[retime(i, t) for i, t in enumerate(pdf["tokens"])]
+    )
+    inp = str(tmp_path / "seq")
+    spark.createDataFrame(pdf, schema=SEQUENCES_SCHEMA).write.parquet(inp)
+
+    work = str(tmp_path / "work")
+    res = run_split_pipeline(
+        spark,
+        PipelineConfig(input_path=inp, work_dir=work),
+        target_rows_per_archive=300,
+    )
+    total = 0
+    for _, path in res["archives"]:
+        n = spark.read.parquet(path).count()
+        assert n > 0, f"empty archive slice {path}"
+        total += n
+    assert total == res["rows"] == 1000
