@@ -19,6 +19,8 @@ from __future__ import annotations
 import functools
 import os
 
+import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,19 +67,29 @@ def register_archive(
     """
     os.makedirs(catalog_dir, exist_ok=True)
     arch_path = _tbl(catalog_dir, "archives")
-    if os.path.exists(arch_path):
-        existing = _read_archives(spark, catalog_dir)
-        if existing.where(F.col("archive_id") == archive_id).limit(1).count():
-            return
+    # idempotence from the archive_id column, read on the driver (pyarrow
+    # skips the _SUCCESS/.crc side files): no Spark job
+    if os.path.exists(arch_path) and archive_id in pq.read_table(
+            arch_path, columns=["archive_id"]).column("archive_id").to_pylist():
+        return
+    # pandas frames go to the JVM over Arrow; a list of tuples would run a
+    # Python-worker job per write
     row = spark.createDataFrame(
-        [(archive_id, path, begin_ts, end_ts, n_rows, dict_path, dataset)],
+        pd.DataFrame({
+            "archive_id": [archive_id], "path": [path],
+            "begin_ts": pd.array([begin_ts], dtype="Int64"),
+            "end_ts": pd.array([end_ts], dtype="Int64"),
+            "n_rows": pd.array([n_rows], dtype="Int64"),
+            "dict_path": [dict_path], "dataset": [dataset]}),
         "archive_id string, path string, begin_ts long, end_ts long, "
         "n_rows long, dict_path string, dataset string",
     )
     row.write.mode("append").parquet(arch_path)
     if tags:
         tag_rows = spark.createDataFrame(
-            [(archive_id, t) for t in tags], "archive_id string, tag string"
+            pd.DataFrame({"archive_id": [archive_id] * len(tags),
+                          "tag": list(tags)}),
+            "archive_id string, tag string",
         )
         tag_rows.write.mode("append").parquet(_tbl(catalog_dir, "tags"))
 

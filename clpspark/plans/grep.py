@@ -28,16 +28,34 @@ Spark-first re-creation (plan-time, no custom Catalyst rules needed):
   2. the rewritten predicate is handed to Catalyst: IN on the partition
      column prunes sinks (partitionBy(logtype_id) layout), array_contains
      prunes rows, all JVM-side
-  3. survivors are decoded (broadcast dictionary maps in one Arrow UDF, or
-     the join strategy) and checked with the exact wildcard match — same
-     final-check structure as the reference.
+  3. in map mode the candidate sinks are split on the driver
+     (``plans.definite``, the reference's subqueries with and without
+     ``wildcard_match_required``) into two branches, returned as their
+     union — an OR inside one filter would still run the decode UDF on
+     every row:
+       - definite: logtypes whose every message matches, plus
+         ``logtype_id IN (..) AND get(encoded_vars, k) IN (..)`` for slots
+         whose value alone decides the match. JVM predicates only: a
+         ``count()`` plans no Python node (the unused decode column is
+         pruned);
+       - possible: the remaining candidates, the quarantine sink and any
+         logtype the analysis cannot settle, decoded (broadcast dictionary
+         maps in one Arrow UDF) and checked with the exact wildcard match
+         — the reference's final check. Rows are dropped without that
+         check only where the analysis proves no other row can match.
+     A branch over no sink the manifest lists is left out of the plan.
+     Join mode (and events carrying their own logtype strings) keeps one
+     possible branch over every candidate, decoded by the join strategy.
 
-Everything here is a *pre-filter*: correctness never depends on step 1 being
-tight, only on step 3.
+Steps 1-2 are a *pre-filter*: correctness never depends on them being
+tight. Every row the plan returns either took the final check or was
+proven to match by step 3's analysis.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 import re
 import threading
 
@@ -60,7 +78,8 @@ _ESCAPED = re.compile(r"\\(.)", re.DOTALL)
 # wildcard probe runs as a filtered Spark scan instead: only matching ids
 # come back. A Spark-side probe matching more ids than this carries no
 # pruning power worth an IN list of that size — treat the query as
-# logtype-unconstrained.
+# logtype-unconstrained. The definite/possible split uses the same bound
+# for its candidate logtypes and for each slot's var-id list.
 LOGTYPE_PROBE_MAX_IDS = 10_000
 
 
@@ -195,12 +214,16 @@ class _DictState:
         # gate-checked (logtype_id, logtype) entries; None past the gate
         self.logtypes: list[tuple[int, str]] | None = None
         self.logtypes_resolved = False
-        # resolved decode mode ("map"/"join"); None until resolved
+        # resolved decode mode ("map"/"join") and why; None until resolved
         self.mode: str | None = None
-        # map mode only: {var_id: var_str} and the decoder broadcasting
-        # it with the logtype map
+        self.reason: str | None = None
+        # map mode only: {var_id: var_str}, {logtype_id: logtype} and the
+        # decoder broadcasting both
         self.var_map: dict[int, str] | None = None
+        self.lt_map: dict[int, str] | None = None
         self.decoder = None
+        # map mode only: logtype_id -> definite.parse_logtype, on first use
+        self.parsed: dict[int, tuple] = {}
         # map mode only: var_str (lowered when ignore_case) -> var ids,
         # built on first use per case mode
         self.inverse: dict[bool, dict[str, list[int]]] = {}
@@ -214,8 +237,12 @@ class GrepEngine:
       - map (both dictionaries fit ``decode.map_fits``): the var and
         logtype dictionaries are collected once and broadcast for decode,
         and the same driver copies — plus the var index, under the same
-        entry gate — answer every plan-time probe. A warm query runs only
-        its own scan.
+        entry gate — answer every plan-time probe and the definite/possible
+        split. The split walks each candidate logtype (at most
+        ``LOGTYPE_PROBE_MAX_IDS``, else no split) and scans the var
+        dictionary once per distinct slot context; a slot matching more
+        var ids than that bound stays on the final check. A warm query
+        runs only its own scan, and a definite-only one no Python.
       - join (either dictionary past the gate, or forced): decode joins
         and the var probes are filtered Spark scans (only matching ids come
         back to the driver). In auto mode a logtype dictionary that fits
@@ -280,6 +307,13 @@ class GrepEngine:
         # scanned). Under concurrent searches it reflects whichever scan
         # planned last — a progress gauge, not a per-query result.
         self.last_scan_files: int | None = None
+        # decision record of the last search() on this engine (same
+        # caveat): decode_mode and decode_reason, definite_logtypes (ids
+        # whose every row matches), definite_slots (the number of
+        # (logtype, slot) value predicates), possible (whether the
+        # decode + final-match branch is in the plan) and sinks (logtype
+        # sinks the plan reads; None = unconstrained)
+        self.last_plan: dict | None = None
 
     @classmethod
     def from_snapshot(cls, spark, work_dir: str, **kw) -> "GrepEngine":
@@ -391,13 +425,15 @@ class GrepEngine:
         tge: int | None,
         tle: int | None,
         dict_hits: list[list[int]] | None,
-    ) -> DataFrame:
+    ) -> tuple[DataFrame, set[int] | None]:
         """Events scan, file-pruned through the snapshot manifest when
-        available. Pure pre-filter: the pruned set is a superset of files
-        that can hold matches; row-level predicates still apply."""
+        available, and the logtype ids of the sinks it can read (None =
+        unknown: no manifest). Pure pre-filter: the pruned set is a
+        superset of files that can hold matches; row-level predicates
+        still apply."""
         if self._snapshot is None or not self._file_stats:
             self.last_scan_files = None
-            return self.events
+            return self.events, None
         from clpspark.snapshots import prune_files
 
         with self._state_lock:  # prune_files mutates the shared pos cache
@@ -405,16 +441,17 @@ class GrepEngine:
                 self.spark, self._file_stats, tge=tge, tle=tle,
                 dict_hits=dict_hits or None, pos_cache=self._bloom_pos_cache,
             )
+        sinks = {s["logtype_id"] for s in kept}
         if len(kept) == len(self._file_stats):
             self.last_scan_files = None
-            return self.events
+            return self.events, sinks
         self.last_scan_files = len(kept)
         # the full table's schema (incl. the int logtype_id partition
         # column the pruned read produces) spares an inference job
         return self._snapshot.read_table(
             self.spark, self._snapshot_table,
             files=[s["file"] for s in kept], schema=self.events.schema,
-        )
+        ), sinks
 
     # ------------------------------------------------------------- plan time
     def _probe_var_ids(
@@ -615,14 +652,72 @@ class GrepEngine:
             return None
         return [r["logtype_id"] for r in rows]
 
+    def _definite_split(self, q: str, ignore_case: bool,
+                        lids: list[int] | None):
+        """Driver-side definite/possible split of the candidate logtypes
+        (``plans.definite``): ``(definite_all, terms, possible)`` with
+        ``terms`` a list of ``(logtype_id, slot, encoded values)`` that each
+        make a row a definite match. Candidates in neither list cannot hold
+        a match. None = no split (join mode, events carrying their own
+        logtype strings, a query or logtype whose case folding may differ
+        between Python and the JVM, or more candidates than an IN list is
+        worth): every candidate then gets the final check."""
+        d = self._resolve_decode()
+        if (d.mode != "map" or "logtype" in self.events.columns
+                or (ignore_case and not q.isascii())):
+            return None
+        inverse = self._inverse_var_map(ignore_case)
+        if "" in inverse:  # the relaxed model assumes non-empty variables
+            return None
+        from clpspark.operators.route import UNKNOWN_LOGTYPE_ID
+        from clpspark.plans.definite import Analysis, parse_logtype
+
+        cands = sorted(d.lt_map) if lids is None else lids
+        if len(cands) > LOGTYPE_PROBE_MAX_IDS:
+            return None
+        by_var = self._var_index_map() if self._var_index is not None else None
+        an = Analysis(q, ignore_case, inverse, LOGTYPE_PROBE_MAX_IDS)
+        definite, terms, possible = [], [], []
+        for lid in cands:
+            if lid == UNKNOWN_LOGTYPE_ID:
+                continue  # the quarantine sink always takes the final check
+            parsed = d.parsed.get(lid)
+            if parsed is None:
+                lt = d.lt_map.get(lid)
+                if lt is None:  # not in the dictionary: decode renders a marker
+                    possible.append(lid)
+                    continue
+                parsed = d.parsed[lid] = parse_logtype(lt)
+            items, ascii_only = parsed
+            if ignore_case and not ascii_only:
+                possible.append(lid)
+                continue
+            res = an.logtype(items)
+            if res is None:
+                continue
+            all_match, slots, exhaustive = res
+            if all_match:
+                definite.append(lid)
+                continue
+            for slot, ph, vals in slots:
+                if ph == E.PLACEHOLDER_DICT and by_var is not None:
+                    vals = [v for v in vals if lid in by_var.get(v, ())]
+                if vals:
+                    terms.append((lid, slot, vals))
+            if not exhaustive:
+                possible.append(lid)
+        return definite, terms, possible
+
     # -------------------------------------------------------------- execution
     def _scan(self, tge: int | None, tle: int | None,
               dict_hits: list[list[int]] | None, source: str | None,
-              meta: dict[str, str] | None, ignore_case: bool) -> DataFrame:
+              meta: dict[str, str] | None, ignore_case: bool
+              ) -> tuple[DataFrame, set[int] | None]:
         """The event rows every search path starts from: the manifest- and
         partition-pruned scan (``_events_for``) narrowed by the range-index
-        ``meta`` filters, ``source`` and the ``tge``/``tle`` bounds."""
-        df = self._events_for(tge, tle, dict_hits)
+        ``meta`` filters, ``source`` and the ``tge``/``tle`` bounds; plus
+        the logtype ids of the sinks the scan can read (None = unknown)."""
+        df, sinks = self._events_for(tge, tle, dict_hits)
         if meta is not None:
             from clpspark.range_index import match_ranges, range_predicate
 
@@ -634,7 +729,7 @@ class GrepEngine:
             df = df.where(F.col("ts") >= F.lit(tge))
         if tle is not None:
             df = df.where(F.col("ts") <= F.lit(tle))
-        return df
+        return df, sinks
 
     def search(
         self,
@@ -656,52 +751,114 @@ class GrepEngine:
         evaluated against the archive's range index on the driver
         (clp_s/search/EvaluateRangeIndexFilters.cpp analog); matching
         ranges become doc_id BETWEEN predicates pushed into the scan, a
-        query matching no range short-circuits to lit(False)."""
+        query matching no range short-circuits to lit(False).
+
+        The plan facts of the call land in ``last_plan``."""
         q = clean_up_wildcard_search_string(query)
         constraints = (
             self._var_constraints(q, ignore_case)
             if (prefilter and q != "*")
             else ([], [])
         )
-        df = self._scan(tge, tle, constraints[1] if constraints else None,
-                        source, meta, ignore_case)
+        df, sinks = self._scan(tge, tle, constraints[1] if constraints else None,
+                               source, meta, ignore_case)
+        plan = {"definite_logtypes": [], "definite_slots": 0,
+                "possible": True, "sinks": None}
         if q == "*":
             out = self._decode(df)
-            return out.limit(limit) if limit else out
-        if prefilter:
-            if constraints is None:
-                return self._decode(df.where(F.lit(False)))
-            preds, dict_hits = constraints
-            lids = self._candidate_logtype_ids(q, ignore_case)
-            # all-dict-var queries have an all-wildcard logtype pattern
-            # (lids = None, unconstrained); the inverted index narrows them
-            # to sinks that actually co-contain every required dict var
-            idx_lids = self._index_logtype_ids(dict_hits)
-            if idx_lids is not None:
-                lids = (sorted(idx_lids) if lids is None
-                        else [lid for lid in lids if lid in idx_lids])
-            # the quarantine sink (streaming rows whose logtype was absent
-            # from the fixed dictionary, route.UNKNOWN_LOGTYPE_ID) can't be
-            # probed at plan time — its logtype strings aren't in the dict —
-            # so it is ALWAYS a candidate, even when a var_index omits it
-            # (an index snapshot taken before later quarantined batches
-            # would otherwise turn the prefilter into a row-dropping
-            # filter). Partition pruning makes the extra id free when the
-            # sink doesn't exist; prefiltered search stays a pure superset.
-            if lids is not None:
-                from clpspark.operators.route import UNKNOWN_LOGTYPE_ID
-
-                if UNKNOWN_LOGTYPE_ID not in lids:
-                    lids = [*lids, UNKNOWN_LOGTYPE_ID]
-                # one parsed expression, not isin(): that converts each
-                # literal through py4j (~140 ms for ~54 ids)
-                df = df.where(F.expr(
-                    f"logtype_id IN ({', '.join(str(int(i)) for i in lids)})"
-                ))
-            for p in preds:
-                df = df.where(p)
-        out = self._final_match(self._decode(df), q, ignore_case)
+        elif not prefilter:
+            out = self._final_match(self._decode(df), q, ignore_case)
+        elif constraints is None:
+            plan["possible"], plan["sinks"] = False, 0
+            out = self._decode(df.where(F.lit(False)))
+        else:
+            out = self._prefiltered(df, sinks, q, ignore_case, *constraints,
+                                    plan)
+        d = self._dicts
+        plan["decode_mode"], plan["decode_reason"] = d.mode, d.reason
+        with self._state_lock:
+            self.last_plan = plan
         return out.limit(limit) if limit else out
+
+    def _prefiltered(self, df: DataFrame, sinks: set[int] | None, q: str,
+                     ignore_case: bool, preds: list, dict_hits: list[list[int]],
+                     plan: dict) -> DataFrame:
+        """Dictionary-pruned search: candidate sinks from the logtype probe
+        and the var index, split into a definite branch (JVM predicates
+        only) and a possible branch (decode + final wildcard match),
+        returned as their union. Either branch is left out when it can
+        read no row; without a split every candidate is possible."""
+        from clpspark.operators.route import UNKNOWN_LOGTYPE_ID
+
+        lids = self._candidate_logtype_ids(q, ignore_case)
+        # all-dict-var queries have an all-wildcard logtype pattern
+        # (lids = None, unconstrained); the inverted index narrows them
+        # to sinks that actually co-contain every required dict var
+        idx_lids = self._index_logtype_ids(dict_hits)
+        if idx_lids is not None:
+            lids = (sorted(idx_lids) if lids is None
+                    else [lid for lid in lids if lid in idx_lids])
+        split = self._definite_split(q, ignore_case, lids)
+        if split is None:
+            definite, terms = [], []
+            possible = None if lids is None else list(lids)
+        else:
+            definite, terms, possible = split
+            if lids is None and sinks is not None:
+                # unconstrained: sinks whose logtype the dictionary lacks
+                # were not analysed
+                d = self._dicts
+                possible += sorted(s for s in sinks if s not in d.lt_map)
+        # the quarantine sink (streaming rows whose logtype was absent
+        # from the fixed dictionary, route.UNKNOWN_LOGTYPE_ID) can't be
+        # probed at plan time — its logtype strings aren't in the dict —
+        # so it is ALWAYS possible, even when a var_index omits it (an
+        # index snapshot taken before later quarantined batches would
+        # otherwise turn the prefilter into a row-dropping filter).
+        # Partition pruning makes the extra id free when the sink doesn't
+        # exist; prefiltered search stays a pure superset.
+        if possible is not None and UNKNOWN_LOGTYPE_ID not in possible:
+            possible = [*possible, UNKNOWN_LOGTYPE_ID]
+        if sinks is not None:
+            # the manifest lists every sink the scan can read: a branch
+            # over none of them is left out of the plan
+            definite = [lid for lid in definite if lid in sinks]
+            terms = [t for t in terms if t[0] in sinks]
+            if possible is not None:
+                possible = [lid for lid in possible if lid in sinks]
+        branches = []
+        term_ids = sorted({t[0] for t in terms})
+        if definite or terms:
+            # one filter per branch: each where() is a py4j round trip
+            cond = _in_sql("logtype_id", definite + term_ids)
+            if terms:
+                alts = [_in_sql("logtype_id", definite)] if definite else []
+                cond += f" AND ({' OR '.join(alts + _terms_sql(terms))})"
+            branches.append(self._decode(df.where(F.expr(cond))))
+        if possible is None or possible:
+            conds = list(preds)
+            if possible is not None:
+                conds.insert(0, F.expr(_in_sql("logtype_id", possible)))
+            # (terms come only with a split, whose possible is a list)
+            poss_terms = [t for t in terms if t[0] in possible]
+            if poss_terms:
+                # disjoint from the definite branch (get() of a short
+                # array is NULL, so coalesce keeps such rows possible)
+                conds.append(F.expr(
+                    f"NOT coalesce({' OR '.join(_terms_sql(poss_terms))}, "
+                    "false)"))
+            if conds:
+                df = df.where(functools.reduce(operator.and_, conds))
+            branches.append(self._final_match(self._decode(df), q,
+                                              ignore_case))
+        plan.update(
+            definite_logtypes=sorted(definite), definite_slots=len(terms),
+            possible=possible is None or bool(possible),
+            sinks=(None if possible is None
+                   else len(set(definite) | set(term_ids) | set(possible))))
+        if not branches:
+            return self._decode(df.where(F.lit(False)))
+        return functools.reduce(DataFrame.union, branches)
 
     def search_regex(self, regex: str, ignore_case: bool = False,
                      **kw) -> DataFrame:
@@ -720,9 +877,9 @@ class GrepEngine:
                 add_prefix_suffix_wildcards=True,
             )
         except RegexTranslationError:
-            df = self._scan(kw.pop("tge", None), kw.pop("tle", None), None,
-                            kw.pop("source", None), kw.pop("meta", None),
-                            ignore_case)
+            df, _ = self._scan(kw.pop("tge", None), kw.pop("tle", None),
+                               None, kw.pop("source", None),
+                               kw.pop("meta", None), ignore_case)
             limit = kw.pop("limit", None)
             pat = f"(?i){regex}" if ignore_case else regex
             out = self._decode(df).where(F.col("message").rlike(pat))
@@ -760,16 +917,25 @@ class GrepEngine:
         (x4) only while it holds fewer than k matches — each probe is a
         ts-range predicate that prunes at the parquet row-group/stats layer,
         so the common case decodes a sliver of the data instead of
-        everything. Results are identical to :meth:`topk_latest`.
+        everything. Results are identical to :meth:`topk_latest`. The
+        table's ts range folds from the manifest's per-file stats when the
+        engine has them (no job); otherwise one min/max scan finds it.
         """
         # caller-supplied time bounds intersect the probe window (forwarding
         # them verbatim would duplicate the tge/tle keywords in search())
         caller_tge = kw.pop("tge", None)
         caller_tle = kw.pop("tle", None)
-        bounds = self.events.agg(
-            F.max("ts").alias("hi"), F.min("ts").alias("lo")
-        ).first()
-        hi, lo = bounds["hi"], bounds["lo"]
+        if self._file_stats:
+            # the manifest's per-file ts ranges cover the events: no job
+            hi = max((s["max_ts"] for s in self._file_stats
+                      if s["max_ts"] is not None), default=None)
+            lo = min((s["min_ts"] for s in self._file_stats
+                      if s["min_ts"] is not None), default=None)
+        else:
+            bounds = self.events.agg(
+                F.max("ts").alias("hi"), F.min("ts").alias("lo")
+            ).first()
+            hi, lo = bounds["hi"], bounds["lo"]
         if hi is None:
             return self.topk_latest(query, k, tge=caller_tge, tle=caller_tle,
                                     **kw)
@@ -827,13 +993,20 @@ class GrepEngine:
         rows, entries = got["var_dict"], got["logtype_dict"]
         with d.lock:
             if d.mode is None:
+                if self._decode_mode != "auto":
+                    d.reason = f"forced {self._decode_mode}"
+                elif entries is None:
+                    d.reason = "logtype dictionary past decode.map_fits"
+                elif rows is None:
+                    d.reason = "var dictionary past decode.map_fits"
+                else:
+                    d.reason = "both dictionaries fit decode.map_fits"
                 if rows is None or entries is None:
                     d.mode = "join"
                 else:
                     d.mode = "map"
-                    d.var_map = dict(rows)
-                    d.decoder = MapDecoder(self.spark, d.var_map,
-                                           dict(entries))
+                    d.var_map, d.lt_map = dict(rows), dict(entries)
+                    d.decoder = MapDecoder(self.spark, d.var_map, d.lt_map)
             return d
 
     @staticmethod
@@ -857,7 +1030,7 @@ def _ordered_subsequence_pred(ordered: list[list[int]]):
     aggregate() fold over the tiny per-row array — JVM-side, no shuffle."""
     n = len(ordered)
     branches = " ".join(
-        f"WHEN acc = {i} AND v IN ({', '.join(str(v) + 'L' for v in vals)}) "
+        f"WHEN acc = {i} AND v IN ({', '.join(map(_long_sql, vals))}) "
         f"THEN {i + 1}"
         for i, vals in enumerate(ordered)
     )
@@ -865,6 +1038,32 @@ def _ordered_subsequence_pred(ordered: list[list[int]]):
         f"aggregate(encoded_vars, 0, (acc, v) -> CASE {branches} ELSE acc END)"
         f" = {n}"
     )
+
+
+def _long_sql(v: int) -> str:
+    """A bigint SQL literal (the minimum has no positive counterpart)."""
+    return "(-9223372036854775807L - 1L)" if v == -(1 << 63) else f"{v}L"
+
+
+def _in_sql(col: str, ids) -> str:
+    """``col IN (...)`` as one parsed expression: ``isin()`` converts each
+    literal through py4j (~140 ms for ~54 ids)."""
+    return f"{col} IN ({', '.join(str(int(i)) for i in ids)})"
+
+
+def _terms_sql(terms: list[tuple[int, int, list[int]]]) -> list[str]:
+    """Definite slot predicates, one per (slot, values) with every logtype
+    sharing them. ``get`` (NULL past the end) rather than ``[]``: under
+    ANSI mode an index past a row's array raises, and Spark may evaluate
+    the slot of one logtype's term on rows of another."""
+    groups: dict[tuple, list[int]] = {}
+    for lid, slot, vals in terms:
+        groups.setdefault((slot, tuple(vals)), []).append(lid)
+    return [
+        f"({_in_sql('logtype_id', lids)} AND get(encoded_vars, {slot}) IN "
+        f"({', '.join(map(_long_sql, vals))}))"
+        for (slot, vals), lids in groups.items()
+    ]
 
 
 def _like_to_java_regex(pattern: str) -> str:

@@ -34,3 +34,16 @@ def small_corpus_pdf(vocab_meta):
     from clpspark.corpus import generate_pdf
 
     return generate_pdf(np.arange(1000), vocab_meta, seed=42)
+
+
+@pytest.fixture(scope="session")
+def small_archive(spark, small_corpus, tmp_path_factory):
+    """Two-pass pipeline work dir (snapshot-backed archive) over the 1k
+    corpus."""
+    from clpspark.pipeline import PipelineConfig, run_pipeline
+
+    work = str(tmp_path_factory.mktemp("archive") / "work")
+    run_pipeline(spark, PipelineConfig(input_path=small_corpus,
+                                       work_dir=work,
+                                       materialize_parsed=False))
+    return work

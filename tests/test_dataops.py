@@ -848,3 +848,73 @@ def test_normalize_text_idempotent(spark):
     a = {r["doc_id"]: r["text"] for r in once.collect()}
     b = {r["doc_id"]: r["text"] for r in twice.collect()}
     assert a == b
+
+
+def test_lsh_signature_high_planes_long(spark):
+    """n_planes >= 32 must not wrap negative (int64 end to end): the UDF
+    signature and the driver-side query_signature agree bit for bit."""
+    import numpy as np
+
+    from clpspark.operators.similarity import (
+        lsh_planes,
+        query_signature,
+        signature_int_udf,
+    )
+
+    rng = np.random.default_rng(7)
+    vecs = [(i, rng.standard_normal(16).tolist()) for i in range(20)]
+    df = spark.createDataFrame(vecs, "vec_id int, embedding array<double>")
+    n_planes = 40
+    planes = lsh_planes(16, n_planes, seed=3)
+    got = {
+        r["vec_id"]: r["sig"]
+        for r in df.select(
+            "vec_id", signature_int_udf(planes)(F.col("embedding")).alias("sig")
+        ).collect()
+    }
+    assert df.select(
+        signature_int_udf(planes)(F.col("embedding")).alias("sig")
+    ).schema["sig"].dataType.simpleString() == "bigint"
+    for vid, emb in vecs:
+        assert got[vid] == query_signature(planes, emb)
+        assert got[vid] >= 0
+    with pytest.raises(ValueError):
+        signature_int_udf(lsh_planes(16, 63, seed=3))
+
+
+def test_pair_miners_leave_no_persistent_rdds(spark):
+    from clpspark.operators.dedup import (
+        minhash_lsh_pairs,
+        ngram_jaccard_pairs,
+        simhash_pairs,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta {i % 3} epsilon zeta") for i in range(30)],
+        "doc_id int, text string",
+    )
+    # start from a clean explicit-cache registry (other tests' session-scoped
+    # caches would otherwise make this order-dependent)
+    spark.catalog.clearCache()
+    for fn in (minhash_lsh_pairs, ngram_jaccard_pairs, simhash_pairs):
+        fn(docs).count()
+    # localCheckpoint blocks are ContextCleaner-owned (freed on GC);
+    # an un-unpersisted .persist() would sit in the cacheManager forever.
+    # Repeated miner calls must leave the explicit-cache registry empty.
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_simhash_batch_matches_scalar():
+    from clpspark.operators.dedup import _simhash_batch, simhash_py
+
+    docs = [
+        "the quick brown fox jumps over the lazy dog",
+        "",
+        "one",
+        "the quick brown fox jumps over the lazy dog",
+        "repeated repeated repeated words words",
+    ]
+    split = [d.lower().split() for d in docs]
+    got = _simhash_batch(split, {})
+    for g, words in zip(got, split):
+        assert int(g) == simhash_py(words)

@@ -150,6 +150,50 @@ def test_grep_warm_job_budget(spark, spaced_work):
         assert n == expected[q] and n_jobs <= 2, (q, n_jobs)
 
 
+def test_topk_windowed_bounds_fold_from_manifest(spark, spaced_work):
+    """A snapshot-backed engine reads the table's ts range for
+    topk_latest_windowed from the manifest: a window covering the range
+    plans with no job at all, and both window sizes return topk_latest's
+    rows."""
+    from clpspark.plans.grep import GrepEngine
+
+    sc = spark.sparkContext
+    eng = GrepEngine.from_snapshot(spark, spaced_work)
+    q = "* INFO Task * completed in * ms"
+    eng.search(q).count()  # first sight resolves the engine state
+    n_jobs, df = _jobs(sc, "topk-fold", lambda: eng.topk_latest_windowed(
+        q, 5, window_ms=1 << 50))
+    assert n_jobs == 0
+    want = [r["doc_id"] for r in eng.topk_latest(q, 5).collect()]
+    assert [r["doc_id"] for r in df.collect()] == want
+    assert [r["doc_id"] for r in eng.topk_latest_windowed(
+        q, 5, window_ms=60_000).collect()] == want
+
+
+def test_catalog_register_jobs(spark, tmp_path):
+    """Registering into a non-empty catalog writes the row and its tags and
+    runs nothing else: no scan of the archives table, no Python-worker
+    job. A repeat registration runs no job and adds no row."""
+    from clpspark.catalog import register_archive, select_archives
+
+    sc = spark.sparkContext
+    cat = str(tmp_path / "catalog")
+    register_archive(spark, cat, "a0", "/p0", 1, 2, 10, tags=["x"])
+    n_jobs, _ = _jobs(sc, "catalog-second", lambda: register_archive(
+        spark, cat, "a1", "/p1", None, 5, 20, tags=["x", "y"],
+        dict_path="/d", dataset=None))
+    assert n_jobs == 2  # the row write and the tags write
+    n_jobs, _ = _jobs(sc, "catalog-repeat", lambda: register_archive(
+        spark, cat, "a1", "/p1", None, 5, 20, tags=["x", "y"]))
+    assert n_jobs == 0
+    assert select_archives(spark, cat) == [("a1", "/p1", "/d"),
+                                           ("a0", "/p0", None)]
+    assert [r["archive_id"] for r in spark.read.parquet(
+        os.path.join(cat, "archives")).where("begin_ts IS NULL").collect()
+    ] == ["a1"]
+    assert select_archives(spark, cat, tags=["y"]) == [("a1", "/p1", "/d")]
+
+
 def _outputs(spark, work: str) -> dict:
     """Routed rows + per-sink file sizes, aggregate rows, route audit."""
     out = {}

@@ -381,3 +381,41 @@ def test_compression_level_knob(spark, vocab_meta, tmp_path):
         n = spark.read.parquet(f"{work}/routed").count()
         assert n == 2000
     assert sizes[19] <= sizes[3]
+
+
+def test_route_quarantines_unseen_logtype(spark, tmp_path):
+    """A row whose logtype is absent from a FIXED pre-built dictionary
+    (streaming regime) must survive route + decode verbatim, not crash
+    (enrich.UNKNOWN_VAR_ID contract)."""
+    from clpspark.operators.decode import decode_messages
+    from clpspark.operators.enrich import enrich
+    from clpspark.operators.route import UNKNOWN_LOGTYPE_ID, route
+
+    parsed = spark.createDataFrame(
+        [
+            ("d1", "known \x11 line", [7], [], []),
+            ("d2", "UNSEEN \x12 line", [0], ["alpha"], [0]),
+        ],
+        "doc_id string, logtype string, encoded_vars array<bigint>, "
+        "dict_vars array<string>, dict_slots array<int>",
+    )
+    lt_dict = spark.createDataFrame(
+        [("known \x11 line", 0)], "logtype string, logtype_id bigint"
+    )
+    var_dict = spark.createDataFrame(
+        [("alpha", 5)], "var_str string, var_id bigint"
+    )
+    enriched = enrich(parsed, lt_dict, var_dict, mode="map")
+    out = str(tmp_path / "routed")
+    route(enriched, out, salt=1)
+    routed = spark.read.parquet(out)
+    rows = {r["doc_id"]: r for r in routed.collect()}
+    assert rows["d2"]["logtype_id"] == UNKNOWN_LOGTYPE_ID
+    assert rows["d2"]["unseen_logtype"] == "UNSEEN \x12 line"
+    assert rows["d1"]["unseen_logtype"] is None
+    decoded = {
+        r["doc_id"]: r["message"]
+        for r in decode_messages(routed, var_dict, logtype_dict=lt_dict).collect()
+    }
+    assert decoded["d1"] == "known 7 line"
+    assert decoded["d2"] == "UNSEEN alpha line"

@@ -2,14 +2,18 @@
 
 The reference pins its encoders with golden matrices; these properties pin
 the INVARIANTS the engine relies on for arbitrary inputs: encode/decode
-round trips, wildcard-translation agreement, timestamp re-rendering, and
-kv-IR wire-format round trips. No Spark involved — pure functions, fast.
+round trips, wildcard-translation agreement, timestamp re-rendering,
+kv-IR wire-format round trips and grep's definite-match analysis. All but
+one are pure functions, fast; ``test_search_count_equals_oracle`` searches
+a small pipeline archive through Spark.
 """
 
 from __future__ import annotations
 
 import math
+import re
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -444,3 +448,126 @@ def test_template_decode_roundtrip(msg):
     em = E.encode_message(msg)
     ev = [0 if v is None else v for v in em.encoded_vars]
     assert D.render(D.compile_logtype(em.logtype), ev, em.dict_vars) == msg
+
+
+# pieces of the messages the definite-match analysis is checked over: ints,
+# floats, dict vars (incl. ones with '-' and '.'), hex, '='-vars, plain
+# words, delimiters, wildcard/escape/placeholder bytes and a non-ASCII
+# delimiter
+_MSG_PIECES = ["a", "ab", "Task", "task_12", "task_123", "node-5.dc", "9",
+               "19", "-9", "1.5", "-0.25", "12.50", "0x1f", "abc", "007",
+               "=ab", " ", " ", " ", ":", ",", "*", "?", "\\", "é", "\x11"]
+_MSGS = st.lists(st.lists(st.sampled_from(_MSG_PIECES), min_size=1,
+                          max_size=8).map("".join), min_size=1, max_size=6)
+
+
+def _escape_wild(text: str) -> str:
+    return re.sub(r"([\\*?])", r"\\\1", text)
+
+
+@st.composite
+def _query_over(draw, msgs):
+    """A wildcard query built from fragments of the messages: escaped
+    literal runs, '*', '?', and tokens that sit next to a wildcard."""
+    parts = []
+    for _ in range(draw(st.integers(1, 4))):
+        kind = draw(st.sampled_from(["frag", "frag", "*", "?", "text"]))
+        if kind == "frag":
+            m = draw(st.sampled_from(msgs))
+            i = draw(st.integers(0, len(m) - 1))
+            j = draw(st.integers(i + 1, len(m)))
+            parts.append(_escape_wild(m[i:j]))
+        elif kind == "text":
+            parts.append(draw(st.sampled_from(["9", "a", " ", "task", "\\",
+                                               "1.5", "x"])))
+        else:
+            parts.append(kind)
+    q = "".join(parts)
+    if draw(st.booleans()):
+        q = "*" + q
+    if draw(st.booleans()):
+        q = q + "*"
+    return q
+
+
+@settings(max_examples=600, deadline=None)
+@given(_MSGS, st.data(), st.booleans())
+def test_definite_split_agrees_with_wildcard_match(msgs, data, ignore_case):
+    """plans.definite on encoded messages: a definite row (definite-all
+    logtype, or a slot value in its definite set) always matches the
+    query; an exhaustive logtype has no other matching row; a logtype
+    classified as unmatchable has none at all."""
+    from clpspark.plans.definite import Analysis, parse_logtype
+    from clpspark.ref.wildcard import clean_up_wildcard_search_string
+
+    q = clean_up_wildcard_search_string(data.draw(_query_over(msgs)))
+    if ignore_case and not (q.isascii() and all(m.isascii() for m in msgs)):
+        return  # the engine skips the split there
+    ems = [E.encode_message(m) for m in msgs]
+    var_ids = {s: i for i, s in enumerate(sorted(
+        {s for em in ems for s in em.dict_vars}))}
+    inverse: dict[str, list[int]] = {}
+    for s, i in var_ids.items():
+        inverse.setdefault(s.lower() if ignore_case else s, []).append(i)
+    an = Analysis(q, ignore_case, inverse, max_ids=10_000)
+    for m, em in zip(msgs, ems):
+        dict_vars = iter(em.dict_vars)
+        slots = [v if v is not None else var_ids[next(dict_vars)]
+                 for v in em.encoded_vars]
+        actual = wildcard_match(m, q, case_sensitive=not ignore_case)
+        res = an.logtype(parse_logtype(em.logtype)[0])
+        if res is None:
+            assert not actual, (m, q)
+            continue
+        all_match, terms, exhaustive = res
+        definite = all_match or any(slots[k] in vals for k, _ph, vals in terms)
+        if definite:
+            assert actual, (m, q, res)
+        elif exhaustive:
+            assert not actual, (m, q, res)
+
+
+def _oracle_rx(query: str, ignore_case: bool) -> re.Pattern:
+    """Raw wildcard query -> regex for re.fullmatch, written apart from
+    clpspark.ref.wildcard: '\\' quotes the next character (a trailing one
+    is dropped), '*' is any run, '?' one character."""
+    if ignore_case:
+        query = query.lower()
+    out, i = [], 0
+    while i < len(query):
+        c = query[i]
+        if c == "\\":
+            out.append(re.escape(query[i + 1]) if i + 1 < len(query) else "")
+            i += 2
+            continue
+        out.append(".*" if c == "*" else "." if c == "?" else re.escape(c))
+        i += 1
+    return re.compile("".join(out), re.DOTALL)
+
+
+@pytest.fixture(scope="module")
+def archive_search(spark, small_archive):
+    """Map- and join-mode engines over one archive and its decoded rows."""
+    from clpspark.plans.grep import GrepEngine
+
+    eng = GrepEngine.from_work_dir(spark, small_archive, decode_mode="auto")
+    join = GrepEngine.from_work_dir(spark, small_archive, decode_mode="join")
+    msgs = [r["message"] for r in eng.search("*").select("message").collect()]
+    return eng, join, msgs
+
+
+@settings(max_examples=30, deadline=None)
+@given(st.data(), st.booleans())
+def test_search_count_equals_oracle(archive_search, data, ignore_case):
+    """search(q).count() over a pipeline archive equals an re.fullmatch
+    count over its decoded rows for random wildcard queries (fragments of
+    real messages, '*', '?', escapes, numbers and dict-var pieces next to
+    a wildcard), in map mode (definite/possible split) and join mode."""
+    eng, join, msgs = archive_search
+    q = data.draw(_query_over(msgs))
+    rx = _oracle_rx(q, ignore_case)
+    want = sum(1 for m in msgs
+               if rx.fullmatch(m.lower() if ignore_case else m))
+    assert eng.search(q, ignore_case=ignore_case).count() == want, q
+    assert eng.last_plan["decode_mode"] == "map"
+    assert join.search(q, ignore_case=ignore_case).count() == want, q

@@ -4,6 +4,7 @@ golden table) and wildcard grep with dictionary pre-filter."""
 from __future__ import annotations
 
 import pytest
+import pyspark.sql.functions as F
 
 from clpspark.operators.enrich import build_logtype_dict, build_var_dict, enrich
 from clpspark.operators.parse import parse_sequences
@@ -605,3 +606,139 @@ def test_kql_garbage_queries_fail_cleanly(spark):
             kql_filter(df, q)
         except (ValueError, KeyError):
             pass
+
+
+def _python_eval(df) -> bool:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return "ArrowEvalPython" in plan or "BatchEvalPython" in plan
+
+
+def _bench_kind_queries(eng) -> dict[str, str]:
+    """One query per benchmark kind over the 1k archive: logtype haystack,
+    ``*frag*`` substring, dict needle and number needle."""
+    import re
+
+    msgs = [r["message"] for r in eng.search("*").select("message").collect()]
+    var = next(m.group(1) for m in map(
+        re.compile(r" INFO Task (task_\d+) completed").search, msgs) if m)
+    num = next(m.group(1) for m in map(
+        re.compile(r" INFO heartbeat seq (-?\d+) ok").search, msgs) if m)
+    return {"logtype": "* INFO Task * completed in * ms",
+            "substring": f"*{var[:6]}*",
+            "dict": f"* {var} *",
+            "number": f"* {num} *"}
+
+
+def test_definite_count_plans_have_no_python_node(spark, small_archive):
+    """Every benchmark query kind counts through JVM predicates alone: the
+    optimized plan of search(q).count() has no Python eval node, only the
+    definite branch remains, and the count equals the unpruned search. A
+    query that needs the final wildcard check keeps its decode UDF."""
+    eng = GrepEngine.from_work_dir(spark, small_archive, decode_mode="auto")
+    for kind, q in _bench_kind_queries(eng).items():
+        df = eng.search(q)
+        plan = eng.last_plan
+        assert not _python_eval(df.agg(F.count("*"))), (kind, q)
+        assert plan["possible"] is False, (kind, plan)
+        assert plan["definite_logtypes"] or plan["definite_slots"], kind
+        n = df.count()
+        assert n > 0 and n == eng.search(q, prefilter=False).count(), kind
+    # '1' inside a number: int slots have no finite value set
+    df = eng.search("*1*")
+    assert eng.last_plan["possible"] is True
+    assert _python_eval(df.agg(F.count("*")))
+    assert df.count() == eng.search("*1*", prefilter=False).count()
+
+
+def test_definite_split_leaves_non_ascii_case_folding_to_final_check():
+    """Under ignore_case a non-ASCII var string (a JSON VarString, say)
+    leaves dict slots without a definite value set: Python and the JVM
+    may fold its case apart, so those rows keep the final check."""
+    from clpspark.plans.definite import Analysis, parse_logtype
+
+    items = parse_logtype("x \x12 y")[0]
+    inverse = {"abc": [1], "\u03a3ab": [2]}
+    assert Analysis("*ab*", False, inverse, 10).logtype(items) == (
+        False, [(0, "\x12", [1, 2])], True)
+    assert Analysis("*ab*", True, {"abc": [1], "\u03c3ab": [2]},
+                    10).logtype(items) == (False, [], False)
+
+
+@pytest.mark.parametrize("mode", ["map", "join"])
+def test_grep_decision_record(spark, small_archive, mode):
+    """last_plan records the decode path and the split of each search:
+    forced map splits the logtype haystack into definite logtypes with no
+    possible branch; forced join keeps every candidate on the final
+    check."""
+    eng = GrepEngine.from_work_dir(spark, small_archive, decode_mode=mode)
+    q = "* INFO Task * completed in * ms"
+    n = eng.search(q).count()
+    plan = eng.last_plan
+    assert plan["decode_mode"] == mode
+    assert plan["decode_reason"] == f"forced {mode}"
+    if mode == "map":
+        assert plan["definite_logtypes"] and plan["possible"] is False
+        assert plan["sinks"] == len(plan["definite_logtypes"])
+    else:
+        assert plan["definite_logtypes"] == [] and plan["possible"] is True
+        assert plan["definite_slots"] == 0
+    assert n == eng.search(q, prefilter=False).count() > 0
+    auto = GrepEngine.from_work_dir(spark, small_archive, decode_mode="auto")
+    auto.search(q)
+    assert auto.last_plan["decode_reason"] == (
+        "both dictionaries fit decode.map_fits")
+
+
+def test_prefiltered_search_reaches_quarantine(spark, tmp_path):
+    """Default (prefiltered) search must still FIND quarantined rows: the
+    unseen-logtype sink can't be probed via the logtype dictionary, so the
+    candidate-sink list always includes it (prefilter = pure superset)."""
+    from clpspark.operators.enrich import enrich
+    from clpspark.operators.route import route
+    from clpspark.plans.grep import GrepEngine
+
+    parsed = spark.createDataFrame(
+        [
+            ("d1", "known \x11 line", [7], [], []),
+            ("d2", "UNSEEN \x12 line", [0], ["alpha"], [0]),
+        ],
+        "doc_id string, logtype string, encoded_vars array<bigint>, "
+        "dict_vars array<string>, dict_slots array<int>",
+    )
+    lt_dict = spark.createDataFrame(
+        [("known \x11 line", 0)], "logtype string, logtype_id bigint"
+    )
+    var_dict = spark.createDataFrame(
+        [("alpha", 5)], "var_str string, var_id bigint"
+    )
+    enriched = enrich(parsed, lt_dict, var_dict, mode="map")
+    out = str(tmp_path / "routed")
+    route(enriched, out, salt=1)
+    eng = GrepEngine(spark.read.parquet(out), lt_dict, var_dict)
+    for q in ("*UNSEEN*", "* alpha *", "*UNSEEN alpha*"):
+        pre = {r["doc_id"] for r in eng.search(q).select("doc_id").collect()}
+        full = {
+            r["doc_id"]
+            for r in eng.search(q, prefilter=False).select("doc_id").collect()
+        }
+        assert pre == full == {"d2"}, q
+
+
+def test_topk_latest_windowed_accepts_time_bounds(spark, small_corpus, vocab_meta):
+    from clpspark.operators.enrich import build_logtype_dict, build_var_dict, enrich
+    from clpspark.operators.parse import parse_sequences
+    from clpspark.plans.grep import GrepEngine
+
+    parsed = parse_sequences(
+        spark.read.parquet(small_corpus), vocab_meta.vocab
+    )
+    lt, vd = build_logtype_dict(parsed), build_var_dict(parsed)
+    events = enrich(parsed, lt, vd)
+    eng = GrepEngine(events, lt, vd)
+    bounds = events.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).first()
+    tge, tle = bounds["lo"], bounds["hi"] - 1
+    plain = eng.topk_latest("*", 5, tge=tge, tle=tle)
+    windowed = eng.topk_latest_windowed("*", 5, tge=tge, tle=tle)
+    assert [r["doc_id"] for r in windowed.collect()] == [
+        r["doc_id"] for r in plain.collect()
+    ]
