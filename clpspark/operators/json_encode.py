@@ -278,12 +278,6 @@ def encode_date_leaves(df: DataFrame, date_leaves: list[str]) -> DataFrame:
     return out
 
 
-def decode_date_leaf(col: F.Column) -> F.Column:
-    """(pattern, epoch) struct -> original timestamp string (JVM side is not
-    possible for CLP's pattern table; use format_date_leaf_udf for bulk)."""
-    return format_date_leaf_udf()(col)
-
-
 def format_date_leaf_udf():
     @F.pandas_udf("string")
     def fmt(v: pd.DataFrame) -> pd.Series:

@@ -38,41 +38,8 @@ def cosine_udf(query_vec: list[float]):
     return cos
 
 
-def dot_udf():
-    """pandas UDF: elementwise dot of two array columns."""
-
-    @F.pandas_udf("double")
-    def dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma, mb = _mat(a), _mat(b)
-        return pd.Series((ma * mb).sum(axis=1))
-
-    return dot
-
-
-def norm_udf():
-    @F.pandas_udf("double")
-    def nrm(v: pd.Series) -> pd.Series:
-        m = _mat(v)
-        return pd.Series(np.sqrt((m * m).sum(axis=1)))
-
-    return nrm
-
-
 def lsh_planes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return np.random.default_rng(seed).standard_normal((n_planes, dim))
-
-
-def hamming_to_udf(planes: np.ndarray, query_vec: list[float]):
-    """pandas UDF: hamming distance of a row's signature to the query's."""
-    pt = planes.T.copy()
-    q_bits = (planes @ np.asarray(query_vec, dtype=np.float64)) >= 0
-
-    @F.pandas_udf("int")
-    def dist(v: pd.Series) -> pd.Series:
-        bits = (_mat(v) @ pt) >= 0
-        return pd.Series((bits != q_bits[None, :]).sum(axis=1).astype(np.int32))
-
-    return dist
 
 
 def cosine_topk(

@@ -1,7 +1,8 @@
-"""End-to-end parse -> enrich -> route -> aggregate pipeline.
+"""End-to-end parse -> enrich -> route -> aggregate pipeline, and its
+archive-splitting variant.
 
-Stage layout (each stage writes parquet through a few Spark jobs and is
-committed to the lineage log; resume skips committed stages):
+``run_pipeline`` stage layout (each stage writes parquet through a few Spark
+jobs and is committed to the lineage log; resume skips committed stages):
 
   1. parse      sequences -> parsed/ or _parsed_twopass/  (1 full parse pass)
   2. dicts      parsed -> logtype_dict/, var_dict/   (column-pruned scans)
@@ -10,11 +11,16 @@ committed to the lineage log; resume skips committed stages):
                 agg_source_stats/, agg_by_time/
   5. snapshot   one manifest over every output table
 
-Every stage goes through one runner, ``stage()``: a stage is skipped on
-resume when its lineage entry is done under this config's fingerprint and
-its outputs exist. Otherwise the runner begins its lineage entry, runs its
-Spark jobs under the ``clpspark:<stage>`` job group, and commits the
-stage's metrics with its measured ``sec`` only after the work has run.
+``run_split_pipeline`` shares parse, the dictionary build and the snapshot
+commit, writing the dictionaries to shared_dicts/ (``split_dicts``); its
+``split_route`` stage routes time slices into routed_archives/archive=<i>/.
+
+Both drivers run every stage through one runner, ``_StageRunner``, under
+one resume rule: a stage is skipped on resume when its lineage entry is
+done under this config's fingerprint and its outputs exist. Otherwise the
+runner begins its lineage entry, runs its Spark jobs under the
+``clpspark:<stage>`` job group, and commits the stage's metrics with its
+measured ``sec`` only after the work has run.
 
 One parse path: parse is the CPU-heavy pass and runs exactly once, to
 parquet that the dict build and route stages re-read column-pruned
@@ -65,8 +71,9 @@ from clpspark.operators.enrich import (
     VAR_DICT_SCHEMA,
     _logtype_dict_and_stats,
     _var_dict_and_stats,
-    build_logtype_dict,
-    build_var_dict,
+    # unused here; perfbench/trace.py wraps these two attributes by name
+    build_logtype_dict,  # noqa: F401
+    build_var_dict,  # noqa: F401
     enrich,
 )
 from clpspark.operators.parse import PARSED_SCHEMA, parse_sequences
@@ -157,11 +164,11 @@ def _parsed_path(config: "PipelineConfig", durable: bool) -> str:
     return config.path("parsed" if durable else "_parsed_twopass")
 
 
-def _write_parsed(spark: SparkSession, config: "PipelineConfig",
-                  durable: bool) -> None:
-    """Parse the input, once, to parquet: the durable parsed/ at the
-    archive's zstd level, or the transient _parsed_twopass/ as snappy —
-    scratch, so write speed beats ratio."""
+def _parse(spark: SparkSession, config: "PipelineConfig",
+           durable: bool) -> dict:
+    """The parse stage: parse the input, once, to parquet — the durable
+    parsed/ at the archive's zstd level, or the transient _parsed_twopass/
+    as snappy (scratch, so write speed beats ratio)."""
     if config.input_format == "text":
         # raw text logs: multiline event assembly, then the same parse
         from clpspark.sources.text_logs import ingest_text_logs
@@ -181,6 +188,7 @@ def _write_parsed(spark: SparkSession, config: "PipelineConfig",
     writer = (_level_writer(config)(df) if durable
               else df.write.option("compression", "snappy"))
     writer.mode("overwrite").parquet(_parsed_path(config, durable))
+    return {"mode": "materialized" if durable else "two-pass"}
 
 
 def _read_parsed(spark: SparkSession, config: "PipelineConfig",
@@ -226,24 +234,156 @@ def _no_rows(config: "PipelineConfig") -> ValueError:
 def _register(spark: SparkSession, config: "PipelineConfig",
               catalog_dir: str, stats: list[dict], archive_id: str,
               path: str, dict_path: str | None = None) -> None:
-    """Register one routed archive in the metadata catalog with its
-    timestamp range and row count, folded on the driver from the archive's
-    per-file stats (no Spark scan)."""
+    """Register one routed archive in the metadata catalog, under the
+    ``clpspark:catalog`` job group, with its timestamp range and row count
+    folded on the driver from the archive's per-file stats (no Spark
+    scan)."""
     from clpspark.catalog import register_archive
 
-    register_archive(
-        spark, catalog_dir, archive_id=archive_id, path=path,
-        begin_ts=min((s["min_ts"] for s in stats
-                      if s["min_ts"] is not None), default=None),
-        end_ts=max((s["max_ts"] for s in stats
-                    if s["max_ts"] is not None), default=None),
-        n_rows=sum(s["n_rows"] for s in stats),
-        tags=list(config.tags), dict_path=dict_path, dataset=config.dataset)
+    with job_group(spark, "clpspark:catalog", "catalog"):
+        register_archive(
+            spark, catalog_dir, archive_id=archive_id, path=path,
+            begin_ts=min((s["min_ts"] for s in stats
+                          if s["min_ts"] is not None), default=None),
+            end_ts=max((s["max_ts"] for s in stats
+                        if s["max_ts"] is not None), default=None),
+            n_rows=sum(s["n_rows"] for s in stats),
+            tags=list(config.tags), dict_path=dict_path,
+            dataset=config.dataset)
 
 
-# dictionary stats the dicts stage commits and the route stage consumes; a
-# committed dicts entry without them (older work dir) is rebuilt
+class _StageRunner:
+    """The one stage runner of both drivers.
+
+    ``runner(name, work, *outputs, rerun=False)`` skips lineage stage
+    ``name`` when resume finds it done — committed under this config's
+    fingerprint, with ``outputs`` (paths relative to the work dir) in place
+    — unless ``rerun`` forces it. Otherwise it begins the stage's lineage
+    entry, runs ``work()`` with its Spark jobs under the
+    ``clpspark:<name>`` job group, and commits the returned metrics with
+    the stage's wall ``sec`` only after the work has run. ``metrics``
+    holds every stage's committed metrics, ``ran`` the stages executed
+    this run (whose table files changed)."""
+
+    def __init__(self, spark: SparkSession, config: "PipelineConfig",
+                 resume: bool):
+        self.spark, self.config, self.resume = spark, config, resume
+        self.log = LineageLog(config.work_dir)
+        self.metrics: dict = {}
+        self.ran: list[str] = []
+
+    def done(self, name: str, *outputs: str) -> bool:
+        return (self.resume
+                and self.log.is_done(name, self.config.fp(name))
+                and all(os.path.exists(self.config.path(p))
+                        for p in outputs))
+
+    def __call__(self, name: str, work, *outputs: str,
+                 rerun: bool = False) -> None:
+        fp = self.config.fp(name)
+        if not rerun and self.done(name, *outputs):
+            self.metrics[name] = self.log.metrics(name)
+            return
+        t = time.time()
+        self.log.begin(name, fp)
+        with job_group(self.spark, f"clpspark:{name}", name):
+            m = work()
+        self.log.commit(name, fp, {**m, "sec": time.time() - t})
+        self.metrics[name] = self.log.metrics(name)
+        self.ran.append(name)
+
+
+# the dictionary tables, and the stats a dicts stage commits and a route
+# stage consumes; a committed dicts entry without them (older work dir) is
+# rebuilt
+_DICT_TABLES = ("logtype_dict", "var_dict")
 _DICT_STATS = frozenset(("n_logtypes", "n_rows", "n_vars", "var_bytes"))
+
+
+def _dicts_done(stage: _StageRunner, name: str, dict_dir: str) -> bool:
+    """Dicts stage ``name`` is done, with its tables in ``dict_dir`` and
+    the stats its route stage reads."""
+    return (stage.done(name, *(os.path.join(dict_dir, t)
+                               for t in _DICT_TABLES))
+            and _DICT_STATS <= stage.log.metrics(name).keys())
+
+
+def _dicts(spark: SparkSession, config: "PipelineConfig", parsed: DataFrame,
+           dict_dir: str) -> dict:
+    """The dicts stage: build both dictionaries of ``parsed`` into
+    ``dict_dir`` (relative to the work dir) and return their stats."""
+    zw = _level_writer(config)
+
+    def build(fn, table: str):
+        def job() -> dict:
+            df, stats = fn(parsed)
+            zw(df).mode("overwrite").parquet(
+                config.path(os.path.join(dict_dir, table)))
+            return stats
+        return job
+
+    # each build scans its own single pruned column of the parse parquet
+    # (CLAUDE.md: re-scanning zstd parquet beats persist for narrow fan-out
+    # reads); the second back-fills the straggler tail of the first (guide
+    # §2.6)
+    out = run_jobs(spark, {
+        "logtype_dict": build(_logtype_dict_and_stats, "logtype_dict"),
+        "var_dict": build(_var_dict_and_stats, "var_dict"),
+    }, max_workers=2)
+    # the stats come from the builds' own id-offset collects: the route
+    # stage (this run or a resumed one) reads them from lineage instead of
+    # counting the dictionaries again
+    return {
+        "n_logtypes": out["logtype_dict"]["entries"],
+        "n_rows": out["logtype_dict"]["carried"],
+        "n_vars": out["var_dict"]["entries"],
+        "var_bytes": out["var_dict"]["value_bytes"],
+    }
+
+
+def _enriched(spark: SparkSession, config: "PipelineConfig",
+              parsed: DataFrame, dict_dir: str,
+              dict_stats: dict) -> tuple[DataFrame, DataFrame, str]:
+    """``parsed`` enriched against the dictionaries in ``dict_dir``, the
+    logtype dictionary (route's salting counts) and the enrich path taken.
+    decode's map-vs-join gate reads the committed dictionary stats: no
+    stats job."""
+    if dict_stats["n_rows"] == 0:
+        # a routed dir would hold only _SUCCESS, which no read can type
+        raise _no_rows(config)
+    mode = ("map" if map_fits(dict_stats["n_vars"], dict_stats["var_bytes"])
+            else "join")
+    logtype_dict = spark.read.schema(LOGTYPE_DICT_SCHEMA).parquet(
+        config.path(os.path.join(dict_dir, "logtype_dict")))
+    var_dict = spark.read.schema(VAR_DICT_SCHEMA).parquet(
+        config.path(os.path.join(dict_dir, "var_dict")))
+    return (enrich(parsed, logtype_dict, var_dict, mode=mode), logtype_dict,
+            mode)
+
+
+def _file_stats(config: "PipelineConfig", routed: DataFrame,
+                dict_dir: str) -> list[dict]:
+    """The fused post-route metadata pass (2 narrow scans): per-file
+    skipping stats + the var-id -> sink inverted index (Archive.cpp:487-526
+    analog), written to ``dict_dir``/var_index. The stats are the run's one
+    source of routed metadata — the per-sink audit, the snapshot's file
+    skipping and routed file list, the catalog rows."""
+    from clpspark.snapshots import collect_file_stats_and_var_index
+
+    stats, var_index = collect_file_stats_and_var_index(routed,
+                                                        config.work_dir)
+    _level_writer(config)(var_index).mode("overwrite").parquet(
+        config.path(os.path.join(dict_dir, "var_index")))
+    return stats
+
+
+def _snapshot(config: "PipelineConfig", routed_stats: list[dict],
+              routed_base: str = "routed", dict_dir: str = "") -> dict:
+    """The snapshot stage: publish every output table as one manifest."""
+    from clpspark.snapshots import snapshot_pipeline_tables
+
+    return {"version": snapshot_pipeline_tables(
+        config.work_dir, routed_stats, routed_base, dict_dir)}
 
 
 def run_pipeline(
@@ -252,53 +392,27 @@ def run_pipeline(
     resume: bool = True,
 ) -> dict:
     """Run (or resume) the full pipeline; returns stage metrics."""
-    log = LineageLog(config.work_dir)
+    stage = _StageRunner(spark, config, resume)
     # archive write codec level (clp --compression-level analog), applied
     # PER WRITER — a session-global hadoop conf would leak this run's level
     # into every other pipeline/test write sharing the SparkSession, and
     # lazily-executed earlier writes could pick up a later run's level
     zw = _level_writer(config)
-    metrics: dict = {}
-    ran: list[str] = []  # stages executed this run -> table files changed
     t0 = time.time()
 
-    def done(name: str, *outputs: str) -> bool:
-        return (resume and log.is_done(name, config.fp(name))
-                and all(os.path.exists(config.path(p)) for p in outputs))
-
-    def stage(name: str, work, *outputs: str, rerun: bool = False) -> None:
-        """Run ``work()`` as lineage stage ``name`` unless resume finds it
-        done with ``outputs`` in place (``rerun`` forces it). The work's
-        Spark jobs run under the ``clpspark:<name>`` job group, and its
-        returned metrics are committed with the stage's wall ``sec``."""
-        fp = config.fp(name)
-        if not rerun and done(name, *outputs):
-            metrics[name] = log.metrics(name)
-            return
-        t = time.time()
-        log.begin(name, fp)
-        with job_group(spark, f"clpspark:{name}", name):
-            m = work()
-        log.commit(name, fp, {**m, "sec": time.time() - t})
-        metrics[name] = log.metrics(name)
-        ran.append(name)
-
-    need_dicts = not (done("dicts", "logtype_dict", "var_dict")
-                      and _DICT_STATS <= log.metrics("dicts").keys())
+    need_dicts = not _dicts_done(stage, "dicts", "")
     # the route stage's per-file stats: read from its sidecar on resume,
     # set by the stage itself when it runs
     routed_stats = _read_stats_sidecar(config)
-    need_route = not (done("route", "routed") and routed_stats is not None)
+    need_route = not (stage.done("route", "routed")
+                      and routed_stats is not None)
     durable = config.materialize_parsed
     spill = None if durable else _parsed_path(config, durable)
 
     # -- stage 1: parse ------------------------------------------------------
-    def _parse() -> dict:
-        _write_parsed(spark, config, durable)
-        return {"mode": "materialized" if durable else "two-pass"}
-
+    parse = functools.partial(_parse, spark, config, durable)
     if durable:
-        stage("parse", _parse, "parsed")
+        stage("parse", parse, "parsed")
     else:
         # two-pass: no durable intermediate, so parse whenever a consumer
         # runs. One parse spilled to parquet that both stages re-read
@@ -306,39 +420,8 @@ def run_pipeline(
         # pass costs ~14.5s, the spill write ~0-2s over the parse itself.
         # A crash before the route stage leaves the spill behind: sweep it.
         shutil.rmtree(spill, ignore_errors=True)
-        stage("parse", _parse, rerun=need_dicts or need_route)
+        stage("parse", parse, rerun=need_dicts or need_route)
     parsed = functools.cache(lambda: _read_parsed(spark, config, durable))
-
-    # -- stage 2: dictionaries ----------------------------------------------
-    lt_path, var_path = config.path("logtype_dict"), config.path("var_dict")
-
-    def _dicts() -> dict:
-        src = parsed()
-
-        def build(fn, path: str):
-            def job() -> dict:
-                df, stats = fn(src)
-                zw(df).mode("overwrite").parquet(path)
-                return stats
-            return job
-
-        # each build scans its own single pruned column of the parse
-        # parquet (CLAUDE.md: re-scanning zstd parquet beats persist for
-        # narrow fan-out reads); the second back-fills the straggler tail
-        # of the first (guide §2.6)
-        out = run_jobs(spark, {
-            "logtype_dict": build(_logtype_dict_and_stats, lt_path),
-            "var_dict": build(_var_dict_and_stats, var_path),
-        }, max_workers=2)
-        # the stats come from the builds' own id-offset collects: the
-        # route stage (this run or a resumed one) reads them from lineage
-        # instead of counting the dictionaries again
-        return {
-            "n_logtypes": out["logtype_dict"]["entries"],
-            "n_rows": out["logtype_dict"]["carried"],
-            "n_vars": out["var_dict"]["entries"],
-            "var_bytes": out["var_dict"]["value_bytes"],
-        }
 
     @functools.cache
     def _routed() -> DataFrame:
@@ -354,17 +437,9 @@ def run_pipeline(
     # -- stage 3: enrich + route ---------------------------------------------
     def _route() -> dict:
         nonlocal routed_stats
-        dict_stats = log.metrics("dicts")
-        if dict_stats["n_rows"] == 0:
-            # routed/ would hold only _SUCCESS, which no read can type
-            raise _no_rows(config)
-        # decode's map-vs-join gate, fed from lineage: no stats job
-        enrich_mode = ("map" if map_fits(dict_stats["n_vars"],
-                                         dict_stats["var_bytes"])
-                       else "join")
-        logtype_dict = spark.read.schema(LOGTYPE_DICT_SCHEMA).parquet(lt_path)
-        var_dict = spark.read.schema(VAR_DICT_SCHEMA).parquet(var_path)
-        enriched = enrich(parsed(), logtype_dict, var_dict, mode=enrich_mode)
+        dict_stats = stage.log.metrics("dicts")
+        enriched, logtype_dict, enrich_mode = _enriched(
+            spark, config, parsed(), "", dict_stats)
         route(
             enriched,
             config.path("routed"),
@@ -373,21 +448,11 @@ def run_pipeline(
             write_options=zw.options,
             total_rows=dict_stats["n_rows"],
         )
-        # fused post-route metadata pass (2 narrow scans): per-file
-        # skipping stats + the var-id -> sink inverted index
-        # (Archive.cpp:487-526 analog). The stats are the run's one source
-        # of routed metadata — the per-sink audit (file ⊂ sink under
-        # partitionBy) and agg_sink_counts, the snapshot's file skipping and
-        # routed file list, the catalog row — via a fingerprinted sidecar.
-        from clpspark.snapshots import (
-            collect_file_stats_and_var_index,
-            sink_audit_from_stats,
-        )
+        # the per-file stats reach later stages and resumed runs through a
+        # fingerprinted sidecar
+        from clpspark.snapshots import sink_audit_from_stats
 
-        routed_stats, var_index = collect_file_stats_and_var_index(
-            _routed(), config.work_dir
-        )
-        zw(var_index).mode("overwrite").parquet(config.path("var_index"))
+        routed_stats = _file_stats(config, _routed(), "")
         _write_stats_sidecar(config, routed_stats)
         if spill:  # every consumer of the spill is done
             shutil.rmtree(spill, ignore_errors=True)
@@ -400,7 +465,9 @@ def run_pipeline(
         }
 
     try:
-        stage("dicts", _dicts, "logtype_dict", "var_dict", rerun=need_dicts)
+        # -- stage 2: dictionaries -------------------------------------------
+        stage("dicts", lambda: _dicts(spark, config, parsed(), ""),
+              rerun=need_dicts)
         stage("route", _route, "routed", "_routed_file_stats.json",
               rerun=need_route)
     finally:
@@ -469,7 +536,7 @@ def run_pipeline(
         # concurrently so each back-fills the others' straggler tails
         # (guide §2.6).
         sink_counts = spark.createDataFrame(
-            pd.DataFrame(metrics["route"]["sinks"],
+            pd.DataFrame(stage.metrics["route"]["sinks"],
                          columns=["logtype_id", "n_rows"]),
             "logtype_id int, n_rows bigint not null").coalesce(1)
         routed = _routed()
@@ -490,25 +557,48 @@ def run_pipeline(
           "agg_by_time")
 
     # -- stage 5: snapshot commit (atomic multi-table publish + file stats) ---
-    def _snapshot() -> dict:
-        from clpspark.snapshots import snapshot_pipeline_tables
-
-        return {"version": snapshot_pipeline_tables(config.work_dir,
-                                                    routed_stats)}
-
     # a re-run stage rewrote its files: the committed manifest would point
     # at deleted paths — always publish a fresh snapshot in that case
-    stage("snapshot", _snapshot, rerun=bool(ran))
+    stage("snapshot", lambda: _snapshot(config, routed_stats),
+          rerun=bool(stage.ran))
 
     # -- optional: register this archive in the metadata catalog --------------
     if config.catalog_dir:
-        with job_group(spark, "clpspark:catalog", "catalog"):
-            _register(spark, config, config.catalog_dir, routed_stats,
-                      f"{os.path.basename(config.work_dir)}-"
-                      f"{config.fp('route')[:12]}", config.work_dir)
+        _register(spark, config, config.catalog_dir, routed_stats,
+                  f"{os.path.basename(config.work_dir)}-"
+                  f"{config.fp('route')[:12]}", config.work_dir)
 
+    metrics = stage.metrics
     metrics["total_sec"] = time.time() - t0
     return metrics
+
+
+def _time_slices(parsed: DataFrame,
+                 k: int) -> list[tuple[int | None, int | None]]:
+    """(lo, hi] ts bounds of ``k`` near-equal, time-contiguous slices (CLP
+    archives are ordered time ranges), cut at row-count quantiles."""
+    cuts: list[int] = []
+    if k > 1:
+        # the 1.0 quantile rides along for free (the GK sketch retains the
+        # exact max) — no second scan of parsed just for max(ts)
+        raw = parsed.where(F.col("ts").isNotNull()).approxQuantile(
+            "ts", [i / k for i in range(1, k)] + [1.0], 0.001)
+        # under timestamp skew (>= 1/k of rows sharing the max ts) a cut can
+        # equal the global max, leaving the final (ts_max, None] slice empty
+        # — route() would then write a data-less archive. Drop any cut
+        # at/above the max; the previous slice's half-open upper bound
+        # absorbs those rows.
+        cuts = sorted({int(c) for c in raw[:-1] if int(c) < int(raw[-1])})
+    return list(zip([None, *cuts], [*cuts, None]))
+
+
+def _in_slice(lo: int | None, hi: int | None):
+    """Rows of the (lo, hi] slice; the first slice absorbs rows without a
+    timestamp (a null ts fails ``ts > lo``), so every row lands in exactly
+    one archive."""
+    ts = F.col("ts")
+    upper = F.lit(True) if hi is None else ts <= hi
+    return ts.isNull() | upper if lo is None else (ts > lo) & upper
 
 
 def run_split_pipeline(
@@ -535,25 +625,16 @@ def run_split_pipeline(
     ``dict_path`` = the shared generation, so search_archives scans the
     whole run as ONE plan (ids are interchangeable within a generation).
 
-    ``resume=True`` reuses an existing parsed table / dictionary
-    generation from the work dir via their _SUCCESS markers (marker-only
-    — no fingerprint ledger like run_pipeline's): pass ``resume=False``
-    whenever the input or config changed.
+    Stages run on run_pipeline's runner under the same resume rule: the
+    durable parse (parsed/) and the dictionary build (``split_dicts``, into
+    shared_dicts/) are skipped when their lineage entries are done under
+    this config's fingerprint and their outputs exist, so a changed input
+    or config re-parses. ``split_route`` (enrich, the time cuts, one route
+    per slice into routed_archives/, the fused stats pass) and the
+    generation ``snapshot`` run on every call.
 
     Returns {"archives": [(archive_id, path)...], "n_archives": k, ...}.
     """
-    t0 = time.time()
-    zw = _level_writer(config)
-    parsed_path = _parsed_path(config, durable=True)
-    if not resume or not os.path.exists(f"{parsed_path}/_SUCCESS"):
-        # raw text logs split the same way the reference's clp does — the
-        # parse stage is the only format-specific step
-        _write_parsed(spark, config, durable=True)
-    parsed = _read_parsed(spark, config, durable=True)
-    n = parsed.count()
-    if n == 0:
-        raise _no_rows(config)
-
     if target_rows_per_archive is None:
         if target_encoded_bytes is None:
             raise ValueError(
@@ -561,132 +642,81 @@ def run_split_pipeline(
                 "target_encoded_bytes")
         if target_encoded_bytes <= 0:
             raise ValueError("target_encoded_bytes must be > 0")
-        on_disk = sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _d, fs in os.walk(parsed_path) for f in fs
-        )
-        bytes_per_row = max(on_disk / max(n, 1), 1e-9)
-        target_rows_per_archive = max(
-            1, int(target_encoded_bytes / bytes_per_row))
-
-    dicts_dir = config.path("shared_dicts")
-    lt_path = f"{dicts_dir}/logtype_dict"
-    var_path = f"{dicts_dir}/var_dict"
-    if not resume or not os.path.exists(f"{lt_path}/_SUCCESS"):
-        zw(build_logtype_dict(parsed)).mode("overwrite").parquet(lt_path)
-        zw(build_var_dict(parsed)).mode("overwrite").parquet(var_path)
-    logtype_dict = spark.read.schema(LOGTYPE_DICT_SCHEMA).parquet(lt_path)
-    var_dict = spark.read.schema(VAR_DICT_SCHEMA).parquet(var_path)
-
-    k = max(1, -(-n // target_rows_per_archive))  # ceil
-    # time cut points at row-count quantiles -> near-equal archives that are
-    # time-contiguous (CLP archives are ordered time ranges)
-    cuts: list[int] = []
-    if k > 1:
-        qs = [i / k for i in range(1, k)]
-        # the 1.0 quantile rides along for free (the GK sketch retains the
-        # exact max) — no second scan of parsed just for max(ts)
-        raw = parsed.where(F.col("ts").isNotNull()).approxQuantile(
-            "ts", qs + [1.0], 0.001
-        )
-        # under timestamp skew (>= 1/k of rows sharing the max ts) a cut can
-        # equal the global max, leaving the final (ts_max, None] slice empty
-        # — route() would then write a data-less archive. Drop any cut
-        # at/above the max; the previous slice's half-open upper bound
-        # absorbs those rows.
-        ts_max = int(raw[-1]) if raw else None
-        seen: set[int] = set()
-        for c in raw[:-1]:
-            ci = int(c)
-            if ci not in seen and (ts_max is None or ci < ts_max):
-                seen.add(ci)
-                cuts.append(ci)
-    bounds: list[tuple[int | None, int | None]] = []
-    lo = None
-    for c in cuts:
-        bounds.append((lo, c))
-        lo = c
-    bounds.append((lo, None))
-
-    enriched = enrich(parsed, logtype_dict, var_dict)
+    stage = _StageRunner(spark, config, resume)
+    zw = _level_writer(config)
+    t0 = time.time()
+    dict_dir = "shared_dicts"
     # all archives of one run live under ONE parquet root as an extra
     # partition level (archive=<i>/logtype_id=<j>): a dictionary generation
     # reads back as a single partition-pruned scan, not N conflicting roots
     routed_root = config.path("routed_archives")
-    archives: list[tuple[str, str]] = []
-    for i, (blo, bhi) in enumerate(bounds):
-        arch_dir = f"{routed_root}/archive={i:04d}"
-        # first slice absorbs rows without a timestamp; bounds are
-        # (lo, hi] half-open so every row lands in exactly one archive
-        if blo is None and bhi is None:
-            cond = F.lit(True)
-        elif blo is None:
-            cond = F.col("ts").isNull() | (F.col("ts") <= bhi)
-        elif bhi is None:
-            cond = F.col("ts").isNotNull() & (F.col("ts") > blo)
-        else:
-            cond = (
-                F.col("ts").isNotNull()
-                & (F.col("ts") > blo) & (F.col("ts") <= bhi)
-            )
-        sliced = enriched.where(cond)
-        route(
-            sliced,
-            arch_dir,
-            salt=config.route_salt,
-            sink_counts=logtype_dict.select("logtype_id", "n_rows"),
-            write_options=zw.options,
-        )
-        archive_id = (
-            f"{os.path.basename(config.work_dir)}-{config.fp('route')[:8]}"
-            f"-{i:04d}"
-        )
-        archives.append((archive_id, arch_dir))
-    # one (var_id, logtype_id) index covers the whole generation (shared
-    # dictionary ids make per-archive indexes redundant for logtype pruning).
-    # The SAME fused pass yields per-file skipping stats, committed as a
-    # generation-level snapshot so catalog search can manifest-prune files
-    # across all archives of the run, and folded per archive into its
-    # catalog row.
-    from clpspark.snapshots import (
-        SnapshotStore,
-        collect_file_stats_and_var_index,
-    )
 
-    gen_routed = spark.read.option("basePath", routed_root).parquet(routed_root)
-    stats, var_index = collect_file_stats_and_var_index(
-        gen_routed, config.work_dir
-    )
-    zw(var_index).mode("overwrite").parquet(f"{dicts_dir}/var_index")
-    store = SnapshotStore(config.work_dir)
-    rel = os.path.relpath(routed_root, config.work_dir)
-    tables = {
-        "routed": {
-            "files": sorted(s["file"] for s in stats),
-            "base": rel,
-            "stats": stats,
-        },
-    }
-    for name, p in (
-        ("logtype_dict", lt_path),
-        ("var_dict", var_path),
-        ("var_index", f"{dicts_dir}/var_index"),
-    ):
-        tables[name] = {
-            "files": store.table_files(p),
-            "base": os.path.relpath(p, config.work_dir),
-        }
-    store.commit(tables)
+    # raw text logs split the same way the reference's clp does — the parse
+    # stage is the only format-specific step
+    stage("parse", functools.partial(_parse, spark, config, True), "parsed")
+    parsed = _read_parsed(spark, config, durable=True)
+    stage("split_dicts", lambda: _dicts(spark, config, parsed, dict_dir),
+          rerun=not _dicts_done(stage, "split_dicts", dict_dir))
+
+    archives: list[tuple[str, str]] = []
+    stats: list[dict] = []
+
+    def _split_route() -> dict:
+        nonlocal stats
+        dict_stats = stage.log.metrics("split_dicts")
+        enriched, logtype_dict, enrich_mode = _enriched(
+            spark, config, parsed, dict_dir, dict_stats)
+        n = dict_stats["n_rows"]
+        rows_per_archive = target_rows_per_archive
+        if rows_per_archive is None:
+            on_disk = sum(
+                os.path.getsize(os.path.join(r, f))
+                for r, _d, fs in os.walk(config.path("parsed")) for f in fs
+            )
+            rows_per_archive = max(
+                1, int(target_encoded_bytes / max(on_disk / n, 1e-9)))
+        # a run with fewer slices than the last must not leave its
+        # archives behind under the generation's root
+        shutil.rmtree(routed_root, ignore_errors=True)
+        for i, (lo, hi) in enumerate(
+                _time_slices(parsed, -(-n // rows_per_archive))):
+            arch_dir = f"{routed_root}/archive={i:04d}"
+            route(
+                enriched.where(_in_slice(lo, hi)),
+                arch_dir,
+                salt=config.route_salt,
+                sink_counts=logtype_dict.select("logtype_id", "n_rows"),
+                write_options=zw.options,
+                total_rows=n,
+            )
+            archives.append((
+                f"{os.path.basename(config.work_dir)}-"
+                f"{config.fp('route')[:8]}-{i:04d}", arch_dir))
+        # one (var_id, logtype_id) index covers the whole generation
+        # (shared dictionary ids make per-archive indexes redundant for
+        # logtype pruning); the same pass's per-file stats go into the
+        # generation snapshot and fold per archive into its catalog row
+        stats = _file_stats(
+            config,
+            spark.read.option("basePath", routed_root).parquet(routed_root),
+            dict_dir)
+        return {"enrich_mode": enrich_mode, "n_archives": len(archives),
+                "rows": n}
+
+    stage("split_route", _split_route, rerun=True)
+    stage("snapshot",
+          lambda: _snapshot(config, stats, "routed_archives", dict_dir),
+          rerun=True)
     if catalog_dir or config.catalog_dir:
         for archive_id, arch_dir in archives:
             prefix = os.path.relpath(arch_dir, config.work_dir) + os.sep
             _register(spark, config, catalog_dir or config.catalog_dir,
                       [s for s in stats if s["file"].startswith(prefix)],
-                      archive_id, arch_dir, dict_path=dicts_dir)
+                      archive_id, arch_dir, dict_path=config.path(dict_dir))
     return {
         "archives": archives,
-        "n_archives": len(bounds),
-        "rows": n,
-        "dict_path": dicts_dir,
+        "n_archives": len(archives),
+        "rows": stage.metrics["split_route"]["rows"],
+        "dict_path": config.path(dict_dir),
         "total_sec": time.time() - t0,
     }

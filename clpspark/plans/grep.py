@@ -62,6 +62,7 @@ import threading
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from clpspark.operators import aggregate as agg
 from clpspark.ref import encoder as E
 from clpspark.ref.wildcard import (
     clean_up_wildcard_search_string,
@@ -890,20 +891,10 @@ class GrepEngine:
         return self.search(query, **kw).agg(F.count("*").alias("n_rows"))
 
     def count_by_time(self, query: str, bucket_ms: int, **kw) -> DataFrame:
-        matched = self.search(query, **kw)
-        bucket = (F.floor(F.col("ts") / bucket_ms) * bucket_ms).alias("bucket")
-        return (
-            matched.where(F.col("ts").isNotNull())
-            .groupBy(bucket)
-            .agg(F.count("*").alias("n_rows"))
-        )
+        return agg.count_by_time(self.search(query, **kw), bucket_ms)
 
     def topk_latest(self, query: str, k: int, **kw) -> DataFrame:
-        return (
-            self.search(query, **kw)
-            .orderBy(F.col("ts").desc(), F.col("doc_id"))
-            .limit(k)
-        )
+        return agg.topk_latest(self.search(query, **kw), k)
 
     def topk_latest_windowed(
         self, query: str, k: int, window_ms: int = 3_600_000, **kw
@@ -948,9 +939,7 @@ class GrepEngine:
             tge = hi - delta + 1
             out = self.search(query, tge=max(tge, lo), tle=hi, **kw)
             if tge <= lo or out.limit(k).count() >= k:
-                return (
-                    out.orderBy(F.col("ts").desc(), F.col("doc_id")).limit(k)
-                )
+                return agg.topk_latest(out, k)
             delta *= 4
 
     def _decode(self, df: DataFrame, out_col: str = "message") -> DataFrame:

@@ -392,30 +392,31 @@ class SnapshotStore:
         return m["tables"][name].get("stats", [])
 
 
-def snapshot_pipeline_tables(work_dir: str, routed_stats: list[dict]) -> int:
+def snapshot_pipeline_tables(work_dir: str, routed_stats: list[dict],
+                             routed_base: str = "routed",
+                             dict_dir: str = "") -> int:
     """Commit every pipeline output table of ``work_dir`` as ONE snapshot
     (the multi-table transactional commit the reference gets from its
     metadata DB). Routed gets the route stage's per-file skipping stats
     (collect_file_stats_and_var_index), whose file list also stands in for
     the routed directory listing; the other tables are listed on the
-    driver."""
+    driver. ``routed_base`` (the routed table's root) and ``dict_dir`` (the
+    directory of the dictionaries and the var index) are relative to
+    ``work_dir``: a split run's generation lives under routed_archives/
+    and shared_dicts/."""
     store = SnapshotStore(work_dir)
     tables: dict[str, dict] = {
         "routed": {
             "files": sorted(s["file"] for s in routed_stats),
-            "base": "routed",
+            "base": routed_base,
             "stats": routed_stats,
         },
     }
-    for name in (
-        "logtype_dict",
-        "var_dict",
-        "var_index",
-        "agg_sink_counts",
-        "agg_source_stats",
-        "agg_by_time",
-    ):
-        path = os.path.join(work_dir, name)
+    dict_tables = ("logtype_dict", "var_dict", "var_index")
+    for name in (*dict_tables, "agg_sink_counts", "agg_source_stats",
+                 "agg_by_time"):
+        base = os.path.join(dict_dir, name) if name in dict_tables else name
+        path = os.path.join(work_dir, base)
         if os.path.exists(path):
-            tables[name] = {"files": store.table_files(path), "base": name}
+            tables[name] = {"files": store.table_files(path), "base": base}
     return store.commit(tables)

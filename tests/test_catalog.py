@@ -206,3 +206,69 @@ def test_catalog_rows_fold_from_file_stats(spark, small_corpus, tmp_path,
     assert len(archive_dirs) >= 3
     assert not archive_dirs & set(read_paths)
     assert catalog_rows(split_cat) == {p: scan(p) for p in archive_dirs}
+
+
+def test_dataset_namespacing_never_crosses(spark, tmp_path):
+    """First-class datasets (clp-package search.py --dataset): two
+    datasets with the SAME tags; scoped searches see only their own
+    archives, unscoped searches see only unscoped archives."""
+    from clpspark.catalog import (
+        register_archive,
+        search_json_archives,
+        select_archives,
+    )
+    from clpspark.operators.json_encode import write_json_archive
+
+    root = str(tmp_path)
+    cat = f"{root}/cat"
+    for name, ds in (("p", "prod"), ("s", "staging"), ("u", None)):
+        df = spark.createDataFrame(
+            [(f"{name}-d0", f"event in {name}")], "doc_id string, msg string"
+        )
+        write_json_archive(df, f"{root}/arch_{name}")
+        register_archive(spark, cat, f"a_{name}", f"{root}/arch_{name}",
+                         begin_ts=0, end_ts=1000, n_rows=1,
+                         tags=["shared"], dataset=ds)
+
+    def ids(ds):
+        return {a for a, _p, _d in
+                select_archives(spark, cat, tags=["shared"], dataset=ds)}
+
+    assert ids("prod") == {"a_p"}
+    assert ids("staging") == {"a_s"}
+    assert ids(None) == {"a_u"}  # unscoped is its own namespace
+
+    got = search_json_archives(spark, cat, 'msg: "event*"', dataset="prod")
+    assert {r["archive_id"] for r in got.collect()} == {"a_p"}
+    got = search_json_archives(spark, cat, 'msg: "event*"')
+    assert {r["archive_id"] for r in got.collect()} == {"a_u"}
+
+
+def test_catalog_limit_keeps_newest_batch_rows(spark, tmp_path):
+    """search_json_archives(limit=) walks archives newest-first in batches
+    of 8; when the FINAL batch overshoots the limit, only that batch is
+    trimmed — every row from newer batches must survive (the old trailing
+    union.limit() could displace them arbitrarily)."""
+    from clpspark.catalog import register_archive, search_json_archives
+    from clpspark.operators.json_encode import write_json_archive
+
+    root = str(tmp_path)
+    cat = f"{root}/cat"
+    n_arch, docs_per = 10, 2
+    for i in range(n_arch):
+        rows = [(f"a{i}-d{j}", f"match {i} {j}") for j in range(docs_per)]
+        df = spark.createDataFrame(rows, "doc_id string, msg string")
+        write_json_archive(df, f"{root}/arch{i}")
+        register_archive(spark, cat, f"a{i:02d}", f"{root}/arch{i}",
+                         begin_ts=i * 1000, end_ts=i * 1000 + 999,
+                         n_rows=docs_per)
+
+    # batch 1 = newest 8 archives (a09..a02) -> 16 rows; limit=17 forces
+    # batch 2 (a01, a00 -> 4 rows) to trim to exactly 1
+    got = search_json_archives(spark, cat, 'msg: "match*"', limit=17)
+    rows = [(r["archive_id"], r["doc_id"]) for r in got.collect()]
+    assert len(rows) == 17
+    newest = {f"a{i:02d}" for i in range(2, 10)}
+    from_newest = [a for a, _ in rows if a in newest]
+    assert len(from_newest) == 16  # ALL newer-batch rows retained
+    assert sum(1 for a, _ in rows if a in ("a00", "a01")) == 1

@@ -1,9 +1,10 @@
-"""Fixed per-run Spark work of run_pipeline: the job budget of a small
-batch, the driver-side table listing behind the snapshot commit, resume from
-committed dictionary stats, work dirs whose paths need percent-encoding in
-Spark's file URIs, and who owns each job: every job of a run belongs to its
-stage's ``clpspark:<stage>`` group, stage times account for the run's wall,
-and ``run_jobs`` labels, groups and cancels its jobs."""
+"""Fixed per-run Spark work of run_pipeline and run_split_pipeline: the
+job budget of a small batch and of a split run, the driver-side table
+listing behind the snapshot commit, resume from committed dictionary stats,
+work dirs whose paths need percent-encoding in Spark's file URIs, and who
+owns each job: every job of a run belongs to its stage's
+``clpspark:<stage>`` group, stage times account for the run's wall, and
+``run_jobs`` labels, groups and cancels its jobs."""
 
 from __future__ import annotations
 
@@ -417,3 +418,73 @@ def test_fresh_run_stages_own_jobs_and_wall(spark, small_corpus, tmp_path,
         "map" if enrich_mode == "auto" else enrich_mode)
     assert not os.path.exists(cfg.path("_parsed_twopass"))
     assert os.path.exists(cfg.path("parsed")) == materialize
+
+
+SPLIT_STAGES = ("parse", "split_dicts", "split_route", "snapshot")
+
+
+def test_warm_split_run_job_budget(spark, small_corpus, tmp_path):
+    """A warm 20k-row split run into 4 archives launches at most 53 Spark
+    jobs: no parsed-table count, no enrich-gate collect beyond the map
+    build, no salting-total job per slice (the dictionary stats come from
+    lineage), and the two dictionary builds of the shared dicts stage."""
+    from clpspark.corpus import write_corpus
+    from clpspark.pipeline import run_split_pipeline
+
+    src = str(tmp_path / "corpus")
+    write_corpus(spark, src, n_rows=20_000, seed=7, partitions=1)
+    run_split_pipeline(spark, PipelineConfig(
+        input_path=small_corpus, work_dir=str(tmp_path / "warm")),
+        target_rows_per_archive=250)
+    sc = spark.sparkContext
+    before = _marker_job_id(sc, "split-jobs-before")
+    res = run_split_pipeline(spark, PipelineConfig(
+        input_path=src, work_dir=str(tmp_path / "w"), vocab_seed=7),
+        target_rows_per_archive=5_000)
+    after = _marker_job_id(sc, "split-jobs-after")
+    assert res["n_archives"] == 4
+    assert after - before - 1 <= 53
+
+
+@pytest.mark.parametrize("enrich_mode", ["auto", "join"])
+def test_split_run_stages_own_jobs_and_wall(spark, small_corpus, tmp_path,
+                                            monkeypatch, enrich_mode):
+    """run_split_pipeline on the stage runner: stage ``sec`` values sum to
+    at least 95% of ``total_sec``; every Spark job between two marker jobs
+    belongs to a ``clpspark:<stage>`` group and finishes inside its
+    stage's lineage bracket; the split route stage records the enrich path
+    it took (join forced by shrinking ``decode.AUTO_MAP_MAX_ENTRIES``)."""
+    import clpspark.operators.decode as D
+    from clpspark.pipeline import run_split_pipeline
+
+    if enrich_mode == "join":
+        monkeypatch.setattr(D, "AUTO_MAP_MAX_ENTRIES", 0)
+    sc = spark.sparkContext
+    cfg = PipelineConfig(input_path=small_corpus,
+                         work_dir=str(tmp_path / "w"))
+    before = _marker_job_id(sc, "split-stages-before")
+    res = run_split_pipeline(spark, cfg, target_rows_per_archive=300,
+                             resume=False)
+    after = _marker_job_id(sc, "split-stages-after")
+
+    entries = json.load(open(LineageLog(cfg.work_dir).path))["stages"]
+    assert sum(entries[s]["metrics"]["sec"] for s in SPLIT_STAGES) >= (
+        0.95 * res["total_sec"])
+    owned = {s: set(sc.statusTracker().getJobIdsForGroup(f"clpspark:{s}"))
+             for s in SPLIT_STAGES}
+    run = set(range(before + 1, after))
+    assert run <= set().union(*owned.values())
+    for s in SPLIT_STAGES:
+        if s == "snapshot":
+            continue  # the snapshot commit lists files on the driver
+        mine = owned[s] & run
+        assert mine, s
+        for j in mine:
+            info = _job(sc, j)
+            assert info.submissionTime().get().getTime() / 1000 >= (
+                entries[s]["started_at"] - 1e-3), s
+            assert info.completionTime().get().getTime() / 1000 <= (
+                entries[s]["committed_at"] + 1e-3), s
+    assert entries["split_route"]["metrics"]["enrich_mode"] == (
+        "map" if enrich_mode == "auto" else enrich_mode)
+    assert res["n_archives"] >= 3

@@ -460,3 +460,52 @@ def test_match_varstring_survives_archive_rewrite(spark, tmp_path):
     got2 = {r["doc_id"] for r in arch.match_varstring("tag", "t4").collect()}
     assert got2 == {f"d{i:03d}" for i in range(60) if i % 5 == 4}
     assert arch._vs_lid_memo[0] != memo1[0]  # memo re-keyed on rewrite
+
+
+def test_leaf_names_listing_error_surfaces(spark, tmp_path):
+    """Only FileNotFoundError means 'no string leaves'; a columns path
+    that exists but cannot be listed must raise, not silently return
+    zero results for every string-leaf query."""
+    import os
+
+    from clpspark.operators.json_encode import JsonArchive, write_json_archive
+
+    df = spark.createDataFrame(
+        [("d0", "hello world")], "doc_id string, msg string"
+    )
+    out = str(tmp_path / "arch")
+    write_json_archive(df, out)
+    arch = JsonArchive.open(spark, out)
+    assert "msg" in arch.leaf_names()
+
+    # replace the columns dir with a regular file: listdir now raises
+    # NotADirectoryError (an OSError that is NOT FileNotFoundError) —
+    # the old code swallowed it into an empty leaf set
+    import shutil
+
+    shutil.rmtree(os.path.join(out, "columns"))
+    with open(os.path.join(out, "columns"), "w") as f:
+        f.write("not a directory")
+    # fresh handle: JsonArchive.open memoizes per (path, version) and the
+    # records version did not change
+    arch2 = JsonArchive(spark, out)
+    with pytest.raises(NotADirectoryError):
+        arch2.leaf_names()
+
+
+def test_kql_projection_doc_id_not_duplicated(spark, tmp_path):
+    """project=['doc_id', ...] must not emit doc_id twice (it is always
+    the first output column)."""
+    from clpspark.operators.json_encode import JsonArchive, write_json_archive
+
+    df = spark.createDataFrame(
+        [("d0", "alpha beta", 1), ("d1", "gamma", 2)],
+        "doc_id string, msg string, n long",
+    )
+    out = str(tmp_path / "arch")
+    write_json_archive(df, out)
+    arch = JsonArchive.open(spark, out)
+    got = arch.kql('msg: "alpha*"', project=["doc_id", "msg", "n"])
+    assert got.columns == ["doc_id", "msg", "n"]
+    row = got.first()
+    assert (row["doc_id"], row["msg"], row["n"]) == ("d0", "alpha beta", 1)

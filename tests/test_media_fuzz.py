@@ -192,3 +192,23 @@ def test_rebalance_skips_shuffle_plans(spark):
     assert out is not one
     assert out.rdd.getNumPartitions() \
         == spark.sparkContext.defaultParallelism
+
+
+def test_pnm_truncated_header_raises():
+    """A malformed/truncated P5/P6 header must raise, not spin the
+    executor forever (the old tokenizer looped on b'' slices at EOF)."""
+    from clpspark.operators.multimodal import _decode_pnm
+
+    with pytest.raises(ValueError):
+        _decode_pnm(b"P5 6 4")  # EOF mid-token (maxval missing)
+    with pytest.raises(ValueError):
+        _decode_pnm(b"P5\n")  # EOF between tokens
+    with pytest.raises(ValueError):
+        _decode_pnm(b"P6 3")  # one token then EOF
+    # a comment ending at EOF (no newline) raises too, not hangs
+    with pytest.raises(ValueError):
+        _decode_pnm(b"P5 6 #trailing comment")
+    # sanity: a whole header still decodes
+    g = np.arange(24, dtype=np.uint8).reshape(4, 6)
+    ok = _decode_pnm(b"P5 6 4 255\n" + g.tobytes())
+    assert (ok == g).all()

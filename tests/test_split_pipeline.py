@@ -187,9 +187,8 @@ def test_split_by_encoded_size(spark, small_corpus, tmp_path_factory):
 
 
 def test_split_resume_false_reparses(spark, small_corpus, tmp_path_factory):
-    """resume=False must rebuild the parsed table and dictionaries even
-    when _SUCCESS markers exist (marker-only resume has no fingerprint
-    ledger — a changed input would otherwise be silently ignored)."""
+    """resume=False rebuilds the parsed table and dictionaries of a work
+    dir that already holds another input's."""
     from clpspark.corpus import write_corpus
     from clpspark.pipeline import PipelineConfig, run_split_pipeline
 
@@ -201,11 +200,70 @@ def test_split_resume_false_reparses(spark, small_corpus, tmp_path_factory):
 
     other = str(tmp_path_factory.mktemp("splitrs") / "seq2")
     write_corpus(spark, other, n_rows=500, seed=7, partitions=2)
-    # resume=True (default) would reuse the stale parsed table silently
     res2 = run_split_pipeline(
         spark, PipelineConfig(input_path=other, work_dir=work),
         target_rows_per_archive=600, resume=False)
     assert res2["rows"] == 500
+
+
+def test_split_default_resume_archives_new_input(spark, small_corpus,
+                                                tmp_path):
+    """Resume follows the lineage fingerprints: a second run into the same
+    work dir with another input and the default resume=True archives the
+    new input, with no archive of the first run left under the generation
+    root; a same-input rerun skips the parse and dictionary stages and
+    runs no parse job."""
+    import json
+    import os
+
+    from clpspark.catalog import search_archives
+    from clpspark.corpus import write_corpus
+    from clpspark.lineage import LineageLog
+    from clpspark.pipeline import PipelineConfig, run_split_pipeline
+    from clpspark.snapshots import SnapshotStore
+
+    work = str(tmp_path / "work")
+    res = run_split_pipeline(
+        spark, PipelineConfig(input_path=small_corpus, work_dir=work),
+        target_rows_per_archive=300)
+    assert res["rows"] == 1000 and res["n_archives"] >= 3
+
+    other = str(tmp_path / "seq2")
+    write_corpus(spark, other, n_rows=500, seed=7, partitions=2)
+    cfg = PipelineConfig(input_path=other, work_dir=work)
+    cat = str(tmp_path / "cat")
+    res2 = run_split_pipeline(spark, cfg, target_rows_per_archive=300,
+                              catalog_dir=cat)
+    assert res2["rows"] == 500
+    want = {r["doc_id"] for r in
+            spark.read.parquet(other).select("doc_id").collect()}
+
+    def searched() -> list[str]:
+        return [r["doc_id"] for r in
+                search_archives(spark, cat, "*").select("doc_id").collect()]
+
+    got = searched()
+    assert len(got) == 500 and set(got) == want
+    dirs = {os.path.basename(p) for _, p in res2["archives"]}
+    assert {d for d in os.listdir(os.path.join(work, "routed_archives"))
+            if d.startswith("archive=")} == dirs
+    assert {f.split(os.sep)[1] for f in SnapshotStore(work).manifest()[
+        "tables"]["routed"]["files"]} == dirs
+
+    log = LineageLog(work)
+    skipped = ("parse", "split_dicts")
+    committed = {s: json.load(open(log.path))["stages"][s]["committed_at"]
+                 for s in skipped}
+    tracker = spark.sparkContext.statusTracker()
+    parse_jobs = set(tracker.getJobIdsForGroup("clpspark:parse"))
+    res3 = run_split_pipeline(spark, cfg, target_rows_per_archive=300,
+                              catalog_dir=cat)
+    entries = json.load(open(log.path))["stages"]
+    assert {s: entries[s]["committed_at"] for s in skipped} == committed
+    assert {entries[s]["status"] for s in skipped} == {"done"}
+    assert not set(tracker.getJobIdsForGroup("clpspark:parse")) - parse_jobs
+    assert res3["archives"] == res2["archives"] and res3["rows"] == 500
+    assert sorted(searched()) == sorted(got)
 
 
 def test_split_pipeline_survives_timestamp_skew(spark, vocab_meta, tmp_path):
