@@ -17,6 +17,7 @@ for tests, with byte-identical results.
 
 from __future__ import annotations
 
+import functools
 import random
 from dataclasses import dataclass
 
@@ -98,6 +99,9 @@ class VocabMeta:
     n_ts: int
 
 
+# one build per seed: the pipeline's parse stage asks for it on every run,
+# and no caller mutates the (frozen) result or its lists
+@functools.lru_cache(maxsize=16)
 def build_vocab(seed: int = 42) -> VocabMeta:
     rng = random.Random(seed)
 

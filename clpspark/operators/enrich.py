@@ -1,16 +1,25 @@
 """Enrich stage: dictionary build + broadcast-join enrichment.
 
 CLP's dictionaries (clp/VariableDictionaryWriter.cpp,
-clp/LogTypeDictionaryEntry.cpp) dedup strings to dense u64 ids at ingest.
-Spark-first equivalents here:
+clp/LogTypeDictionaryEntry.cpp) dedup strings to dense u64 ids at ingest,
+in-process. Spark-first equivalents here:
 
-  - ``zip_with_index``: deterministic, collision-free dense id assignment
-    (distinct -> range-partition by value -> per-partition offsets), the
-    scalable zipWithIndex pattern — no global window, no per-partition
-    counters, parallelism-invariant ids.
+  - dictionary build: ``groupBy(value).count()`` is both the distinct and
+    the per-value stats. While the counted table passes
+    ``decode.driver_rows`` (the one residency gate) it is collected once
+    and ids are assigned on the driver: sorted values, id = rank (Python's
+    code-point order is Spark's UTF-8 binary order). The table becomes a
+    one-partition local frame and the id map goes to the caller, so the
+    enrich fill needs no second collect.
+  - ``zip_with_index``: the past-the-gate build — deterministic,
+    collision-free dense ids (range-partition by value -> per-partition
+    offsets), the scalable zipWithIndex pattern: no global window, no
+    per-partition counters, parallelism-invariant ids equal to the driver
+    build's.
   - ``enrich``: broadcast hash join of events against the logtype dictionary
     plus dict-var id fill. Two var-dict strategies, picked by
-    ``decode.driver_rows`` (the one residency gate):
+    ``decode.driver_rows`` (or given by a caller that already holds the
+    map):
       * map: the var dict is broadcast as a Python dict into an
         Arrow-batched UDF that fills the null slots of ``encoded_vars`` —
         right while the dict fits ``decode.map_fits`` (CLP bounds
@@ -21,9 +30,11 @@ Spark-first equivalents here:
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from clpspark.operators.decode import driver_rows
 
@@ -116,6 +127,39 @@ def _zip_with_index(df: DataFrame, value_col: str, id_col: str,
     return out, stats
 
 
+def _build_dict(counted: DataFrame, value_col: str, id_col: str,
+                count_col: str) -> tuple[DataFrame, dict, dict | None]:
+    """Dense ids for the values of ``counted`` (value, count): the
+    dictionary table, its stats (``entries``, ``value_bytes``: summed
+    characters, ``carried``: summed counts; null values excluded) and the
+    ``{value: id}`` map — None past the residency gate, where
+    ``_zip_with_index`` builds the table in Spark with the same ids."""
+    rows = driver_rows(counted, [value_col, count_col], value_col, "auto")
+    if rows is None:
+        df, stats = _zip_with_index(counted, value_col, id_col,
+                                    already_distinct=True,
+                                    count_col=count_col)
+        return df, stats, None
+    rows = sorted((r for r in rows if r[0] is not None),
+                  key=lambda r: r[0])
+    values = [r[0] for r in rows]
+    counts = pd.Series([r[1] for r in rows], dtype="int64")
+    stats = {"entries": len(values),
+             "value_bytes": sum(len(v) for v in values),
+             "carried": int(counts.sum())}
+    pdf = pd.DataFrame({value_col: pd.Series(values, dtype=object),
+                        id_col: np.arange(len(values), dtype=np.int64),
+                        count_col: counts})
+    # no column holds a null: declared so, parquet stores no definition
+    # levels for them
+    schema = StructType([StructField(value_col, StringType(), False),
+                         StructField(id_col, LongType(), False),
+                         StructField(count_col, LongType(), False)])
+    # one partition: the table is written as one parquet file
+    df = counted.sparkSession.createDataFrame(pdf, schema).coalesce(1)
+    return df, stats, dict(zip(values, range(len(values))))
+
+
 def build_logtype_dict(parsed: DataFrame) -> DataFrame:
     """logtype string -> dense logtype_id + occurrence count.
 
@@ -126,10 +170,10 @@ def build_logtype_dict(parsed: DataFrame) -> DataFrame:
     return _logtype_dict_and_stats(parsed)[0]
 
 
-def _logtype_dict_and_stats(parsed: DataFrame) -> tuple[DataFrame, dict]:
+def _logtype_dict_and_stats(parsed: DataFrame
+                            ) -> tuple[DataFrame, dict, dict | None]:
     counted = parsed.groupBy("logtype").agg(F.count("*").alias("n_rows"))
-    return _zip_with_index(counted, "logtype", "logtype_id",
-                           already_distinct=True, count_col="n_rows")
+    return _build_dict(counted, "logtype", "logtype_id", "n_rows")
 
 
 def build_var_dict(parsed: DataFrame) -> DataFrame:
@@ -137,14 +181,14 @@ def build_var_dict(parsed: DataFrame) -> DataFrame:
     return _var_dict_and_stats(parsed)[0]
 
 
-def _var_dict_and_stats(parsed: DataFrame) -> tuple[DataFrame, dict]:
+def _var_dict_and_stats(parsed: DataFrame
+                        ) -> tuple[DataFrame, dict, dict | None]:
     counted = (
         parsed.select(F.explode("dict_vars").alias("var_str"))
         .groupBy("var_str")
         .agg(F.count("*").alias("n_occurrences"))
     )
-    return _zip_with_index(counted, "var_str", "var_id",
-                           already_distinct=True, count_col="n_occurrences")
+    return _build_dict(counted, "var_str", "var_id", "n_occurrences")
 
 
 # JVM-side fill of dict slots from var_ids by position (codegen-friendly,
@@ -181,20 +225,26 @@ def enrich(
     logtype_dict: DataFrame,
     var_dict: DataFrame,
     mode: str = "auto",
+    var_map: dict | None = None,
 ) -> DataFrame:
     """Attach logtype_id (broadcast hash join) and fill dict-var ids.
 
-    ``mode`` goes to ``decode.driver_rows``: ``"auto"`` fills from a
-    broadcast python map while the var dictionary fits ``map_fits`` and
-    through the shuffle join beyond — a tens-of-GB var dictionary at
-    100 TB must never reach the driver — with one bounded collect that
-    both gates and builds the map; ``"map"`` and ``"join"`` force a path.
+    ``var_map`` ({var_str: var_id}, a var dictionary the caller already
+    holds on the driver, e.g. this run's dictionary build) fills from a
+    broadcast python map without asking Spark again. Otherwise ``mode``
+    goes to ``decode.driver_rows``: ``"auto"`` fills from the map while the
+    var dictionary fits ``map_fits`` and through the shuffle join beyond —
+    a tens-of-GB var dictionary at 100 TB must never reach the driver —
+    with one bounded collect that both gates and builds the map; ``"map"``
+    and ``"join"`` force a path.
     """
-    rows = driver_rows(var_dict, ["var_str", "var_id"], "var_str", mode)
-    if rows is None:
+    if var_map is None:
+        rows = driver_rows(var_dict, ["var_str", "var_id"], "var_str", mode)
+        var_map = None if rows is None else dict(rows)
+    if var_map is None:
         filled = _fill_var_ids_join(parsed, var_dict)
     else:
-        var_map_bc = parsed.sparkSession.sparkContext.broadcast(dict(rows))
+        var_map_bc = parsed.sparkSession.sparkContext.broadcast(var_map)
         filled = _fill_var_ids_map(parsed, var_map_bc)
     return filled.join(
         F.broadcast(logtype_dict.select("logtype", "logtype_id")), "logtype", "left"

@@ -5,10 +5,12 @@ archive-splitting variant.
 jobs and is committed to the lineage log; resume skips committed stages):
 
   1. parse      sequences -> parsed/ or _parsed_twopass/  (1 full parse pass)
-  2. dicts      parsed -> logtype_dict/, var_dict/   (column-pruned scans)
-  3. route      parsed + dicts -> routed/ (partitionBy logtype_id, salted)
+  2. dicts      parsed -> logtype_dict/, var_dict/   (column-pruned scans;
+                ids assigned on the driver while the gate admits them)
+  3. route      parsed + dicts -> routed/ (partitionBy logtype_id, salted),
+                then one scan of routed/ for its per-file stats
   4. aggregate  agg_sink_counts/ from route's audit; routed ->
-                agg_source_stats/, agg_by_time/
+                agg_source_stats/, agg_by_time/, var_index/
   5. snapshot   one manifest over every output table
 
 ``run_split_pipeline`` shares parse, the dictionary build and the snapshot
@@ -31,22 +33,28 @@ all downstream stages reuse); in two-pass mode it is a transient snappy
 spill, _parsed_twopass/, deleted with the route stage.
 
 Fixed per-run cost: a small batch's wall is mostly metadata jobs, so the
-stages reuse what the run already knows instead of asking Spark again —
-dictionary stats (entries, string bytes, row total) come from the
-dictionary build's own collect and are committed to lineage, where the
-enrich gate and route's salting read them; just-written tables are read
-back with a known schema (no inference job); routed/ is read once per run;
-the snapshot lists files on the driver.
+stages reuse what the run already knows instead of asking Spark again.
+The dictionary build collects each counted dictionary once, through
+``decode.driver_rows``, and assigns ids on the driver (CLP's in-process
+dictionary writer); its stats (entries, string bytes, row total) are
+committed to lineage, where the enrich gate and route's salting read them,
+and its var id map goes straight to this run's route stage, whose enrich
+fill then collects nothing. Just-written tables, routed/ included, are
+read back with their written schema (no inference job); routed/ is read
+once per run; the snapshot lists files on the driver.
 
 One source for routed metadata: the route stage's fused pass
-(snapshots.collect_file_stats_and_var_index) is the only code that derives
-metadata from routed/. Its per-file stats (rows, ts bounds, sink, doc_id
-checksum, bloom) are a declared route output, the _routed_file_stats.json
-sidecar keyed by the route fingerprint, so a resume that skips route
-always has them — a missing or stale sidecar reruns route. The per-sink
-audit rolls up from them and becomes agg_sink_counts; the snapshot manifest
-and the catalog row (ts range, row count) are folded from them on the
-driver. Only agg_source_stats and agg_by_time scan routed/ again.
+(snapshots.collect_file_stats_and_var_index, one scan and one aggregation)
+is the only code that derives metadata from routed/. Its per-file stats
+(rows, ts bounds, sink, doc_id checksum, bloom) are a declared route
+output, the _routed_file_stats.json sidecar keyed by the route
+fingerprint, so a resume that skips route always has them — a missing or
+stale sidecar reruns route. The per-sink audit rolls up from them and
+becomes agg_sink_counts; the snapshot manifest and the catalog row (ts
+range, row count) are folded from them on the driver. The aggregate stage
+writes the tables that must stay in Spark — var_index, agg_source_stats
+and agg_by_time, each one column-pruned scan of routed/ — and
+agg_sink_counts in one concurrent ``run_jobs`` step.
 """
 
 from __future__ import annotations
@@ -77,8 +85,17 @@ from clpspark.operators.enrich import (
     enrich,
 )
 from clpspark.operators.parse import PARSED_SCHEMA, parse_sequences
-from clpspark.operators.route import route
+from clpspark.operators.route import build_var_index, route
 from clpspark.operators.util import job_group, rebalance_for_udf, run_jobs
+
+# routed/'s columns as route() writes the enriched parse schema (dictionary
+# strings and var_ids dropped, unseen_logtype added), with the logtype_id
+# sink partition column last
+ROUTED_SCHEMA = (
+    "doc_id string, source string, n_tok int, ts bigint, ts_pattern int, "
+    "ts_pos int, encoded_vars array<bigint>, dict_slots array<int>, "
+    "unseen_logtype string, logtype_id bigint"
+)
 
 
 @dataclass
@@ -309,17 +326,20 @@ def _dicts_done(stage: _StageRunner, name: str, dict_dir: str) -> bool:
 
 
 def _dicts(spark: SparkSession, config: "PipelineConfig", parsed: DataFrame,
-           dict_dir: str) -> dict:
+           dict_dir: str, built: dict) -> dict:
     """The dicts stage: build both dictionaries of ``parsed`` into
-    ``dict_dir`` (relative to the work dir) and return their stats."""
+    ``dict_dir`` (relative to the work dir) and return their stats. When
+    the build held the var dictionary on the driver, its ``{var_str:
+    var_id}`` map goes to ``built["var_map"]`` for this run's route stage
+    (None past the residency gate)."""
     zw = _level_writer(config)
 
     def build(fn, table: str):
-        def job() -> dict:
-            df, stats = fn(parsed)
+        def job() -> tuple[dict, dict | None]:
+            df, stats, ids = fn(parsed)
             zw(df).mode("overwrite").parquet(
                 config.path(os.path.join(dict_dir, table)))
-            return stats
+            return stats, ids
         return job
 
     # each build scans its own single pruned column of the parse parquet
@@ -330,51 +350,58 @@ def _dicts(spark: SparkSession, config: "PipelineConfig", parsed: DataFrame,
         "logtype_dict": build(_logtype_dict_and_stats, "logtype_dict"),
         "var_dict": build(_var_dict_and_stats, "var_dict"),
     }, max_workers=2)
-    # the stats come from the builds' own id-offset collects: the route
-    # stage (this run or a resumed one) reads them from lineage instead of
-    # counting the dictionaries again
+    (lt, _), (vd, built["var_map"]) = out["logtype_dict"], out["var_dict"]
+    # the stats come from the builds' own collects: the route stage (this
+    # run or a resumed one) reads them from lineage instead of counting the
+    # dictionaries again
     return {
-        "n_logtypes": out["logtype_dict"]["entries"],
-        "n_rows": out["logtype_dict"]["carried"],
-        "n_vars": out["var_dict"]["entries"],
-        "var_bytes": out["var_dict"]["value_bytes"],
+        "n_logtypes": lt["entries"],
+        "n_rows": lt["carried"],
+        "n_vars": vd["entries"],
+        "var_bytes": vd["value_bytes"],
     }
 
 
 def _enriched(spark: SparkSession, config: "PipelineConfig",
-              parsed: DataFrame, dict_dir: str,
-              dict_stats: dict) -> tuple[DataFrame, DataFrame, str]:
+              parsed: DataFrame, dict_dir: str, dict_stats: dict,
+              var_map: dict | None) -> tuple[DataFrame, DataFrame, str]:
     """``parsed`` enriched against the dictionaries in ``dict_dir``, the
     logtype dictionary (route's salting counts) and the enrich path taken.
+    ``var_map`` is this run's dicts-stage map, if it built one: the fill
+    uses it as is. A resumed run reads the var dictionary back, and
     decode's map-vs-join gate reads the committed dictionary stats: no
     stats job."""
     if dict_stats["n_rows"] == 0:
         # a routed dir would hold only _SUCCESS, which no read can type
         raise _no_rows(config)
-    mode = ("map" if map_fits(dict_stats["n_vars"], dict_stats["var_bytes"])
+    mode = ("map" if var_map is not None
+            or map_fits(dict_stats["n_vars"], dict_stats["var_bytes"])
             else "join")
     logtype_dict = spark.read.schema(LOGTYPE_DICT_SCHEMA).parquet(
         config.path(os.path.join(dict_dir, "logtype_dict")))
     var_dict = spark.read.schema(VAR_DICT_SCHEMA).parquet(
         config.path(os.path.join(dict_dir, "var_dict")))
-    return (enrich(parsed, logtype_dict, var_dict, mode=mode), logtype_dict,
-            mode)
+    return (enrich(parsed, logtype_dict, var_dict, mode=mode,
+                   var_map=var_map), logtype_dict, mode)
 
 
-def _file_stats(config: "PipelineConfig", routed: DataFrame,
-                dict_dir: str) -> list[dict]:
-    """The fused post-route metadata pass (2 narrow scans): per-file
-    skipping stats + the var-id -> sink inverted index (Archive.cpp:487-526
-    analog), written to ``dict_dir``/var_index. The stats are the run's one
-    source of routed metadata — the per-sink audit, the snapshot's file
-    skipping and routed file list, the catalog rows."""
+def _read_routed(spark: SparkSession, path: str) -> DataFrame:
+    """A routed fan-out read back with its written schema: no inference
+    job, and ``logtype_id`` keeps its bigint type (an inferred partition
+    column reads back as int). Partition discovery over more than 32 sink
+    dirs still runs a distributed listing job."""
+    return (spark.read.option("basePath", path).schema(ROUTED_SCHEMA)
+            .parquet(path))
+
+
+def _file_stats(routed: DataFrame, root: str) -> list[dict]:
+    """The fused post-route pass (one scan): per-file skipping stats
+    (Archive.cpp:487-526 analog) — the run's one source of routed
+    metadata: the per-sink audit, the snapshot's file skipping and routed
+    file list, the catalog rows."""
     from clpspark.snapshots import collect_file_stats_and_var_index
 
-    stats, var_index = collect_file_stats_and_var_index(routed,
-                                                        config.work_dir)
-    _level_writer(config)(var_index).mode("overwrite").parquet(
-        config.path(os.path.join(dict_dir, "var_index")))
-    return stats
+    return collect_file_stats_and_var_index(routed, root)[0]
 
 
 def _snapshot(config: "PipelineConfig", routed_stats: list[dict],
@@ -422,24 +449,22 @@ def run_pipeline(
         shutil.rmtree(spill, ignore_errors=True)
         stage("parse", parse, rerun=need_dicts or need_route)
     parsed = functools.cache(lambda: _read_parsed(spark, config, durable))
-
-    @functools.cache
-    def _routed() -> DataFrame:
-        # ONE read of the fan-out per run, after the route stage wrote it:
-        # partition discovery over more than 32 sink dirs is a distributed
-        # listing job. Its readers: the route stage's fused stats pass, the
-        # two scanning aggregates and the text-input range index; every
-        # other metadata consumer reads the fused stats. No forced schema
-        # here — the logtype_id partition column reads back as int, the
-        # written column is bigint.
-        return spark.read.parquet(config.path("routed"))
+    # ONE read of the fan-out per run, after the route stage wrote it. Its
+    # readers: the route stage's fused stats pass, the aggregate stage's
+    # scans (var_index, agg_source_stats, agg_by_time) and the text-input
+    # range index; every other metadata consumer reads the fused stats.
+    routed = functools.cache(
+        lambda: _read_routed(spark, config.path("routed")))
+    # what this run's dicts stage built on the driver (the var id map):
+    # the route stage's enrich fill takes it as is
+    built: dict = {}
 
     # -- stage 3: enrich + route ---------------------------------------------
     def _route() -> dict:
         nonlocal routed_stats
         dict_stats = stage.log.metrics("dicts")
         enriched, logtype_dict, enrich_mode = _enriched(
-            spark, config, parsed(), "", dict_stats)
+            spark, config, parsed(), "", dict_stats, built.get("var_map"))
         route(
             enriched,
             config.path("routed"),
@@ -452,7 +477,7 @@ def run_pipeline(
         # fingerprinted sidecar
         from clpspark.snapshots import sink_audit_from_stats
 
-        routed_stats = _file_stats(config, _routed(), "")
+        routed_stats = _file_stats(routed(), config.work_dir)
         _write_stats_sidecar(config, routed_stats)
         if spill:  # every consumer of the spill is done
             shutil.rmtree(spill, ignore_errors=True)
@@ -466,7 +491,7 @@ def run_pipeline(
 
     try:
         # -- stage 2: dictionaries -------------------------------------------
-        stage("dicts", lambda: _dicts(spark, config, parsed(), ""),
+        stage("dicts", lambda: _dicts(spark, config, parsed(), "", built),
               rerun=need_dicts)
         stage("route", _route, "routed", "_routed_file_stats.json",
               rerun=need_route)
@@ -488,7 +513,7 @@ def run_pipeline(
                 extra["_archive_creator_id"] = config.archive_creator_id
             if config.input_format == "text":
                 # text ingest: doc_id = <file>#<idx>, contiguous per source
-                src = _routed().select("doc_id", "source")
+                src = routed().select("doc_id", "source")
                 group_col = "source"
             else:
                 # corpus parquet: doc_ids are contiguous per input part
@@ -528,8 +553,8 @@ def run_pipeline(
         # per-sink counts: the route stage's committed audit, written from
         # the driver with the types a routed/ groupBy gives (a pandas frame
         # crosses over Arrow; a list of tuples costs a Python worker job).
-        # The other two are column-pruned scans of the columnar
-        # fan-out — measured 5x CHEAPER than persisting one shared
+        # The var index and the other two are column-pruned scans of the
+        # columnar fan-out — measured 5x CHEAPER than persisting one shared
         # projection (the cache materialization costs more than
         # re-decoding 2 narrow zstd columns per aggregate; 13.6s vs 2.7s at
         # 48M rows / 16 cores). The writes are independent jobs: run them
@@ -539,7 +564,6 @@ def run_pipeline(
             pd.DataFrame(stage.metrics["route"]["sinks"],
                          columns=["logtype_id", "n_rows"]),
             "logtype_id int, n_rows bigint not null").coalesce(1)
-        routed = _routed()
 
         def write(name: str, df: DataFrame):
             return lambda: zw(df).mode("overwrite").parquet(config.path(name))
@@ -547,14 +571,15 @@ def run_pipeline(
         run_jobs(spark, {
             "agg_sink_counts": write("agg_sink_counts", sink_counts),
             "agg_source_stats": write("agg_source_stats",
-                                      agg.per_source_token_stats(routed)),
+                                      agg.per_source_token_stats(routed())),
             "agg_by_time": write("agg_by_time", agg.count_by_time(
-                routed, config.bucket_ms, group_cols=("source",))),
-        }, max_workers=3)
+                routed(), config.bucket_ms, group_cols=("source",))),
+            "var_index": write("var_index", build_var_index(routed())),
+        }, max_workers=4)
         return {}
 
     stage("aggregate", _aggregate, "agg_sink_counts", "agg_source_stats",
-          "agg_by_time")
+          "agg_by_time", "var_index")
 
     # -- stage 5: snapshot commit (atomic multi-table publish + file stats) ---
     # a re-run stage rewrote its files: the committed manifest would point
@@ -655,7 +680,9 @@ def run_split_pipeline(
     # stage is the only format-specific step
     stage("parse", functools.partial(_parse, spark, config, True), "parsed")
     parsed = _read_parsed(spark, config, durable=True)
-    stage("split_dicts", lambda: _dicts(spark, config, parsed, dict_dir),
+    built: dict = {}
+    stage("split_dicts",
+          lambda: _dicts(spark, config, parsed, dict_dir, built),
           rerun=not _dicts_done(stage, "split_dicts", dict_dir))
 
     archives: list[tuple[str, str]] = []
@@ -665,7 +692,8 @@ def run_split_pipeline(
         nonlocal stats
         dict_stats = stage.log.metrics("split_dicts")
         enriched, logtype_dict, enrich_mode = _enriched(
-            spark, config, parsed, dict_dir, dict_stats)
+            spark, config, parsed, dict_dir, dict_stats,
+            built.get("var_map"))
         n = dict_stats["n_rows"]
         rows_per_archive = target_rows_per_archive
         if rows_per_archive is None:
@@ -696,10 +724,13 @@ def run_split_pipeline(
         # (shared dictionary ids make per-archive indexes redundant for
         # logtype pruning); the same pass's per-file stats go into the
         # generation snapshot and fold per archive into its catalog row
-        stats = _file_stats(
-            config,
-            spark.read.option("basePath", routed_root).parquet(routed_root),
-            dict_dir)
+        routed = _read_routed(spark, routed_root)
+        stats = run_jobs(spark, {
+            "file stats": lambda: _file_stats(routed, config.work_dir),
+            "var_index": lambda: zw(build_var_index(routed)).mode(
+                "overwrite").parquet(
+                    config.path(os.path.join(dict_dir, "var_index"))),
+        }, max_workers=2)["file stats"]
         return {"enrich_mode": enrich_mode, "n_archives": len(archives),
                 "rows": n}
 

@@ -39,8 +39,9 @@ directly over parquet:
    engine's other pre-filters.
 
 One stats builder: :func:`collect_file_stats_and_var_index` computes items 2
-and 3 (plus each file's sink and doc_id checksum) in the route stage's
-fused pass; the snapshot commit takes its result as given and never scans.
+and 3 (plus each file's sink and doc_id checksum) in one scan of the route
+stage's output; the snapshot commit takes its result as given and never
+scans.
 Blooms are always ``BLOOM_BITS`` wide — there is no size knob — and each
 stats entry records its width, so older manifests still prune.
 
@@ -113,82 +114,52 @@ def list_table_files(path: str) -> list[str]:
 
 def collect_file_stats_and_var_index(routed: DataFrame, root: str):
     """Fused post-route metadata pass — the ONLY code that derives metadata
-    from a routed fan-out: per-file stats AND the (var_id, logtype_id)
-    inverted index from TWO narrow scans. Every other consumer (the route
-    audit, agg_sink_counts, the snapshot manifest, catalog registration)
-    reads the returned stats instead of scanning again:
+    from a routed fan-out. Every other consumer (the route audit,
+    agg_sink_counts, the snapshot manifest, catalog registration) reads
+    the returned stats instead of scanning again.
 
-      1. row grain, no explode: per-file counts / ts bounds / audit
-         checksum / owning sink (cheap: 2 narrow columns);
-      2. (file, dict-var) grain: explode → DISTINCT PAIRS first (the only
-         full-data shuffle, and it dedups map-side), then the tiny pair
-         table — #files x per-file vocabulary — yields both the bloom
-         position sets and the inverted index (sink recovered from the
-         partitionBy path, no join). localCheckpoint keeps the pair table
-         from recomputing across its two consumers.
+    ONE scan and one aggregation by file, over the events exploded to
+    their dict-var ids (an event without one keeps a single row): per-file
+    row count, ts bounds, owning sink and doc_id checksum count each event
+    once (its first exploded row), and the bloom positions are a
+    ``collect_set`` over the ids — at most ``BLOOM_BITS`` values per file,
+    whatever the file's rows. No (file, var_id) pair table is built, so
+    nothing is checkpointed.
 
-    Returns (stats, var_index_df) — var_index_df has build_var_index's
-    exact schema/content (pinned by pytest).
+    Returns (stats, var_index_df): the stats are collected; var_index_df
+    (``route.build_var_index``) is lazy, for the caller to write alongside
+    its other post-route tables.
     """
-    # the row-grain stats collect and the (file, var_id) pair distinct are
-    # independent jobs over different columns of the same fan-out: run them
-    # concurrently so each back-fills the other's straggler tail (guide §2.6)
-    from clpspark.operators.util import run_jobs
+    from clpspark.operators.route import build_var_index
 
-    def _rows():
-        return (
-            routed.select(
-                F.input_file_name().alias("file"), "ts", "logtype_id",
-                "doc_id"
-            )
-            .groupBy("file")
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.min("ts").alias("min_ts"),
-                F.max("ts").alias("max_ts"),
-                F.first("logtype_id").alias("logtype_id"),
-                F.expr("bit_xor(xxhash64(doc_id))").alias("checksum"),
-            )
-            .collect()
-        )
-
-    def _pairs():
-        return (
-            routed.select(
-                F.input_file_name().alias("file"),
-                F.explode(F.expr(_DICT_VAR_IDS)).alias("var_id"),
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-
-    out = run_jobs(routed.sparkSession,
-                   {"file stats": _rows, "file var pairs": _pairs},
-                   max_workers=2)
-    rows, pairs = out["file stats"], out["file var pairs"]
-    var_index = pairs.select(
-        F.regexp_extract("file", r"logtype_id=(-?[0-9]+)", 1)
-        .cast("bigint")
-        .alias("logtype_id"),
-        "var_id",
-    ).distinct().select("logtype_id", "var_id")
+    ev = routed.select(
+        F.input_file_name().alias("file"), "ts", "logtype_id", "doc_id",
+        F.posexplode_outer(F.expr(_DICT_VAR_IDS)).alias("pos", "var_id"),
+    )
+    first = F.coalesce(F.col("pos") == 0, F.lit(True))
+    # guard the nulls of var-less events: xxhash64(NULL, seed) is not NULL
     pos_cols = [
-        F.collect_set(
+        F.collect_set(F.when(
+            F.col("var_id").isNotNull(),
             F.pmod(F.xxhash64(F.col("var_id"), F.lit(seed)),
-                   F.lit(BLOOM_BITS))
-        ).alias(f"s{j}")
+                   F.lit(BLOOM_BITS)),
+        )).alias(f"s{j}")
         for j, seed in enumerate(BLOOM_SEEDS)
     ]
-    bloom_rows = pairs.groupBy("file").agg(*pos_cols).collect()
-    blooms: dict[str, bytes] = {}
-    for r in bloom_rows:
+    rows = ev.groupBy("file").agg(
+        F.count(F.when(first, 1)).alias("n_rows"),
+        F.min("ts").alias("min_ts"),
+        F.max("ts").alias("max_ts"),
+        F.first("logtype_id").alias("logtype_id"),
+        F.bit_xor(F.when(first, F.xxhash64("doc_id"))).alias("checksum"),
+        *pos_cols,
+    ).collect()
+    stats = []
+    for r in rows:
         bits = bytearray(BLOOM_BITS // 8)
         for j in range(len(BLOOM_SEEDS)):
             for p in r[f"s{j}"]:
                 bits[p // 8] |= 1 << (p % 8)
-        blooms[r["file"]] = bytes(bits)
-    stats = []
-    for r in rows:
         stats.append(
             {
                 "file": _rel(r["file"], root),
@@ -196,13 +167,13 @@ def collect_file_stats_and_var_index(routed: DataFrame, root: str):
                 "min_ts": r["min_ts"],
                 "max_ts": r["max_ts"],
                 "bloom_bits": BLOOM_BITS,
-                "bloom": blooms.get(r["file"], bytes(BLOOM_BITS // 8)).hex(),
+                "bloom": bytes(bits).hex(),
                 "logtype_id": r["logtype_id"],
                 "checksum": r["checksum"],
             }
         )
     stats.sort(key=lambda d: d["file"])
-    return stats, var_index
+    return stats, build_var_index(routed)
 
 
 def sink_audit_from_stats(stats: list[dict]) -> list[dict]:

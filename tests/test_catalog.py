@@ -272,3 +272,26 @@ def test_catalog_limit_keeps_newest_batch_rows(spark, tmp_path):
     from_newest = [a for a, _ in rows if a in newest]
     assert len(from_newest) == 16  # ALL newer-batch rows retained
     assert sum(1 for a, _ in rows if a in ("a00", "a01")) == 1
+
+
+def test_bounded_catalog_search_keeps_dateless_json_archive(spark, tmp_path):
+    """A JSON archive with zero DateString leaves that survives archive
+    pruning (null registered range) must keep its rows under a bounded
+    query instead of silently dropping all of them."""
+    from clpspark.catalog import register_archive, search_json_archives
+    from clpspark.operators.json_encode import write_json_archive
+
+    df = spark.createDataFrame(
+        [("d0", "alpha beta"), ("d1", "gamma delta")],
+        "doc_id string, msg string",
+    )
+    arch_dir = str(tmp_path / "arch")
+    write_json_archive(df, arch_dir)  # no ts_leaf -> no DateString leaves
+    cat = str(tmp_path / "cat")
+    register_archive(spark, cat, "a0", arch_dir, begin_ts=None, end_ts=None,
+                     n_rows=2)
+    out = search_json_archives(spark, cat, 'msg: "alpha*"',
+                               tge=0, tle=10_000_000)
+    assert out is not None
+    assert [r["doc_id"] for r in out.collect()] == ["d0"]
+

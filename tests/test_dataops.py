@@ -918,3 +918,19 @@ def test_simhash_batch_matches_scalar():
     got = _simhash_batch(split, {})
     for g, words in zip(got, split):
         assert int(g) == simhash_py(words)
+
+
+def test_encode_bpe_null_text_and_java_whitespace(spark):
+    from clpspark.operators.tokenizer import encode_bpe
+
+    df = spark.createDataFrame(
+        [(1, None), (2, "a\xa0b a\xa0b")],
+        "doc_id long, text string")
+    merges = [("a", "\xa0"), ("a\xa0", "b"), ("a\xa0b", "</w>")]
+    got = {r["doc_id"]: r["bpe_tokens"]
+           for r in encode_bpe(df, merges).collect()}
+    assert got[1] == []
+    # NBSP is NOT whitespace to the Java \s the trainer used: 'a\xa0b'
+    # stays ONE word and the trained merges apply across the NBSP
+    assert got[2] == ["a\xa0b</w>", "a\xa0b</w>"]
+

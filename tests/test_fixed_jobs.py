@@ -36,10 +36,12 @@ def _marker_job_id(sc, group: str) -> int:
 
 
 def test_small_two_pass_batch_job_budget(spark, small_corpus, tmp_path):
-    """A warm 20k-row two-pass batch launches at most 42 Spark jobs: no
-    schema inference over the spill or the dictionaries, no dictionary
-    counts, no enrich-gate or salting stats jobs, one read of routed/ and
-    no Spark reads behind the snapshot's file lists."""
+    """A warm 20k-row two-pass batch launches at most 25 Spark jobs: both
+    dictionaries built on the driver (a count and a collect each, one
+    write), no schema inference over the spill, the dictionaries or
+    routed/, no dictionary counts, no enrich-gate collect or salting stats
+    jobs, one read of routed/ and one scan of it for the per-file stats,
+    and no Spark reads behind the snapshot's file lists."""
     from clpspark.corpus import write_corpus
 
     src = str(tmp_path / "corpus")
@@ -53,7 +55,7 @@ def test_small_two_pass_batch_job_budget(spark, small_corpus, tmp_path):
         input_path=src, work_dir=str(tmp_path / "w"), vocab_seed=7,
         materialize_parsed=False), resume=False)
     after = _marker_job_id(sc, "fixed-jobs-after")
-    assert after - before - 1 <= 42
+    assert after - before - 1 <= 25
 
 
 @pytest.fixture(scope="module")
@@ -297,10 +299,30 @@ def test_dict_stats_match_tables(spark, spaced_work):
     assert (m["n_vars"], m["var_bytes"]) == (got[0], got[1])
 
 
-def test_enrich_auto_resolves_in_one_job(spark, small_corpus, vocab_meta):
+def test_routed_schema_matches_written(spark, spaced_work):
+    """routed/ read back with the declared ``ROUTED_SCHEMA`` has the
+    inferred read's columns in the same order and types, except the
+    logtype_id partition column, which keeps its written bigint type."""
+    from clpspark.pipeline import ROUTED_SCHEMA
+
+    path = os.path.join(spaced_work, "routed")
+    inferred = spark.read.parquet(path).schema
+    declared = spark.read.schema(ROUTED_SCHEMA).parquet(path).schema
+    assert [f.name for f in declared] == [f.name for f in inferred]
+    assert ([(f.name, f.dataType.simpleString()) for f in declared]
+            == [(f.name, "bigint" if f.name == "logtype_id"
+                 else f.dataType.simpleString()) for f in inferred])
+
+
+def test_enrich_auto_resolves_in_one_job(spark, small_corpus, vocab_meta,
+                                         tmp_path):
     """enrich(mode="auto") outside the pipeline gates and builds its
-    var-id map with one bounded collect, and matches forced map mode."""
+    var-id map with one bounded collect of dictionaries that live in Spark
+    (written and read back, as a resumed route stage reads them), and
+    matches forced map mode."""
     from clpspark.operators.enrich import (
+        LOGTYPE_DICT_SCHEMA,
+        VAR_DICT_SCHEMA,
         build_logtype_dict,
         build_var_dict,
         enrich,
@@ -309,7 +331,10 @@ def test_enrich_auto_resolves_in_one_job(spark, small_corpus, vocab_meta):
 
     parsed = parse_sequences(spark.read.parquet(small_corpus),
                              vocab_meta.vocab).localCheckpoint(eager=True)
-    lt, vd = build_logtype_dict(parsed), build_var_dict(parsed)
+    build_logtype_dict(parsed).write.parquet(str(tmp_path / "lt"))
+    build_var_dict(parsed).write.parquet(str(tmp_path / "vd"))
+    lt = spark.read.schema(LOGTYPE_DICT_SCHEMA).parquet(str(tmp_path / "lt"))
+    vd = spark.read.schema(VAR_DICT_SCHEMA).parquet(str(tmp_path / "vd"))
     sc = spark.sparkContext
     before = _marker_job_id(sc, "enrich-auto-before")
     auto = enrich(parsed, lt, vd, mode="auto")
@@ -424,10 +449,12 @@ SPLIT_STAGES = ("parse", "split_dicts", "split_route", "snapshot")
 
 
 def test_warm_split_run_job_budget(spark, small_corpus, tmp_path):
-    """A warm 20k-row split run into 4 archives launches at most 53 Spark
-    jobs: no parsed-table count, no enrich-gate collect beyond the map
-    build, no salting-total job per slice (the dictionary stats come from
-    lineage), and the two dictionary builds of the shared dicts stage."""
+    """A warm 20k-row split run into 4 archives launches at most 35 Spark
+    jobs: no parsed-table count, no enrich-gate collect (the dicts stage
+    hands its var map over), no salting-total job per slice (the dictionary
+    stats come from lineage), the two driver-side dictionary builds of the
+    shared dicts stage, and one scan of the generation for its per-file
+    stats."""
     from clpspark.corpus import write_corpus
     from clpspark.pipeline import run_split_pipeline
 
@@ -443,7 +470,7 @@ def test_warm_split_run_job_budget(spark, small_corpus, tmp_path):
         target_rows_per_archive=5_000)
     after = _marker_job_id(sc, "split-jobs-after")
     assert res["n_archives"] == 4
-    assert after - before - 1 <= 53
+    assert after - before - 1 <= 35
 
 
 @pytest.mark.parametrize("enrich_mode", ["auto", "join"])

@@ -4,6 +4,9 @@ dictionary-pre-filtered leaf grep."""
 
 from __future__ import annotations
 
+import glob
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -509,3 +512,106 @@ def test_kql_projection_doc_id_not_duplicated(spark, tmp_path):
     assert got.columns == ["doc_id", "msg", "n"]
     row = got.first()
     assert (row["doc_id"], row["msg"], row["n"]) == ("d0", "alpha beta", 1)
+
+
+def test_row_id_no_collision_hash_leaf_vs_array_elem(spark, tmp_path):
+    """A scalar leaf literally named 'x#3' must not collide with element 3
+    of a structurized array leaf 'x' for the same doc — a plain
+    doc_id#leaf#elem join key merged the two rows' variables."""
+    from clpspark.operators.json_encode import JsonArchive, write_json_archive
+
+    df = spark.createDataFrame(
+        [("d0", "scalar value zero", ["a0 a0", "a1 a1", "a2 a2", "a3 a3"])],
+        "doc_id string, `x#3` string, x array<string>",
+    )
+    out = str(tmp_path / "arch")
+    write_json_archive(df, out, structurize_arrays=True)
+    arch = JsonArchive.open(spark, out)
+    scalar = arch.decode_leaf("x#3").collect()
+    assert [(r["doc_id"], r["value"]) for r in scalar] == [
+        ("d0", "scalar value zero")
+    ]
+    arr = arch.decode_array_leaf("x").collect()
+    assert arr[0]["values"] == ["a0 a0", "a1 a1", "a2 a2", "a3 a3"]
+
+
+
+def test_reconstruct_user_fields_named_like_internals(spark, tmp_path):
+    """User JSON fields named '_decmap'/'_jid' must not collide with
+    reconstruct()'s working columns (ambiguous reference / corrupted
+    decode map)."""
+    from clpspark.operators.json_encode import JsonArchive, write_json_archive
+
+    rows = [
+        ("d0", 7, "seven jid", "decoded map value zero"),
+        ("d1", 8, "eight jid", "decoded map value one"),
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id string, `_jid` long, `_jidtxt` string, `_decmap` string"
+    )
+    out = str(tmp_path / "arch")
+    write_json_archive(df, out)
+    arch = JsonArchive.open(spark, out)
+    got = {r["doc_id"]: json.loads(r["json"])
+           for r in arch.reconstruct().collect()}
+    assert got["d0"] == {"_jid": 7, "_jidtxt": "seven jid",
+                         "_decmap": "decoded map value zero"}
+    assert got["d1"]["_decmap"] == "decoded map value one"
+
+
+
+def test_compress_json_user_log_event_idx_roundtrips(spark, tmp_path,
+                                                     monkeypatch):
+    """A user data field named log_event_idx is DATA: compress-json must
+    not crash on it, and extract-json must emit it back (the archive's
+    own order key shifts to a probed name)."""
+    from clpspark import cli
+
+    src = tmp_path / "in"
+    src.mkdir()
+    lines = [{"log_event_idx": 90 - i, "m": f"msg number {i}"}
+             for i in range(6)]
+    (src / "a.jsonl").write_text(
+        "\n".join(json.dumps(x) for x in lines) + "\n"
+    )
+    arch = str(tmp_path / "arch")
+    out = str(tmp_path / "out")
+    assert cli.main(["compress-json", str(src), arch]) == 0
+    assert cli.main(["extract-json", arch, out]) == 0
+    got = []
+    for f in sorted(glob.glob(f"{out}/part-*")):
+        with open(f) as fh:
+            got.extend(json.loads(ln) for ln in fh if ln.strip())
+    assert got == lines  # ingest order, user field intact
+
+
+
+def test_decode_leaf_all_typed_archive_empty(spark, tmp_path):
+    """An archive with zero string leaves must degrade to empty decode
+    results, not IndexError."""
+    from clpspark.operators.json_encode import JsonArchive, write_json_archive
+
+    df = spark.createDataFrame(
+        [("d0", 1, 2.5), ("d1", 2, 3.5)],
+        "doc_id string, a long, b double",
+    )
+    out = str(tmp_path / "arch")
+    write_json_archive(df, out)
+    arch = JsonArchive.open(spark, out)
+    assert arch.decode_leaf("anything").count() == 0
+    got = {r["doc_id"]: json.loads(r["json"])
+           for r in arch.reconstruct().collect()}
+    assert got["d0"] == {"a": 1, "b": 2.5}
+
+
+
+def test_write_json_archive_user_schema_id_raises(spark, tmp_path):
+    import pytest as _pytest
+
+    from clpspark.operators.json_encode import write_json_archive
+
+    df = spark.createDataFrame(
+        [("d0", 5, "x")], "doc_id string, schema_id long, m string")
+    with _pytest.raises(ValueError, match="reserved"):
+        write_json_archive(df, str(tmp_path / "a"))
+

@@ -380,3 +380,113 @@ def test_archive_handle_cache_and_rewrite(spark, tmp_path_factory):
     write_json_archive(df2, out)
     assert a1.leaf_names() == {"tag", "note"}
     assert a1.grep_leaf("tag", "s4").count() == 4
+
+
+def test_kql_first_class_projection(spark, tmp_path):
+    """JsonArchive.kql(project=[...]) — clp_s search/Projection.cpp parity:
+    encoded leaves decode for matching docs only, records paths stay typed,
+    DateString leaves project as reconstructed strings, unresolved columns
+    silently project nothing, wildcards/duplicates raise."""
+    import pytest
+
+    from clpspark.operators.json_encode import JsonArchive, write_json_archive
+
+    df = spark.createDataFrame(
+        [
+            ("d0", "2024-03-01 10:00:00", "job one done", "w1", 7,
+             ["x one", "y one"]),
+            ("d1", "2024-03-01 11:00:00", "job two failed", "w2", 9,
+             ["x two"]),
+            ("d2", "2024-03-01 12:00:00", "job three done", "w1", 11, None),
+        ],
+        "doc_id string, ts string, msg string, worker string, n long, "
+        "arr array<string>",
+    )
+    out = str(tmp_path / "arch")
+    write_json_archive(df, out, ts_leaf="ts")
+    arch = JsonArchive.open(spark, out)
+
+    got = arch.kql(
+        'msg: "job*"',
+        project=["msg", "worker", "n", "ts", "ts.epoch", "nope"],
+    )
+    assert got.columns == ["doc_id", "msg", "worker", "n", "ts", "ts.epoch"]
+    rows = {r["doc_id"]: r for r in got.collect()}
+    assert rows["d0"]["msg"] == "job one done"
+    assert rows["d1"]["worker"] == "w2"
+    assert rows["d2"]["n"] == 11
+    assert rows["d0"]["ts"] == "2024-03-01 10:00:00"  # reconstructed string
+    assert rows["d1"]["ts.epoch"] == 1709290800000
+    # serialized (UnstructuredArray) mode: array projects as its JSON text
+    arr = arch.kql('worker: w1', project=["arr"])
+    arrs = {r["doc_id"]: r["arr"] for r in arr.collect()}
+    assert arrs["d0"] == '["x one","y one"]'
+    assert arrs["d2"] is None  # null array never melted
+    with pytest.raises(ValueError):
+        arch.kql('msg: "job*"', project=["m*g"])
+    with pytest.raises(ValueError):
+        arch.kql('msg: "job*"', project=["msg", "msg"])
+
+
+
+def test_kql_projection_structurized_skips_arrays(spark, tmp_path):
+    """Structurized-array archives refuse to project array leaves
+    (Projection.cpp: resolution never travels into arrays) but scalar
+    leaves still project."""
+    from clpspark.operators.json_encode import JsonArchive, write_json_archive
+
+    df = spark.createDataFrame(
+        [("d0", "top level", ["a one", "b two"])],
+        "doc_id string, msg string, arr array<string>",
+    )
+    out = str(tmp_path / "arch")
+    write_json_archive(df, out, structurize_arrays=True)
+    arch = JsonArchive.open(spark, out)
+    got = arch.kql('msg: "top*"', project=["msg", "arr"])
+    assert got.columns == ["doc_id", "msg"]
+    assert got.first()["msg"] == "top level"
+
+
+
+def test_kql_projection_array_element_leaf_no_fanout(spark, tmp_path):
+    """Projecting an element-level structurized leaf ('arr.d.e') must
+    silently project nothing — not fan out one row per element (review
+    finding r5)."""
+    from clpspark.operators.json_encode import JsonArchive, write_json_archive
+
+    df = spark.createDataFrame(
+        [("d0", "top one", [{"d": {"e": "x one"}}, {"d": {"e": "y two"}}])],
+        "doc_id string, msg string, arr array<struct<d:struct<e:string>>>",
+    )
+    out = str(tmp_path / "arch")
+    write_json_archive(df, out, structurize_arrays=True)
+    arch = JsonArchive.open(spark, out)
+    got = arch.kql('msg: "top*"', project=["msg", "arr.d.e"])
+    assert got.columns == ["doc_id", "msg"]
+    assert got.count() == 1  # no per-element fan-out
+
+
+
+def test_kql_projection_past_inline_cap(spark, tmp_path):
+    """A projected KQL match set larger than the inline-isin gate must
+    stay distributed (semi-join path) and still decode every leaf value —
+    and the search must not re-execute per consumer."""
+    from clpspark.operators import json_encode as JE
+
+    n = 60
+    df = spark.createDataFrame(
+        [(f"d{i:04d}", f"payload value {i}", i) for i in range(n)],
+        "doc_id string, msg string, k long",
+    )
+    out = str(tmp_path / "arch")
+    JE.write_json_archive(df, out)
+    arch = JE.JsonArchive.open(spark, out)
+    import unittest.mock as mock
+
+    with mock.patch.object(JE, "_PROJECT_INLINE_IDS_MAX", 10):
+        got = {r["doc_id"]: (r["msg"], r["k"])
+               for r in arch.kql('msg: "payload*"',
+                                 project=["msg", "k"]).collect()}
+    assert len(got) == n
+    assert got["d0007"] == ("payload value 7", 7)
+

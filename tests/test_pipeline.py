@@ -4,6 +4,7 @@ enrich-mode parity, decode round-trip after enrichment, idempotent resume."""
 from __future__ import annotations
 
 import collections
+import glob
 import json
 import os
 import re
@@ -222,6 +223,65 @@ def test_zip_with_index_dense_and_deterministic(spark):
     assert out1[min(vals)] == 0 and out1[max(vals)] == 56  # sorted order
 
 
+def test_dict_build_orders_like_spark(spark, monkeypatch):
+    """The driver build's ids (sorted in Python) equal the past-the-gate
+    ``_zip_with_index`` ids (sorted by Spark) on values that mix the
+    placeholder bytes, accented, CJK and astral characters, the empty
+    string and prefix pairs; the stats agree and a null value gets no id."""
+    import clpspark.operators.decode as D
+    from clpspark.operators.enrich import _build_dict
+
+    vals = ["a\x11b", "a\x12b", "a\x13b", "\x11", "\x12x", "\x13",
+            "é", "e", "ée", "é\x11", "中", "中文", "日本", "\U0001F600",
+            "\U0001F600\U0001F600", "\uffff", "z", "", "ab", "abc", "a",
+            "A", "task_1", "task_10", "task_2", None]
+    counted = spark.createDataFrame(
+        [(v, i + 1) for i, v in enumerate(vals)],
+        "var_str string, n_occurrences bigint")
+
+    def build():
+        df, stats, ids = _build_dict(counted, "var_str", "var_id",
+                                     "n_occurrences")
+        return sorted(map(tuple, df.collect())), stats, ids
+
+    rows, stats, ids = build()
+    assert ids == {r[0]: r[1] for r in rows}
+    assert [r[0] for r in rows] == sorted(v for v in vals if v is not None)
+    monkeypatch.setattr(D, "AUTO_MAP_MAX_ENTRIES", 0)
+    zrows, zstats, zids = build()
+    assert zids is None
+    assert zrows == rows and zstats == stats
+    assert stats == {"entries": len(vals) - 1,
+                     "value_bytes": sum(len(v) for v in vals if v),
+                     "carried": sum(range(1, len(vals)))}
+
+
+def test_dicts_stage_fallback_equals_driver_build(spark, small_corpus,
+                                                  tmp_path, monkeypatch):
+    """Past the residency gate (``decode.AUTO_MAP_MAX_ENTRIES`` forced to
+    0) the dicts stage builds through ``_zip_with_index``: it writes
+    row-equal dictionary tables and commits the same stats as the driver
+    build."""
+    import clpspark.operators.decode as D
+    from clpspark.lineage import LineageLog
+
+    def dicts(name: str):
+        cfg = PipelineConfig(input_path=small_corpus,
+                             work_dir=str(tmp_path / name),
+                             materialize_parsed=False)
+        run_pipeline(spark, cfg, resume=False)
+        m = LineageLog(cfg.work_dir).metrics("dicts")
+        m.pop("sec")
+        return m, {t: sorted(map(tuple, spark.read.parquet(
+            cfg.path(t)).collect())) for t in ("logtype_dict", "var_dict")}
+
+    driver = dicts("driver")
+    monkeypatch.setattr(D, "AUTO_MAP_MAX_ENTRIES", 0)
+    fallback = dicts("fallback")
+    assert fallback == driver
+    assert driver[0]["n_rows"] == 1000 and driver[1]["var_dict"]
+
+
 def test_resume_is_idempotent(spark, pipeline_result):
     cfg, first = pipeline_result
     lineage = json.load(open(os.path.join(cfg.work_dir, "_lineage.json")))
@@ -419,3 +479,31 @@ def test_route_quarantines_unseen_logtype(spark, tmp_path):
     }
     assert decoded["d1"] == "known 7 line"
     assert decoded["d2"] == "UNSEEN alpha line"
+
+
+def test_zstd_level_is_per_write_not_session_global(spark, vocab_meta,
+                                                    tmp_path):
+    """Two pipelines with different compression levels sharing one session:
+    each archive write must carry its own level (and a write AFTER a
+    high-level run must not inherit it)."""
+    from clpspark.corpus import write_corpus
+    from clpspark.pipeline import PipelineConfig, run_pipeline
+
+    inp = str(tmp_path / "seq")
+    write_corpus(spark, inp, n_rows=4000, seed=7, partitions=2)
+
+    sizes = {}
+    for lvl in (1, 19):
+        work = str(tmp_path / f"work{lvl}")
+        run_pipeline(spark, PipelineConfig(
+            input_path=inp, work_dir=work, compression_level=lvl,
+        ))
+        sizes[lvl] = sum(
+            os.path.getsize(f)
+            for f in glob.glob(f"{work}/routed/**/*.parquet", recursive=True)
+        )
+    assert sizes[19] < sizes[1]
+    # the shared session's hadoop conf must NOT have been mutated
+    jconf = spark.sparkContext._jsc.hadoopConfiguration()
+    assert jconf.get("parquet.compression.codec.zstd.level") is None
+

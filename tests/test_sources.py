@@ -258,3 +258,72 @@ def test_text_reconstruction_roundtrip(spark, vocab_meta, small_corpus):
                                   mode="join").collect()
     }
     assert lines_join == originals
+
+
+def test_read_ndjson_ordered_skips_blank_lines(spark, tmp_path):
+    """Blank/whitespace lines are skipped by the json DataSource read;
+    the ordered reader must agree on indices and row counts."""
+    from clpspark.sources.json_logs import read_ndjson, read_ndjson_ordered
+
+    p = tmp_path / "logs.ndjson"
+    p.write_text(
+        '{"a": 1}\n\n   \n{"a": 2}\n\t\n{"a": 3}\n'
+    )
+    plain = read_ndjson(spark, str(p))
+    ordered = read_ndjson_ordered(spark, str(p))
+    assert plain.count() == 3
+    rows = ordered.orderBy("log_event_idx").select("a", "log_event_idx").collect()
+    assert [(r["a"], r["log_event_idx"]) for r in rows] == [
+        (1, 0), (2, 1), (3, 2)
+    ]
+
+
+
+def test_with_schema_id_reserved_name_raises(spark):
+    import pytest as _pytest
+
+    from clpspark.sources.json_logs import with_schema_id
+
+    df = spark.createDataFrame([(1, 2)], "a long, schema_id long")
+    with _pytest.raises(ValueError, match="reserved"):
+        with_schema_id(df)
+
+
+
+def test_reconstruct_json_ordered_user_metadata_names(spark, tmp_path):
+    """Ordered reconstruction must drop/order by the reader's TAGGED
+    metadata columns, not a user data field that shares their name."""
+    from clpspark.sources.json_logs import (
+        read_ndjson_ordered,
+        reconstruct_json_ordered,
+    )
+
+    lines = [{"log_event_idx": 50 - i, "m": f"row {i}"} for i in range(4)]
+    p = tmp_path / "in.jsonl"
+    p.write_text("\n".join(json.dumps(x) for x in lines) + "\n")
+    df = read_ndjson_ordered(spark, str(p))
+    rec = reconstruct_json_ordered(df).collect()
+    got = [json.loads(r["json"]) for r in rec]
+    assert got == lines  # ingest order, user field kept, no metadata leak
+
+
+
+def test_reserved_name_guards_case_insensitive(spark, tmp_path):
+    """Spark resolves columns case-insensitively: SCHEMA_ID must trip the
+    reserved-name guard and SOURCE_FILE must push the reader's metadata
+    column off 'source_file'."""
+    import pytest as _pytest
+
+    from clpspark.sources.json_logs import (
+        ordered_meta_names,
+        with_schema_id,
+    )
+
+    df = spark.createDataFrame([(1,)], "`SCHEMA_ID` long")
+    with _pytest.raises(ValueError, match="reserved"):
+        with_schema_id(df)
+
+    names = ordered_meta_names(
+        spark.createDataFrame([("a",)], "`SOURCE_FILE` string").schema)
+    assert names["source_file"] == "_source_file"
+
