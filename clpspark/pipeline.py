@@ -722,8 +722,9 @@ def run_split_pipeline(
                 f"{config.fp('route')[:8]}-{i:04d}", arch_dir))
         # one (var_id, logtype_id) index covers the whole generation
         # (shared dictionary ids make per-archive indexes redundant for
-        # logtype pruning); the same pass's per-file stats go into the
-        # generation snapshot and fold per archive into its catalog row
+        # logtype pruning), written while the per-file stats are collected;
+        # the stats go into the generation snapshot and fold per archive
+        # into its catalog row
         routed = _read_routed(spark, routed_root)
         stats = run_jobs(spark, {
             "file stats": lambda: _file_stats(routed, config.work_dir),
