@@ -37,11 +37,11 @@ def route(
     salt: int | None = None,
     num_partitions: int | None = None,
     sink_col: str = SINK_COL,
-    mode: str = "overwrite",
     sink_counts: DataFrame | None = None,
     rows_per_task: int | None = None,
     write_options: dict[str, str] | None = None,
     total_rows: int | None = None,
+    lead_col: str | None = None,
 ) -> None:
     """Fan-out write. ``salt`` is the max salt; when ``sink_counts`` (a small
     (sink, n_rows) table, e.g. the logtype dictionary) is given, the salt is
@@ -49,7 +49,8 @@ def route(
     so only heavy-hitter sinks spread across tasks and rare sinks stay in one
     output file each (no small-file explosion). ``total_rows`` (the summed
     ``n_rows`` of ``sink_counts``, when the caller already holds it) spares
-    the aggregation job that derives ``rows_per_task``."""
+    the aggregation job that derives ``rows_per_task``. ``lead_col`` (a split
+    run's ``archive``) is a partition level above the sinks."""
     spark = enriched.sparkSession
     # per-row salt source: a stable id column when present, else a
     # partition-local counter (only spreads rows — never affects content)
@@ -104,20 +105,20 @@ def route(
     for redundant in ("dict_vars", "logtype", "var_ids"):
         if redundant in df.columns:
             df = df.drop(redundant)
-    salted = df.repartition(num_partitions, F.col(sink_col), F.col("_salt")).drop(
-        "_salt"
-    )
+    parts = [c for c in (lead_col, sink_col) if c]
+    salted = df.repartition(
+        num_partitions, *map(F.col, parts), F.col("_salt")).drop("_salt")
     # time-ordered within each task (CLP archives are time-ordered): zstd
     # compresses adjacent-timestamp rows far better, and parquet row-group
     # min/max stats on ts make tge/tle search predicates prune at the
-    # row-group level, not just the partition level
-    order_cols = [sink_col] + [c for c in ("ts", "doc_id")
-                               if c in salted.columns]
+    # row-group level, not just the partition level. Leading with every
+    # partition column keeps Spark from re-sorting the write (losing ts order)
+    order_cols = parts + [c for c in ("ts", "doc_id") if c in salted.columns]
     salted = salted.sortWithinPartitions(*order_cols)
     # per-write options (e.g. the zstd codec level) — passed on the writer,
     # never via session-global hadoop conf, so concurrent pipelines sharing
     # one SparkSession can't leak their codec settings into each other
-    w = salted.write.mode(mode).partitionBy(sink_col)
+    w = salted.write.mode("overwrite").partitionBy(*parts)
     for k, v in (write_options or {}).items():
         w = w.option(k, v)
     w.parquet(out_dir)

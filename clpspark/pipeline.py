@@ -15,7 +15,8 @@ jobs and is committed to the lineage log; resume skips committed stages):
 
 ``run_split_pipeline`` shares parse, the dictionary build and the snapshot
 commit, writing the dictionaries to shared_dicts/ (``split_dicts``); its
-``split_route`` stage routes time slices into routed_archives/archive=<i>/.
+``split_route`` stage routes every time slice in one write into
+routed_archives/, partitioned by archive=<i>/logtype_id=<j>.
 
 Both drivers run every stage through one runner, ``_StageRunner``, under
 one resume rule: a stage is skipped on resume when its lineage entry is
@@ -598,32 +599,21 @@ def run_pipeline(
     return metrics
 
 
-def _time_slices(parsed: DataFrame,
-                 k: int) -> list[tuple[int | None, int | None]]:
-    """(lo, hi] ts bounds of ``k`` near-equal, time-contiguous slices (CLP
-    archives are ordered time ranges), cut at row-count quantiles."""
-    cuts: list[int] = []
-    if k > 1:
-        # the 1.0 quantile rides along for free (the GK sketch retains the
-        # exact max) — no second scan of parsed just for max(ts)
-        raw = parsed.where(F.col("ts").isNotNull()).approxQuantile(
-            "ts", [i / k for i in range(1, k)] + [1.0], 0.001)
-        # under timestamp skew (>= 1/k of rows sharing the max ts) a cut can
-        # equal the global max, leaving the final (ts_max, None] slice empty
-        # — route() would then write a data-less archive. Drop any cut
-        # at/above the max; the previous slice's half-open upper bound
-        # absorbs those rows.
-        cuts = sorted({int(c) for c in raw[:-1] if int(c) < int(raw[-1])})
-    return list(zip([None, *cuts], [*cuts, None]))
-
-
-def _in_slice(lo: int | None, hi: int | None):
-    """Rows of the (lo, hi] slice; the first slice absorbs rows without a
-    timestamp (a null ts fails ``ts > lo``), so every row lands in exactly
-    one archive."""
-    ts = F.col("ts")
-    upper = F.lit(True) if hi is None else ts <= hi
-    return ts.isNull() | upper if lo is None else (ts > lo) & upper
+def _time_slices(parsed: DataFrame, k: int) -> list[int]:
+    """Ascending ts cuts of ``k`` near-equal, time-contiguous slices (CLP
+    archives are ordered time ranges), at row-count quantiles: slice i is
+    (cuts[i-1], cuts[i]], open-ended at both ends."""
+    if k <= 1:
+        return []
+    # the 1.0 quantile rides along for free (the GK sketch retains the exact
+    # max) — no second scan of parsed just for max(ts)
+    raw = parsed.where(F.col("ts").isNotNull()).approxQuantile(
+        "ts", [i / k for i in range(1, k)] + [1.0], 0.001)
+    # under timestamp skew (>= 1/k of rows sharing the max ts) a cut can
+    # equal the global max, leaving the final (ts_max, None] slice empty — a
+    # data-less archive. Drop any cut at/above the max; the previous slice's
+    # half-open upper bound absorbs those rows.
+    return sorted({int(c) for c in raw[:-1] if int(c) < int(raw[-1])})
 
 
 def run_split_pipeline(
@@ -645,8 +635,9 @@ def run_split_pipeline(
     target (clp/streaming_archive/writer/Archive.cpp:343-353,
     clp_s/JsonParser.cpp:618-623). Spark analog: parse once, build ONE
     dictionary generation over the whole input (shared_dicts/), cut the time
-    axis at row-count quantiles, and route each time slice into its own
-    archive directory. Every archive registers in the catalog with
+    axis at row-count quantiles, and route the run in one write whose
+    leading partition column is the archive (the time slice of each row).
+    Every archive registers in the catalog with
     ``dict_path`` = the shared generation, so search_archives scans the
     whole run as ONE plan (ids are interchangeable within a generation).
 
@@ -655,7 +646,7 @@ def run_split_pipeline(
     shared_dicts/) are skipped when their lineage entries are done under
     this config's fingerprint and their outputs exist, so a changed input
     or config re-parses. ``split_route`` (enrich, the time cuts, one route
-    per slice into routed_archives/, the fused stats pass) and the
+    of every slice into routed_archives/, the fused stats pass) and the
     generation ``snapshot`` run on every call.
 
     Returns {"archives": [(archive_id, path)...], "n_archives": k, ...}.
@@ -703,23 +694,30 @@ def run_split_pipeline(
             )
             rows_per_archive = max(
                 1, int(target_encoded_bytes / max(on_disk / n, 1e-9)))
-        # a run with fewer slices than the last must not leave its
-        # archives behind under the generation's root
-        shutil.rmtree(routed_root, ignore_errors=True)
-        for i, (lo, hi) in enumerate(
-                _time_slices(parsed, -(-n // rows_per_archive))):
-            arch_dir = f"{routed_root}/archive={i:04d}"
-            route(
-                enriched.where(_in_slice(lo, hi)),
-                arch_dir,
-                salt=config.route_salt,
-                sink_counts=logtype_dict.select("logtype_id", "n_rows"),
-                write_options=zw.options,
-                total_rows=n,
-            )
-            archives.append((
-                f"{os.path.basename(config.work_dir)}-"
-                f"{config.fp('route')[:8]}-{i:04d}", arch_dir))
+        cuts = _time_slices(parsed, -(-n // rows_per_archive))
+        # the slice of each row as one CASE; a null ts goes to the first
+        # archive, so every row lands in exactly one
+        ts = F.col("ts")
+        archive = F.when(ts.isNull(), "0000")
+        for i, cut in enumerate(cuts):
+            archive = archive.when(ts <= cut, f"{i:04d}")
+        # one routed write of every archive (CLP cuts its archives while it
+        # writes); overwriting the root drops a previous run's archives
+        route(
+            enriched.withColumn("archive", archive.otherwise(
+                f"{len(cuts):04d}")),
+            routed_root,
+            salt=config.route_salt,
+            sink_counts=logtype_dict.select("logtype_id", "n_rows"),
+            write_options=zw.options,
+            total_rows=n,
+            lead_col="archive",
+        )
+        archives.extend(
+            (f"{os.path.basename(config.work_dir)}-"
+             f"{config.fp('route')[:8]}-{i:04d}",
+             f"{routed_root}/archive={i:04d}")
+            for i in range(len(cuts) + 1))
         # one (var_id, logtype_id) index covers the whole generation
         # (shared dictionary ids make per-archive indexes redundant for
         # logtype pruning), written while the per-file stats are collected;

@@ -80,7 +80,7 @@ def stream_route(parsed: DataFrame, out_dir: str, checkpoint_dir: str,
         # auto: broadcast-map fill while the (fixed, pre-built) dictionary is
         # collectable, shuffle join beyond — same rule as batch enrich
         enriched = enrich(batch_df, logtype_dict, var_dict, mode="auto")
-        route(enriched, f"{out_dir}/batch={batch_id}", salt=salt, mode="overwrite")
+        route(enriched, f"{out_dir}/batch={batch_id}", salt=salt)
         # incremental (var_id, logtype_id) inverted index: merge THIS batch's
         # pairs into the stream's index so all-dict-var queries partition-
         # prune streamed archives too. distinct-union merge is idempotent —

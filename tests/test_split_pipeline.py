@@ -45,6 +45,47 @@ def test_split_produces_multiple_disjoint_archives(spark, split_run):
         assert e1 <= b2
 
 
+def test_split_layout_follows_catalog_cuts(spark, split_run):
+    """The routed write lays each archive out at its time cuts: every row
+    without a ts lands in archive=0000, every routed file is ts-ordered,
+    and each archive=<i>/logtype_id=<j> dir holds exactly the rows of
+    logtype j whose ts falls in archive i's (lo, hi] range, the cuts
+    recovered from the catalog rows' begin_ts/end_ts."""
+    import bisect
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    res, work, catalog = split_run
+    ids = [aid for aid, _ in res["archives"]]
+    cat = {r["archive_id"]: r for r in spark.read.parquet(
+        f"{catalog}/archives").where(F.col("archive_id").isin(ids)).collect()}
+    # archive i's range is (end_ts[i-1], end_ts[i]]: no row of a later
+    # archive reaches back into it
+    ends = [cat[aid]["end_ts"] for aid in ids]
+    assert all(cat[aid]["begin_ts"] > e for aid, e in zip(ids[1:], ends))
+    parsed = spark.read.parquet(f"{work}/parsed").join(
+        spark.read.parquet(f"{res['dict_path']}/logtype_dict"), "logtype")
+    want = {
+        (0 if r["ts"] is None else bisect.bisect_left(ends[:-1], r["ts"]),
+         r["logtype_id"], r["doc_id"])
+        for r in parsed.select("doc_id", "ts", "logtype_id").collect()
+    }
+    got = set()
+    for f in glob.glob(os.path.join(work, "routed_archives", "archive=*",
+                                    "logtype_id=*", "*.parquet")):
+        arch, sink = (int(d.split("=")[1]) for d in f.split(os.sep)[-3:-1])
+        t = pq.read_table(f, columns=["doc_id", "ts"]).to_pydict()
+        ts = [x for x in t["ts"] if x is not None]
+        assert ts == sorted(ts), f
+        got |= {(arch, sink, d) for d in t["doc_id"]}
+    assert got == want and len(got) == 1000
+    no_ts = {r["doc_id"] for r in parsed.where(F.col("ts").isNull())
+             .select("doc_id").collect()}
+    assert no_ts and {a for a, _, d in got if d in no_ts} == {0}
+
+
 def test_grouped_search_matches_per_archive_union(spark, split_run):
     from clpspark.catalog import search_archives
     from clpspark.plans.grep import GrepEngine
